@@ -16,6 +16,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from inputlayer_spark.compiler import sql_of_const
 from inputlayer_spark.engine import IQLEngine
 from inputlayer_spark.functions import text as TX
 from inputlayer_spark.functions import temporal as TP
@@ -93,7 +94,7 @@ def _events_ms(spark: SparkSession, sf_dir: str) -> DataFrame:
     if isinstance(ev.schema["ts"].dataType, T.LongType):
         ms = F.expr("ts div 1000000")
     else:
-        ms = TP.to_ms(F.col("ts"))
+        ms = F.expr(TP.to_ms("`ts`"))
     return ev.withColumn("__ts_ms", ms.cast("long"))
 
 
@@ -823,10 +824,10 @@ def q_hnsw_knn_sharded(spark, sf_dir):
     # _augmented_emb plus bucket columns) — an in-memory scan instead of
     # re-reading parquet and recomputing the planted copies per query
     emb = _lsh_sel_indexed(spark, sf_dir).filter(f"vec_id IN ({','.join(str(i) for i in cand_ids)})" if cand_ids else F.lit(False))
-    qcol = V.lit_vec(q, "double")
+    qcol = V.vec_literal(q, "double")
     return (
         emb.select(
-            "vec_id", V.cosine("embedding", qcol).alias("cos_dist")
+            "vec_id", F.expr(V.cosine("`embedding`", qcol)).alias("cos_dist")
         )
         .orderBy(F.col("cos_dist").asc(), F.col("vec_id").asc())
         .limit(10)
@@ -891,10 +892,10 @@ def q_within_radius(spark, sf_dir):
     """within_radius ranking aggregate over euclidean distance."""
     emb = _load(spark, sf_dir, "embeddings")["embeddings"]
     q = _query_vec(spark, sf_dir)
-    qcol = F.array(*[F.lit(x) for x in q]).cast("array<float>")
+    qcol = V.vec_literal(q)
     return (
         emb.select(
-            F.col("vec_id"), V.euclidean("embedding", qcol).alias("eu_dist")
+            F.col("vec_id"), F.expr(V.euclidean("`embedding`", qcol)).alias("eu_dist")
         )
         .filter(F.col("eu_dist") <= 1.2)
     )
@@ -910,7 +911,7 @@ def q_pairwise_cosine(spark, sf_dir):
         .select(
             "id1",
             "id2",
-            (F.lit(1.0) - V.cosine("v1", "v2")).alias("cos_sim"),
+            F.expr(f"1.0D - {V.cosine('`v1`', '`v2`')}").alias("cos_sim"),
         )
     )
 
@@ -919,8 +920,8 @@ def q_vector_norms(spark, sf_dir):
     emb = _load(spark, sf_dir, "embeddings")["embeddings"]
     return emb.select(
         "vec_id",
-        V.vector_norm("embedding").alias("norm"),
-        V.vec_dim(F.col("embedding")).alias("dim"),
+        F.expr(V.vector_norm("`embedding`")).alias("norm"),
+        F.expr(V.vec_dim("`embedding`")).alias("dim"),
     )
 
 
@@ -928,9 +929,9 @@ def q_quantize_roundtrip(spark, sf_dir):
     """quantize_symmetric → dequantize_scaled round-trip error
     (examples/iql/30_quantization/)."""
     emb = _load(spark, sf_dir, "embeddings")["embeddings"]
-    qv = V.quantize_symmetric(F.col("embedding"))
-    max_abs = F.array_max(F.transform(F.col("embedding"), lambda x: F.abs(x.cast("double"))))
-    deq = V.dequantize_scaled(qv, max_abs / F.lit(127.0))
+    qv = V.quantize_symmetric("`embedding`")
+    max_abs = "array_max(transform(`embedding`, e -> abs(CAST(e AS DOUBLE))))"
+    deq = F.expr(V.dequantize_scaled(qv, f"({max_abs} / 127.0D)"))
     err = F.array_max(
         F.zip_with(F.col("embedding"), deq, lambda a, b: F.abs(a.cast("double") - b))
     )
@@ -945,17 +946,14 @@ def q_int8_distances(spark, sf_dir):
     cosine follows the clamped-similarity contract the float oracle
     uses."""
     emb = _load(spark, sf_dir, "embeddings")["embeddings"]
-    qv = V.quantize_symmetric(F.col("embedding"))
-    q0 = (
-        emb.filter(F.col("vec_id") == 0)
-        .select(V.quantize_symmetric(F.col("embedding")).alias("q0"))
-    )
+    qv = V.quantize_symmetric("`embedding`")
+    q0 = emb.filter(F.col("vec_id") == 0).select(F.expr(qv).alias("q0"))
     j = emb.crossJoin(F.broadcast(q0))
     return j.select(
         "vec_id",
-        V.dot(qv, F.col("q0")).alias("dot_i8"),
-        V.cosine(qv, F.col("q0")).alias("cos_i8"),
-        V.manhattan(qv, F.col("q0")).alias("man_i8"),
+        F.expr(V.dot(qv, "`q0`")).alias("dot_i8"),
+        F.expr(V.cosine(qv, "`q0`")).alias("cos_i8"),
+        F.expr(V.manhattan(qv, "`q0`")).alias("man_i8"),
     )
 
 
@@ -1063,10 +1061,10 @@ def q_hnsw_knn(spark, sf_dir):
     q = _query_vec(spark, sf_dir)
     cand_ids = [int(i) for i, _ in g.search(q, 20, ef=128)]
     emb = _augmented_emb(spark, sf_dir).filter(f"vec_id IN ({','.join(str(i) for i in cand_ids)})" if cand_ids else F.lit(False))
-    qcol = V.lit_vec(q, "double")
+    qcol = V.vec_literal(q, "double")
     return (
         emb.select(
-            "vec_id", V.cosine("embedding", qcol).alias("cos_dist")
+            "vec_id", F.expr(V.cosine("`embedding`", qcol)).alias("cos_dist")
         )
         .orderBy(F.col("cos_dist").asc(), F.col("vec_id").asc())
         .limit(10)
@@ -1102,7 +1100,7 @@ def q_recent_events(spark, sf_dir):
     ev = _events_ms(spark, sf_dir)
     now = ev.agg(F.max("__ts_ms")).collect()[0][0]
     week = 7 * 86400 * 1000
-    return ev.filter(TP.within_last(F.col("__ts_ms"), F.lit(now), F.lit(week))).select(
+    return ev.filter(TP.within_last("`__ts_ms`", sql_of_const(now), str(week))).select(
         "event_id", F.col("__ts_ms").alias("ts_ms")
     )
 
@@ -1113,21 +1111,20 @@ def q_temporal_arith(spark, sf_dir):
     §2.5) — pure ms-long arithmetic over events, hash-exact vs the
     oracle (no float tolerance needed)."""
     ev = _events_ms(spark, sf_dir)
-    t = F.col("__ts_ms")
+    t = "`__ts_ms`"
     hour = 3600 * 1000
     day = 24 * hour
     lo = ev.agg(F.min("__ts_ms")).collect()[0][0] + day
     hi = lo + 2 * day
-    return ev.select(
+    lo_s, hi_s = sql_of_const(lo), sql_of_const(hi)
+    return ev.selectExpr(
         "event_id",
-        TP.time_add(t, F.lit(hour)).alias("plus_1h"),
-        TP.time_sub(t, F.lit(hour // 2)).alias("minus_30m"),
-        TP.time_diff(t, F.lit(lo)).alias("since_lo"),
-        TP.interval_duration(F.lit(lo), t).alias("dur_lo_t"),
-        TP.time_between(t, F.lit(lo), F.lit(hi)).alias("in_window"),
-        TP.interval_contains(
-            F.lit(lo), F.lit(hi), t, TP.time_add(t, F.lit(hour))
-        ).alias("hour_fits"),
+        f"{TP.time_add(t, str(hour))} AS plus_1h",
+        f"{TP.time_sub(t, str(hour // 2))} AS minus_30m",
+        f"{TP.time_diff(t, lo_s)} AS since_lo",
+        f"{TP.interval_duration(lo_s, t)} AS dur_lo_t",
+        f"{TP.time_between(t, lo_s, hi_s)} AS in_window",
+        f"{TP.interval_contains(lo_s, hi_s, t, TP.time_add(t, str(hour)))} AS hour_fits",
     )
 
 
@@ -1135,7 +1132,7 @@ def q_time_decay_sum(spark, sf_dir):
     ev = _events_ms(spark, sf_dir)
     now = ev.agg(F.max("__ts_ms")).collect()[0][0]
     day = 86400 * 1000
-    w = TP.time_decay(F.col("__ts_ms"), F.lit(now), F.lit(day))
+    w = F.expr(TP.time_decay("`__ts_ms`", sql_of_const(now), str(day)))
     # float32 report: double sums are order-dependent in the last ulp
     # (partition-merge order), float32 rounding makes the compare stable.
     return ev.groupBy("event_type").agg(
@@ -1158,7 +1155,7 @@ def q_interval_overlaps(spark, sf_dir):
     pairs = (
         a.join(b, on="user_id")
         .filter(F.col("id1") < F.col("id2"))
-        .filter(TP.intervals_overlap(F.col("s1"), F.col("e1"), F.col("s2"), F.col("e2")))
+        .filter(TP.intervals_overlap("`s1`", "`e1`", "`s2`", "`e2`"))
     )
     return pairs.groupBy("user_id").agg(F.count("*").alias("n_overlaps"))
 

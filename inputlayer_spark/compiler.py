@@ -20,10 +20,9 @@ use positional names c0..cn.
 from __future__ import annotations
 
 import itertools
-from functools import reduce
 from typing import Callable, Dict, List, Optional, Sequence, Set, Tuple
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from inputlayer_spark.ast_nodes import (
@@ -37,7 +36,7 @@ from inputlayer_spark.ast_nodes import (
     Var,
     VecLit,
 )
-from inputlayer_spark.functions import BUILTINS
+from inputlayer_spark.functions import BUILTINS, vector
 
 Resolver = Callable[[str], DataFrame]
 
@@ -68,94 +67,35 @@ def lit_of(term) -> Column:
     raise CompileError(f"not a literal: {term!r}")
 
 
-_INT_PARAM_FUNCS = {"lsh_bucket", "lsh_probes", "lsh_multi_probe"}
-
-
-def term_to_column(term, bound: Set[str]) -> Column:
-    """Evaluate a term to a Column; every Var must be bound."""
-    if isinstance(term, Var):
-        if term.is_wildcard:
-            raise CompileError("wildcard not allowed in expressions")
-        if term.name not in bound:
-            raise CompileError(f"unbound variable {term.name} in expression")
-        return F.col(term.name)
-    if isinstance(term, (Const, VecLit)):
-        return lit_of(term)
-    if isinstance(term, Arith):
-        left = term_to_column(term.left, bound)
-        right = term_to_column(term.right, bound)
-        op = term.op
-        if op == "+":
-            return left + right
-        if op == "-":
-            return left - right
-        if op == "*":
-            return left * right
-        if op == "/":
-            # IQL: int/int is integer division with int→float coercion when
-            # either side is float (docs/spec/types.md:179-193). Spark's `/`
-            # always yields double; match reference by keeping double — the
-            # reference coerces to float on division too.
-            return left / right
-        if op == "%":
-            return left % right
-        raise CompileError(f"unknown arithmetic op {op}")
-    if isinstance(term, Call):
-        # builtin names are case-insensitive (reference lowercases in
-        # BuiltinFunc::parse, src/ast/mod.rs:200)
-        fname = term.func.lower()
-        fn = BUILTINS.get(fname)
-        if fn is None:
-            raise CompileError(f"unknown builtin {term.func}")
-        if fname in _INT_PARAM_FUNCS:
-            first = term_to_column(term.args[0], bound)
-            rest = []
-            for a in term.args[1:]:
-                if not isinstance(a, Const) or not isinstance(a.value, int):
-                    raise CompileError(f"{term.func}: table/bits must be int literals")
-                rest.append(a.value)
-            return fn(first, *rest)
-        return fn(*[term_to_column(a, bound) for a in term.args])
-    raise CompileError(f"cannot evaluate term {term!r}")
-
-
 def term_is_computable(term, bound: Set[str]) -> bool:
     from inputlayer_spark.ast_nodes import term_vars
 
     return term_vars(term) <= bound
 
 
-# ------------------------------------------------ SQL fast path (r14)
-#
-# Query CONSTRUCTION cost is driver-side py4j chatter (guide §5 "the
-# driver should do almost no data work", §7.3 planning time): every
-# F.col / F.lit / Column-operator call is one JVM round-trip, and a
-# compiled body used to build hundreds of them (threeway_join_arith:
-# ~1,000 round-trips ≈ 0.3 s before any job ran). Rendering a term to
-# ONE SQL string and parsing it with a single F.expr / selectExpr /
-# filter(str) call yields the identical expression tree in one
-# round-trip. Terms with no exact SQL rendering (builtin Calls,
-# non-finite floats, ints beyond int64) return None and the caller
-# falls back to the Column path — behavior, typing, and error messages
-# are unchanged.
+# Every term compiles to ONE Spark SQL string, parsed with a single
+# F.expr / selectExpr / filter(str) py4j round-trip. Query construction
+# cost is py4j chatter on the Spark driver: a Column tower pays one JVM
+# round-trip per F.col / F.lit / operator node, hundreds per body (a
+# 16-d cosine binding: ~600-860). Builtin calls render through the
+# SQL renderers in functions.BUILTINS, literals through sql_of_const,
+# and identifiers through sql_ident — the one quoting helper for all
+# generated SQL.
 
 _I32_MIN, _I32_MAX = -(1 << 31), (1 << 31) - 1
+_I64_MAX = (1 << 63) - 1
+_I64_MIN = -(1 << 63)
+
+# builtins whose table/bits/probe parameters must be int literals; the
+# renderers receive them as Python ints
+_INT_PARAM_FUNCS = {"lsh_bucket", "lsh_probes", "lsh_multi_probe"}
 
 
-def _sql_ident(name: str) -> str:
+def sql_ident(name: str) -> str:
     return "`" + name.replace("`", "``") + "`"
 
 
-def _sql_float(v: float) -> Optional[str]:
-    if v != v or v == float("inf") or v == float("-inf"):
-        return None  # no plain SQL literal; F.lit handles these
-    # repr() is the shortest exact round-trip decimal; the D suffix
-    # makes the literal DOUBLE (bare decimals parse as DECIMAL),
-    # matching F.lit(float) bit-for-bit
-    return repr(v) + "D"
-
-
-def sql_of_const(v) -> Optional[str]:
+def sql_of_const(v) -> str:
     """SQL literal producing the same Spark type/value as F.lit(v)."""
     if v is None:
         return "NULL"
@@ -166,9 +106,9 @@ def sql_of_const(v) -> Optional[str]:
             return str(v)  # INT, like py4j's int conversion
         if _I64_MIN <= v <= _I64_MAX:
             return f"{v}L"  # BIGINT
-        return None
+        raise CompileError(f"integer literal {v} does not fit in 64 bits")
     if isinstance(v, float):
-        return _sql_float(v)
+        return vector.float_sql(v)
     if isinstance(v, str):
         # the default parser (escapedStringLiterals=false) processes
         # backslash escapes inside string literals
@@ -181,35 +121,49 @@ def sql_of_const(v) -> Optional[str]:
             .replace("\x00", "\\0")
             + "'"
         )
-    return None
+    raise CompileError(f"no literal form for {v!r}")
 
 
-def term_to_sql(term, bound: Set[str]) -> Optional[str]:
-    """SQL text for a term, or None when it has no exact rendering.
-    Raises the same CompileErrors as term_to_column for wildcard /
-    unbound variables so callers can try SQL first and fall back."""
+def term_to_sql(term, bound: Set[str]) -> str:
+    """SQL text for a term; every Var must be bound."""
     if isinstance(term, Var):
         if term.is_wildcard:
             raise CompileError("wildcard not allowed in expressions")
         if term.name not in bound:
             raise CompileError(f"unbound variable {term.name} in expression")
-        return _sql_ident(term.name)
+        return sql_ident(term.name)
     if isinstance(term, Const):
         return sql_of_const(term.value)
     if isinstance(term, VecLit):
-        parts = [_sql_float(float(x)) for x in term.values]
-        if any(p is None for p in parts):
-            return None
-        return f"CAST(ARRAY({','.join(parts)}) AS ARRAY<FLOAT>)"
+        return vector.vec_literal(term.values)
     if isinstance(term, Arith):
         if term.op not in ("+", "-", "*", "/", "%"):
-            return None
+            raise CompileError(f"unknown arithmetic op {term.op}")
+        # IQL `/` on ints coerces to float like the reference
+        # (docs/spec/types.md:179-193); Spark's `/` always yields double
         left = term_to_sql(term.left, bound)
         right = term_to_sql(term.right, bound)
-        if left is None or right is None:
-            return None
         return f"({left} {term.op} {right})"
-    return None  # Call and anything else: Column path
+    if isinstance(term, Call):
+        # builtin names are case-insensitive (reference lowercases in
+        # BuiltinFunc::parse, src/ast/mod.rs:200)
+        fname = term.func.lower()
+        fn = BUILTINS.get(fname)
+        if fn is None:
+            raise CompileError(f"unknown builtin {term.func}")
+        if not term.args:
+            return fn()
+        first = term_to_sql(term.args[0], bound)
+        if fname in _INT_PARAM_FUNCS:
+            rest = []
+            for a in term.args[1:]:
+                if not isinstance(a, Const) or not isinstance(a.value, int):
+                    raise CompileError(f"{term.func}: table/bits must be int literals")
+                rest.append(a.value)
+        else:
+            rest = [term_to_sql(a, bound) for a in term.args[1:]]
+        return fn(first, *rest)
+    raise CompileError(f"cannot evaluate term {term!r}")
 
 
 # ------------------------------------------------------------ atom scan
@@ -245,7 +199,7 @@ def scan_atom(atom: Atom, resolve: Resolver, bool_consts_nop: bool = False) -> D
             f"arity mismatch: {atom.relation} has {len(cols)} columns, "
             f"atom has {len(atom.terms)} terms"
         )
-    filters: List[Tuple[str, str, object]] = []  # ("col", a, b) | ("lit", a, term)
+    filters: List[Tuple[str, str]] = []  # (column, SQL it must equal)
     var_to_col: Dict[str, str] = {}
     for col_name, term in zip(cols, atom.terms):
         if isinstance(term, Var):
@@ -259,7 +213,7 @@ def scan_atom(atom: Atom, resolve: Resolver, bool_consts_nop: bool = False) -> D
                 var_to_col[f"_w{next(_ANON_SEQ)}"] = col_name
                 continue
             if term.name in var_to_col:
-                filters.append(("col", col_name, var_to_col[term.name]))
+                filters.append((col_name, sql_ident(var_to_col[term.name])))
             else:
                 var_to_col[term.name] = col_name
         elif isinstance(term, Const) and isinstance(term.value, bool) and bool_consts_nop:
@@ -270,40 +224,20 @@ def scan_atom(atom: Atom, resolve: Resolver, bool_consts_nop: bool = False) -> D
             # Replicate the split via this flag.
             continue
         elif isinstance(term, (Const, VecLit)):
-            filters.append(("lit", col_name, term))
+            filters.append((col_name, term_to_sql(term, set())))
         else:
             raise CompileError(
                 f"unsupported term {term!r} in body atom {atom.relation} "
                 "(expressions belong in comparisons)"
             )
     if filters:
-        # ONE filter(sql) round-trip for the whole conjunction (r14);
-        # Column fallback only for literals with no exact SQL rendering
-        parts: Optional[List[str]] = []
-        for kind, a, b in filters:
-            if kind == "col":
-                parts.append(f"({_sql_ident(a)} = {_sql_ident(b)})")
-            else:
-                s = term_to_sql(b, set())
-                if s is None:
-                    parts = None
-                    break
-                parts.append(f"({_sql_ident(a)} = {s})")
-        if parts is not None:
-            df = df.filter(" AND ".join(parts))
-        else:
-            conds = [
-                F.col(a) == (F.col(b) if kind == "col" else lit_of(b))
-                for kind, a, b in filters
-            ]
-            df = df.filter(reduce(lambda x, y: x & y, conds))
+        # ONE filter(sql) round-trip for the whole conjunction
+        df = df.filter(" AND ".join(f"({sql_ident(c)} = {s})" for c, s in filters))
     # ONE selectExpr py4j call instead of per-column F.col().alias()
     # towers (r13): a 16-column scan paid ~50 py4j round-trips here,
-    # and every engine query compiles at least one scan. Identical
-    # projection; names are engine-generated (c0..cn / _w<N>) or
-    # parquet identifiers, backtick-safe.
+    # and every engine query compiles at least one scan
     return df.selectExpr(
-        *[f"`{c}` AS `{v}`" for v, c in var_to_col.items()]
+        *[f"{sql_ident(c)} AS {sql_ident(v)}" for v, c in var_to_col.items()]
     )
 
 
@@ -318,7 +252,9 @@ JOIN_PLANNING_ENABLED = True
 def compile_body(
     body: Sequence,
     resolve: Resolver,
-    hnsw_resolver: Optional[Callable[[HnswNearest], DataFrame]] = None,
+    hnsw_resolver: Optional[
+        Callable[[HnswNearest, Optional[DataFrame]], DataFrame]
+    ] = None,
     bool_consts_nop: bool = False,
 ) -> DataFrame:
     """Conjunctive body → DataFrame with one column per bound variable."""
@@ -396,11 +332,7 @@ def compile_body(
             raise CompileError("hnsw_nearest used but no index manager attached")
         # the resolver sees the body-so-far so a bound query variable can
         # become a k-NN join (per-query top-k), not just a literal lookup
-        try:
-            knn = hnsw_resolver(h, acc)
-        except TypeError:
-            knn = hnsw_resolver(h)  # legacy single-arg resolvers
-        acc = _conjoin(acc, knn)
+        acc = _conjoin(acc, hnsw_resolver(h, acc))
 
     if acc is None:
         raise CompileError("rule body has no positive atoms")
@@ -460,14 +392,10 @@ def _apply_comparison(comp: Comparison, acc: DataFrame, bound: Set[str]):
     right_ok = term_is_computable(comp.right, bound)
     if comp.op == "=":
         if left_ok and isinstance(comp.right, Var) and comp.right.name not in bound:
-            s = term_to_sql(comp.left, bound)
-            col = F.expr(s) if s is not None else term_to_column(comp.left, bound)
-            acc = acc.withColumn(comp.right.name, col)
+            acc = acc.withColumn(comp.right.name, F.expr(term_to_sql(comp.left, bound)))
             return True, acc, bound | {comp.right.name}
         if right_ok and isinstance(comp.left, Var) and comp.left.name not in bound:
-            s = term_to_sql(comp.right, bound)
-            col = F.expr(s) if s is not None else term_to_column(comp.right, bound)
-            acc = acc.withColumn(comp.left.name, col)
+            acc = acc.withColumn(comp.left.name, F.expr(term_to_sql(comp.right, bound)))
             return True, acc, bound | {comp.left.name}
     if left_ok and right_ok:
         # Column-vs-COLUMN ordered comparisons are numeric-only in the
@@ -488,27 +416,13 @@ def _apply_comparison(comp: Comparison, acc: DataFrame, bound: Set[str]):
         # mirrors the reference's Value::eq on non-null operands exactly.
         ls = term_to_sql(comp.left, bound)
         rs = term_to_sql(comp.right, bound)
-        if ls is not None and rs is not None:
-            sql_ops = {
-                "=": f"({ls} <=> {rs})",
-                "!=": f"(NOT ({ls} <=> {rs}))",
-                "<": f"({ls} < {rs})",
-                "<=": f"({ls} <= {rs})",
-                ">": f"({ls} > {rs})",
-                ">=": f"({ls} >= {rs})",
-            }
-            return True, acc.filter(sql_ops[comp.op]), bound
-        lc = term_to_column(comp.left, bound)
-        rc = term_to_column(comp.right, bound)
-        ops = {
-            "=": lc.eqNullSafe(rc),
-            "!=": ~lc.eqNullSafe(rc),
-            "<": lc < rc,
-            "<=": lc <= rc,
-            ">": lc > rc,
-            ">=": lc >= rc,
-        }
-        return True, acc.filter(ops[comp.op]), bound
+        if comp.op == "=":
+            cond = f"({ls} <=> {rs})"
+        elif comp.op == "!=":
+            cond = f"(NOT ({ls} <=> {rs}))"
+        else:
+            cond = f"({ls} {comp.op} {rs})"
+        return True, acc.filter(cond), bound
     return False, acc, bound
 
 
@@ -526,43 +440,13 @@ def _is_string_term(term, df: DataFrame) -> bool:
 
 # ------------------------------------------------------------ head
 
-
-_I64_MAX = (1 << 63) - 1
-_I64_MIN = -(1 << 63)
-
-
-def _saturating_sum(c: Column) -> Column:
-    """`sum<X>` returns Int64 with saturation in the reference: summing
-    floats truncates the total to int (0.1+0.2+0.3 → 0) and overflow
-    clamps to i64 bounds (goldens 11_types/31_float_precision.iql,
-    42_int64_boundaries.iql, 55_very_large_floats.iql). The double-sum
-    sentinel detects overflow; the long sum keeps exact arithmetic in
-    range (a double mantissa alone would round large in-range sums)."""
-    ds = F.sum(c.cast("double"))
-    return (
-        F.when(ds >= F.lit(float(1 << 63)), F.lit(_I64_MAX))
-        .when(ds <= F.lit(-float(1 << 63)), F.lit(_I64_MIN))
-        .otherwise(F.sum(c.cast("long")))
-    )
-
-
-STANDARD_AGGS = {
-    "count": lambda c: F.count(c),
-    "count_distinct": lambda c: F.count_distinct(c),
-    "sum": _saturating_sum,
-    "min": lambda c: F.min(c),
-    "max": lambda c: F.max(c),
-    "avg": lambda c: F.avg(c),
-}
-
-# repr(float(2^63)) round-trips to the exact double F.lit(float(1 << 63))
-# produces; the D suffix keeps the SQL literal DOUBLE-typed
+# repr(float(2^63)) round-trips to the exact double 2^63; the D suffix
+# keeps the SQL literal DOUBLE-typed
 _SAT_HI_SQL = repr(float(1 << 63)) + "D"
 
 
-def _agg_sql(func: str, x: str) -> Optional[str]:
-    """SQL rendering of STANDARD_AGGS[func] over rendered operand x —
-    the identical expression tree in one parse."""
+def _agg_sql(func: str, x: str) -> str:
+    """SQL for a standard aggregate over rendered operand x."""
     if func == "count":
         return f"count({x})"
     if func == "count_distinct":
@@ -570,10 +454,14 @@ def _agg_sql(func: str, x: str) -> Optional[str]:
     if func in ("min", "max", "avg"):
         return f"{func}({x})"
     if func == "sum":
-        # _saturating_sum verbatim: double-sum sentinel for overflow
-        # clamps, exact long sum in range. (-2^63 is rendered via a
-        # string cast: the bare literal would overflow the BIGINT
-        # lexer token under unary minus.)
+        # `sum<X>` is Int64 with saturation in the reference (goldens
+        # 11_types/31_float_precision.iql, 42_int64_boundaries.iql,
+        # 55_very_large_floats.iql). Each value is cast to an integer
+        # BEFORE summing, so floats truncate row by row (0.5 + 0.5 → 0);
+        # a double-typed sum of the same values detects overflow, which
+        # clamps to the i64 bounds, and the long sum stays exact in
+        # range. (-2^63 is rendered via a string cast: the bare literal
+        # would overflow the BIGINT lexer token under unary minus.)
         return (
             f"CASE WHEN sum(CAST({x} AS DOUBLE)) >= {_SAT_HI_SQL}"
             f" THEN {_I64_MAX}L"
@@ -581,7 +469,10 @@ def _agg_sql(func: str, x: str) -> Optional[str]:
             f" THEN CAST('{_I64_MIN}' AS BIGINT)"
             f" ELSE sum(CAST({x} AS BIGINT)) END"
         )
-    return None
+    raise CompileError(f"unknown aggregate {func}")
+
+
+_AGGREGATES = ("count", "count_distinct", "sum", "min", "max", "avg")
 
 
 def compile_head(body_df: DataFrame, head: Atom, distinct: bool = True) -> DataFrame:
@@ -593,23 +484,9 @@ def compile_head(body_df: DataFrame, head: Atom, distinct: bool = True) -> DataF
     bound = set(body_df.columns)
     aggs = [(i, t) for i, t in enumerate(head.terms) if isinstance(t, Agg)]
     if not aggs:
-        # ONE selectExpr round-trip when every term renders to SQL (r14)
-        exprs: Optional[List[str]] = []
-        for i, t in enumerate(head.terms):
-            s = term_to_sql(t, bound)
-            if s is None:
-                exprs = None
-                break
-            exprs.append(f"{s} AS `c{i}`")
-        if exprs is not None:
-            out = body_df.selectExpr(*exprs)
-        else:
-            out = body_df.select(
-                *[
-                    term_to_column(t, bound).alias(f"c{i}")
-                    for i, t in enumerate(head.terms)
-                ]
-            )
+        out = body_df.selectExpr(
+            *[f"{term_to_sql(t, bound)} AS `c{i}`" for i, t in enumerate(head.terms)]
+        )
         return out.distinct() if distinct else out
 
     ranking = [(i, t) for i, t in aggs if t.is_ranking]
@@ -628,16 +505,12 @@ def compile_head(body_df: DataFrame, head: Atom, distinct: bool = True) -> DataF
     # 100), while distinct tuples sharing the aggregated value all count
     # (10_edge_cases/141_all_same_value.iql: sum over (_, V) → 300).
     deduped = body_df.distinct()
-    # SQL fast path: render every aggregate and grouping term; fall back
-    # to the Column path wholesale if anything has no SQL form
-    agg_sqls: Optional[List[str]] = []
+    agg_exprs = []
     for i, t in aggs:
-        if t.func not in STANDARD_AGGS:
+        if t.func not in _AGGREGATES:
             raise CompileError(f"unknown aggregate {t.func}")
         if len(t.args) != 1:
             raise CompileError(f"{t.func} takes exactly one argument")
-        if agg_sqls is None:
-            continue  # validation still runs for every term
         if t.func == "sum" and _is_string_term(t.args[0], deduped):
             # Value::to_i64 maps non-numeric values to 0, so summing a
             # string column yields 0, not null
@@ -645,27 +518,8 @@ def compile_head(body_df: DataFrame, head: Atom, distinct: bool = True) -> DataF
             x = "0"
         else:
             x = term_to_sql(t.args[0], bound)
-        s = _agg_sql(t.func, x) if x is not None else None
-        agg_sqls = None if s is None else agg_sqls + [f"{s} AS `c{i}`"]
-    group_sqls: Optional[List[str]] = []
-    for i, t in group_idx:
-        s = term_to_sql(t, bound)
-        group_sqls = None if s is None else group_sqls + [f"{s} AS `c{i}`"]
-        if group_sqls is None:
-            break
-    if agg_sqls is not None and group_sqls is not None:
-        agg_exprs = [F.expr(s) for s in agg_sqls]
-        group_cols = [F.expr(s) for s in group_sqls]
-    else:
-        agg_exprs = []
-        for i, t in aggs:
-            col = term_to_column(t.args[0], bound)
-            if t.func == "sum" and _is_string_term(t.args[0], deduped):
-                col = F.lit(0)
-            agg_exprs.append(STANDARD_AGGS[t.func](col).alias(f"c{i}"))
-        group_cols = [
-            term_to_column(t, bound).alias(f"c{i}") for i, t in group_idx
-        ]
+        agg_exprs.append(F.expr(f"{_agg_sql(t.func, x)} AS `c{i}`"))
+    group_cols = [F.expr(f"{term_to_sql(t, bound)} AS `c{i}`") for i, t in group_idx]
     if group_cols:
         out = deduped.groupBy(*group_cols).agg(*agg_exprs)
     else:
@@ -676,6 +530,11 @@ def compile_head(body_df: DataFrame, head: Atom, distinct: bool = True) -> DataF
         out = deduped.groupBy(F.lit(1).alias("_g")).agg(*agg_exprs)
     # restore positional order
     return out.select(*[f"c{i}" for i in range(len(head.terms))])
+
+
+# Internal columns of a ranking aggregate. `#` is outside the IQL
+# variable grammar, so no body variable can share (and shadow) a name.
+_SCORE, _VAL, _RN = "`#score`", "`#val`", "`#rn`"
 
 
 def _compile_ranking(body_df, head, group_idx, ranking, bound):
@@ -718,100 +577,34 @@ def _compile_ranking(body_df, head, group_idx, ranking, bound):
         raise CompileError(f"unknown ranking aggregate {agg.func}")
 
     deduped = body_df.distinct()
-
-    # ---- SQL fast path (r14): score/val/window/projection in three
-    # round-trips instead of per-column towers; identical operators
-    # (row_number window, same order + tiebreak, same filters)
-    def _sql_path() -> Optional[DataFrame]:
-        score_s = term_to_sql(score_t, bound)
-        val_s = term_to_sql(val_t, bound)
-        if score_s is None or val_s is None:
-            return None
-        group_ss = []
-        for _, t in group_idx:
-            s = term_to_sql(t, bound)
-            if s is None:
-                return None
-            group_ss.append(s)
-        thresh_s = None
-        if thresh_t is not None:
-            thresh_s = term_to_sql(thresh_t, bound)
-            if thresh_s is None:
-                return None
-        head_ss: List[str] = []
-        pos = 0
-        for j, t in enumerate(head.terms):
-            if j == i:
-                head_ss.append(f"`__val` AS `c{pos}`")
-                pos += 1
-                if not single_col:
-                    head_ss.append(f"`__score` AS `c{pos}`")
-                    pos += 1
-            else:
-                s = term_to_sql(t, bound)
-                if s is None:
-                    return None
-                head_ss.append(f"{s} AS `c{pos}`")
-                pos += 1
-        sel0 = ["*", f"{score_s} AS `__score`", f"{val_s} AS `__val`"]
-        if agg.func == "within_radius":
-            out = deduped.selectExpr(*sel0).filter(f"`__score` <= {thresh_s}")
-        else:
-            part = ", ".join(group_ss) if group_ss else "1"
-            direction = "DESC" if agg.order == "desc" else "ASC"
-            rn = (
-                f"row_number() OVER (PARTITION BY {part}"
-                f" ORDER BY {score_s} {direction}, {val_s} ASC) AS `__rn`"
-            )
-            out = deduped.selectExpr(*sel0, rn).filter(f"`__rn` <= {k}")
-            if agg.func == "top_k_threshold":
-                op = ">=" if agg.order == "desc" else "<="
-                out = out.filter(f"`__score` {op} {thresh_s}")
-        return out.selectExpr(*head_ss).distinct()
-
-    fast = _sql_path()
-    if fast is not None:
-        return fast
-
-    # ---- Column fallback (terms with no SQL rendering) ----
-    thresh = None if thresh_t is None else term_to_column(thresh_t, bound)
-    score_col = term_to_column(score_t, bound)
-    val_col = term_to_column(val_t, bound)
-    order = score_col.desc() if agg.order == "desc" else score_col.asc()
-    tiebreak = val_col.asc()
-
-    group_cols = [term_to_column(t, bound) for _, t in group_idx]
-    deduped = deduped.withColumn("__score", score_col).withColumn("__val", val_col)
-
-    if agg.func == "within_radius":
-        out = deduped.filter(F.col("__score") <= thresh)
-    else:
-        w = (
-            Window.partitionBy(*group_cols).orderBy(order, tiebreak)
-            if group_cols
-            else Window.partitionBy(F.lit(1)).orderBy(order, tiebreak)
-        )
-        out = deduped.withColumn("__rn", F.row_number().over(w)).filter(F.col("__rn") <= k)
-        if agg.func == "top_k_threshold":
-            cond = F.col("__score") >= thresh if agg.order == "desc" else F.col("__score") <= thresh
-            out = out.filter(cond)
-
-    # positional output: each head term in order; the ranking term expands
-    # to (value, score)
-    sel: List[Column] = []
-    pos = 0
-    outer_bound = bound
+    score_s = term_to_sql(score_t, bound)
+    val_s = term_to_sql(val_t, bound)
+    thresh_s = None if thresh_t is None else term_to_sql(thresh_t, bound)
+    # positional output: each head term in order; the ranking term
+    # expands to (value, score)
+    head_ss: List[str] = []
     for j, t in enumerate(head.terms):
         if j == i:
-            sel.append(F.col("__val").alias(f"c{pos}"))
-            pos += 1
+            head_ss.append(_VAL)
             if not single_col:
-                sel.append(F.col("__score").alias(f"c{pos}"))
-                pos += 1
+                head_ss.append(_SCORE)
         else:
-            sel.append(term_to_column(t, outer_bound).alias(f"c{pos}"))
-            pos += 1
-    return out.select(*sel).distinct()
+            head_ss.append(term_to_sql(t, bound))
+    sel0 = ["*", f"{score_s} AS {_SCORE}", f"{val_s} AS {_VAL}"]
+    if agg.func == "within_radius":
+        out = deduped.selectExpr(*sel0).filter(f"{_SCORE} <= {thresh_s}")
+    else:
+        part = ", ".join(term_to_sql(t, bound) for _, t in group_idx) or "1"
+        direction = "DESC" if agg.order == "desc" else "ASC"
+        rn = (
+            f"row_number() OVER (PARTITION BY {part}"
+            f" ORDER BY {score_s} {direction}, {val_s} ASC) AS {_RN}"
+        )
+        out = deduped.selectExpr(*sel0, rn).filter(f"{_RN} <= {k}")
+        if agg.func == "top_k_threshold":
+            op = ">=" if agg.order == "desc" else "<="
+            out = out.filter(f"{_SCORE} {op} {thresh_s}")
+    return out.selectExpr(*[f"{s} AS `c{p}`" for p, s in enumerate(head_ss)]).distinct()
 
 
 def _const_int(term, what: str) -> int:

@@ -14,7 +14,6 @@ to independent relation namespaces; sessions overlay ephemeral facts.
 from __future__ import annotations
 
 import sys
-import time
 from dataclasses import dataclass, field
 from typing import Dict, List, Optional, Tuple
 
@@ -46,7 +45,7 @@ from inputlayer_spark.compiler import (
     compile_body,
     compile_head,
     lit_of,
-    term_to_column,
+    sql_ident,
 )
 from inputlayer_spark.parser import ParseError, parse_program
 from inputlayer_spark.magic_sets import (
@@ -146,7 +145,6 @@ class IQLEngine:
     def __init__(
         self,
         spark: SparkSession,
-        now_ms: Optional[int] = None,
         wal_dir: Optional[str] = None,
     ):
         self.spark = spark
@@ -157,8 +155,6 @@ class IQLEngine:
         # append e.g. a corpus root)
         self.load_paths: List[str] = ["."]
         self.session_facts: Dict[str, List[tuple]] = {}
-        # injectable clock for deterministic time_now (tests/oracles)
-        self.now_ms = now_ms
         self._derived_cache: Dict[str, DataFrame] = {}
         # head -> KG head_epoch at caching time; mismatch = a write from
         # another engine sharing this KG dirtied the head (see
@@ -2988,13 +2984,6 @@ class IQLEngine:
         if meta is None:
             raise CompileError(f"unknown index {h.index}")
         relation, column, metric = meta[:3]
-        dist_fn = {
-            "cosine": V.cosine,
-            "l2": V.euclidean,
-            "euclidean": V.euclidean,
-            "dot": lambda a, b: -V.dot(a, b),
-            "manhattan": V.manhattan,
-        }[metric]
         probes = h.ef_search if h.ef_search else self._DEFAULT_PROBES
         probes = max(1, min(int(probes), 2**self._INDEX_BITS))
 
@@ -3055,7 +3044,7 @@ class IQLEngine:
             from pyspark.sql import Window as _W
 
             ranked = cand.withColumn(
-                "__hd", dist_fn(F.col("__hv"), F.col("__hq"))
+                "__hd", F.expr(V.distance(metric, "`__hv`", "`__hq`"))
             ).withColumn(
                 "__rk",
                 F.row_number().over(
@@ -3141,8 +3130,8 @@ class IQLEngine:
         # fallback: exact scan (reference's non-indexed resolve path)
         df = self._resolver(self._derived_for_index())(relation)
         id_col = F.col(df.columns[0])
-        vec_col = F.col(column) if column in df.columns else F.col(df.columns[1])
-        dist = dist_fn(vec_col, lit_of(h.query))
+        vec_col = sql_ident(column if column in df.columns else df.columns[1])
+        dist = F.expr(V.distance(metric, vec_col, V.vec_literal(qvals)))
         return (
             df.select(id_col.alias(h.id_var.name), dist.alias(h.dist_var.name))
             .orderBy(F.col(h.dist_var.name).asc(), F.col(h.id_var.name).asc())
@@ -3813,11 +3802,6 @@ class IQLEngine:
         plan = df._jdf.queryExecution().explainString(explain_mode)
         rows = [(i, line) for i, line in enumerate(plan.split("\n"))]
         return self.spark.createDataFrame(rows, schema="line int, plan string")
-
-    # ------------------------------------------------------------ time
-
-    def now(self) -> int:
-        return self.now_ms if self.now_ms is not None else int(time.time() * 1000)
 
 
 def _result_names(goal: Atom) -> List[str]:

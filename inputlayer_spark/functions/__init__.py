@@ -1,29 +1,31 @@
-"""Builtin function registry: IQL builtin name → Column-expression builder.
+"""Builtin function registry: IQL builtin name → SQL renderer.
 
 Mirrors the closed builtin set of the reference (`BuiltinFunc::parse`,
-/root/reference/src/ast/mod.rs:199-267). Every entry takes Column args and
-returns a Column; the compiler evaluates IQL `Call` terms through this
-table. There is deliberately no UDF mechanism, same as the reference.
+src/ast/mod.rs:199-267). Every entry takes its operands
+as Spark SQL text and returns Spark SQL text; the compiler renders each
+IQL `Call` term through this table into the one SQL string it parses
+per expression. The LSH parameters (table, bits, probes) are the
+exception: the compiler accepts only int literals there and passes them
+as Python ints. There is deliberately no user UDF mechanism, same as
+the reference; `lsh_bucket` / `lsh_multi_probe` run engine-owned
+pandas kernels (functions.vector).
 """
 
 from __future__ import annotations
 
 from typing import Callable, Dict
 
-from pyspark.sql import Column
-from pyspark.sql import functions as F
-
 from inputlayer_spark.functions import temporal, text, vector
 
 __all__ = ["BUILTINS", "temporal", "text", "vector"]
 
 
-def _substr(s: Column, start: Column, length: Column) -> Column:
+def _substr(s: str, start: str, length: str) -> str:
     # IQL substr is 0-based (docs/spec); SQL substring is 1-based.
-    return F.substring(s, start.cast("int") + 1, length.cast("int"))
+    return f"substring({s}, (CAST({start} AS INT) + 1), CAST({length} AS INT))"
 
 
-BUILTINS: Dict[str, Callable[..., Column]] = {
+BUILTINS: Dict[str, Callable[..., str]] = {
     # vector distance
     "euclidean": vector.euclidean,
     "cosine": vector.cosine,
@@ -49,13 +51,9 @@ BUILTINS: Dict[str, Callable[..., Column]] = {
     # signatures mirror the reference codegen: lsh_bucket(v, table, bits),
     # lsh_probes(bucket, bits, probes), lsh_multi_probe(v, table, bits,
     # probes) — code_generator/mod.rs:2990-3099)
-    "lsh_bucket": lambda v, table=0, bits=16: vector.lsh_bucket(v, _as_int(table), _as_int(bits)),
-    "lsh_multi_probe": lambda v, table=0, bits=16, probes=8: vector.lsh_multi_probe(
-        v, _as_int(table), _as_int(bits), _as_int(probes)
-    ),
-    "lsh_probes": lambda b, bits=16, probes=8: vector.lsh_probes(
-        b, _as_int(bits), _as_int(probes)
-    ),
+    "lsh_bucket": vector.lsh_bucket_sql,
+    "lsh_multi_probe": vector.lsh_multi_probe_sql,
+    "lsh_probes": vector.lsh_probes,
     # temporal
     "time_now": temporal.time_now,
     "time_diff": temporal.time_diff,
@@ -72,43 +70,31 @@ BUILTINS: Dict[str, Callable[..., Column]] = {
     "interval_duration": temporal.interval_duration,
     "point_in_interval": temporal.point_in_interval,
     # math
-    "abs": F.abs,
-    "abs_int64": lambda x: F.abs(x.cast("long")),
-    "abs_float64": lambda x: F.abs(x.cast("double")),
-    "sqrt": F.sqrt,
-    "pow": F.pow,
-    "log": F.log,
-    "exp": F.exp,
-    "sin": F.sin,
-    "cos": F.cos,
-    "tan": F.tan,
-    "floor": lambda x: F.floor(x).cast("long"),
-    "ceil": lambda x: F.ceil(x).cast("long"),
-    "sign": lambda x: F.signum(x.cast("double")),
+    "abs": lambda x: f"abs({x})",
+    "abs_int64": lambda x: f"abs(CAST({x} AS BIGINT))",
+    "abs_float64": lambda x: f"abs(CAST({x} AS DOUBLE))",
+    "sqrt": lambda x: f"sqrt({x})",
+    "pow": lambda x, y: f"pow({x}, {y})",
+    "log": lambda x: f"log({x})",
+    "exp": lambda x: f"exp({x})",
+    "sin": lambda x: f"sin({x})",
+    "cos": lambda x: f"cos({x})",
+    "tan": lambda x: f"tan({x})",
+    "floor": lambda x: f"CAST(floor({x}) AS BIGINT)",
+    "ceil": lambda x: f"CAST(ceil({x}) AS BIGINT)",
+    "sign": lambda x: f"signum(CAST({x} AS DOUBLE))",
     # conversion
-    "to_float": lambda x: x.cast("double"),
-    "to_int": lambda x: x.cast("long"),
+    "to_float": lambda x: f"CAST({x} AS DOUBLE)",
+    "to_int": lambda x: f"CAST({x} AS BIGINT)",
     # scalar min/max
-    "min_val": F.least,
-    "max_val": F.greatest,
+    "min_val": lambda *xs: f"least({', '.join(xs)})",
+    "max_val": lambda *xs: f"greatest({', '.join(xs)})",
     # string
-    "len": lambda s: F.length(s).cast("long"),
-    "upper": F.upper,
-    "lower": F.lower,
-    "trim": F.trim,
+    "len": lambda s: f"CAST(length({s}) AS BIGINT)",
+    "upper": lambda s: f"upper({s})",
+    "lower": lambda s: f"lower({s})",
+    "trim": lambda s: f"trim({s})",
     "substr": _substr,
-    "replace": lambda s, find, repl: F.replace(s, find, repl),
-    "concat": F.concat,
+    "replace": lambda s, find, repl: f"replace({s}, {find}, {repl})",
+    "concat": lambda *xs: f"concat({', '.join(xs)})",
 }
-
-
-def _as_int(c) -> int:
-    """Extract a Python int from a literal Column (LSH table/bit params)."""
-    if isinstance(c, int):
-        return c
-    # Column wrapping lit(n): pull from the expression; compiler passes
-    # plain ints for these, this is a defensive fallback.
-    try:
-        return int(str(c._jc.expr().eval(None)))  # type: ignore[attr-defined]
-    except Exception as exc:  # pragma: no cover
-        raise ValueError("LSH table/bits parameters must be integer literals") from exc

@@ -1,4 +1,4 @@
-"""Temporal builtins as Column expressions over Unix-ms longs.
+"""Temporal builtins as Spark SQL renderers over Unix-ms longs.
 
 Parity targets: `/root/reference/src/temporal_ops.rs` (time_now :14,
 time_diff :29, time_add :42, time_sub :55, time_decay :91,
@@ -8,99 +8,100 @@ interval_contains :204, interval_duration :217, point_in_interval :230).
 
 Timestamps are i64 Unix milliseconds throughout, like the reference
 (`Value::Timestamp`, src/value/mod.rs:222). `to_ms` converts Spark
-timestamp columns into that domain.
+timestamp columns into that domain. Like the vector builtins, each
+function takes its operands as SQL text and returns SQL text.
 """
 
 from __future__ import annotations
 
 import time
 
-from pyspark.sql import Column
-from pyspark.sql import functions as F
 
-_L = "long"
+def _l(x: str) -> str:
+    return f"CAST({x} AS BIGINT)"
 
 
-def to_ms(ts: Column) -> Column:
+def to_ms(ts: str) -> str:
     """Spark timestamp → Unix ms long.
 
     `unix_micros` over a TIMESTAMP cast handles TIMESTAMP_NTZ too (the
     NTZ→LTZ cast is identity under the engine's UTC session timezone,
     matching DuckDB's epoch_ms on naive timestamps); Spark 4 forbids a
     direct NTZ→DOUBLE cast."""
-    return (F.unix_micros(ts.cast("timestamp")) / F.lit(1000)).cast(_L)
+    return _l(f"(unix_micros(CAST({ts} AS TIMESTAMP)) / 1000)")
 
 
-def time_now() -> Column:
-    """Wall-clock now in ms. Engine injects a fixed clock in tests."""
-    return F.lit(int(time.time() * 1000))
+def time_now() -> str:
+    """Wall-clock now in ms, fixed when the query is compiled."""
+    return f"{int(time.time() * 1000)}L"
 
 
-def time_diff(t1: Column, t2: Column) -> Column:
-    return (t1.cast(_L) - t2.cast(_L)).cast(_L)
+def time_diff(t1: str, t2: str) -> str:
+    return _l(f"({_l(t1)} - {_l(t2)})")
 
 
-def time_add(ts: Column, duration_ms: Column) -> Column:
-    return (ts.cast(_L) + duration_ms.cast(_L)).cast(_L)
+def time_add(ts: str, duration_ms: str) -> str:
+    return _l(f"({_l(ts)} + {_l(duration_ms)})")
 
 
-def time_sub(ts: Column, duration_ms: Column) -> Column:
-    return (ts.cast(_L) - duration_ms.cast(_L)).cast(_L)
+def time_sub(ts: str, duration_ms: str) -> str:
+    return _l(f"({_l(ts)} - {_l(duration_ms)})")
 
 
-def time_decay(ts: Column, now: Column, half_life_ms: Column) -> Column:
+def _decay(ts: str, now: str, span_ms: str, weight: str) -> str:
+    """Shared guard of the decays: a non-positive span weighs 1.0 for
+    ts ≥ now and 0.0 otherwise; a non-positive age weighs 1.0."""
+    return (
+        f"CASE WHEN ({_l(span_ms)} <= 0)"
+        f" THEN CASE WHEN ({_l(ts)} >= {_l(now)}) THEN 1.0D ELSE 0.0D END"
+        f" WHEN (({_l(now)} - {_l(ts)}) <= 0) THEN 1.0D ELSE {weight} END"
+    )
+
+
+def time_decay(ts: str, now: str, half_life_ms: str) -> str:
     """Exponential decay: 0.5 ** (age / half_life), clamped to 1.0 for the
     future, 0/1 for non-positive half-life (temporal_ops.rs:91)."""
-    age = now.cast(_L) - ts.cast(_L)
-    weight = F.pow(F.lit(0.5), age.cast("double") / half_life_ms.cast("double"))
-    return (
-        F.when(half_life_ms.cast(_L) <= 0, F.when(ts.cast(_L) >= now.cast(_L), 1.0).otherwise(0.0))
-        .when(age <= 0, F.lit(1.0))
-        .otherwise(weight)
-    )
+    age = f"CAST(({_l(now)} - {_l(ts)}) AS DOUBLE)"
+    weight = f"pow(0.5D, ({age} / CAST({half_life_ms} AS DOUBLE)))"
+    return _decay(ts, now, half_life_ms, weight)
 
 
-def time_decay_linear(ts: Column, now: Column, max_age_ms: Column) -> Column:
+def time_decay_linear(ts: str, now: str, max_age_ms: str) -> str:
     """Linear decay to 0 at max_age (temporal_ops.rs:122)."""
-    age = now.cast(_L) - ts.cast(_L)
-    frac = F.lit(1.0) - age.cast("double") / max_age_ms.cast("double")
-    return (
-        F.when(max_age_ms.cast(_L) <= 0, F.when(ts.cast(_L) >= now.cast(_L), 1.0).otherwise(0.0))
-        .when(age <= 0, F.lit(1.0))
-        .otherwise(F.greatest(F.lit(0.0), frac))
-    )
+    age = f"CAST(({_l(now)} - {_l(ts)}) AS DOUBLE)"
+    frac = f"(1.0D - ({age} / CAST({max_age_ms} AS DOUBLE)))"
+    return _decay(ts, now, max_age_ms, f"greatest(0.0D, {frac})")
 
 
-def time_before(t1: Column, t2: Column) -> Column:
-    return t1.cast(_L) < t2.cast(_L)
+def time_before(t1: str, t2: str) -> str:
+    return f"({_l(t1)} < {_l(t2)})"
 
 
-def time_after(t1: Column, t2: Column) -> Column:
-    return t1.cast(_L) > t2.cast(_L)
+def time_after(t1: str, t2: str) -> str:
+    return f"({_l(t1)} > {_l(t2)})"
 
 
-def time_between(ts: Column, start: Column, end: Column) -> Column:
-    return (ts.cast(_L) >= start.cast(_L)) & (ts.cast(_L) <= end.cast(_L))
+def time_between(ts: str, start: str, end: str) -> str:
+    return f"(({_l(ts)} >= {_l(start)}) AND ({_l(ts)} <= {_l(end)}))"
 
 
-def within_last(ts: Column, now: Column, duration_ms: Column) -> Column:
+def within_last(ts: str, now: str, duration_ms: str) -> str:
     """ts within [now - duration, now] (temporal_ops.rs:173)."""
-    age = now.cast(_L) - ts.cast(_L)
-    return (age >= 0) & (age <= duration_ms.cast(_L))
+    age = f"({_l(now)} - {_l(ts)})"
+    return f"(({age} >= 0) AND ({age} <= {_l(duration_ms)}))"
 
 
-def intervals_overlap(s1: Column, e1: Column, s2: Column, e2: Column) -> Column:
-    return (s1.cast(_L) <= e2.cast(_L)) & (s2.cast(_L) <= e1.cast(_L))
+def intervals_overlap(s1: str, e1: str, s2: str, e2: str) -> str:
+    return f"(({_l(s1)} <= {_l(e2)}) AND ({_l(s2)} <= {_l(e1)}))"
 
 
-def interval_contains(s1: Column, e1: Column, s2: Column, e2: Column) -> Column:
+def interval_contains(s1: str, e1: str, s2: str, e2: str) -> str:
     """[s1,e1] fully contains [s2,e2] (temporal_ops.rs:204)."""
-    return (s1.cast(_L) <= s2.cast(_L)) & (e2.cast(_L) <= e1.cast(_L))
+    return f"(({_l(s1)} <= {_l(s2)}) AND ({_l(e2)} <= {_l(e1)}))"
 
 
-def interval_duration(start: Column, end: Column) -> Column:
-    return (end.cast(_L) - start.cast(_L)).cast(_L)
+def interval_duration(start: str, end: str) -> str:
+    return _l(f"({_l(end)} - {_l(start)})")
 
 
-def point_in_interval(ts: Column, start: Column, end: Column) -> Column:
-    return (ts.cast(_L) >= start.cast(_L)) & (ts.cast(_L) <= end.cast(_L))
+point_in_interval = time_between

@@ -1,4 +1,4 @@
-"""Vector builtins as Spark Column expressions.
+"""Vector builtins as Spark SQL renderers.
 
 Parity targets (semantics, not code) from the reference
 `/root/reference/src/vector_ops.rs`:
@@ -10,248 +10,184 @@ Parity targets (semantics, not code) from the reference
   :547, int8 distances :562+, lsh_bucket :1038 (sign hash over
   deterministic per-table hyperplanes).
 
-Everything is a JVM-side higher-order-function expression — no Python UDFs
-— so whole-stage codegen applies and 100 TB scans stay vectorized.
-All arithmetic is done in double precision (elements are cast) so results
-match a float64 oracle to ~1e-12 regardless of input being float32.
+Each builtin is ONE renderer: it takes its operands as SQL text and
+returns SQL text, and the caller parses the whole expression with a
+single `F.expr` / `selectExpr` / `filter(str)` py4j round-trip. The IQL
+compiler renders operands from terms; library callers pass quoted
+column names (`compiler.sql_ident`) or `vec_literal` text. The
+expressions are JVM-side higher-order functions, so whole-stage codegen
+applies. All arithmetic is done in double precision (elements are cast)
+so results match a float64 oracle to ~1e-12 regardless of input being
+float32. The LSH bucket and multi-probe hashes are the exception: their
+hyperplane family is a Python PRNG, so they run as Arrow-batched pandas
+UDFs (see the LSH section).
 """
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import Column
-from pyspark.sql import functions as F
 
-
-def _d(x: Column) -> Column:
-    return x.cast("double")
-
-
-def lit_vec(values, element_type: str = "float") -> Column:
-    """Literal vector column via ONE F.expr round-trip (r13): the
-    per-element `F.array(*[F.lit(float(x)) ...])` form costs two py4j
-    round-trips per component (~0.2 s per 64-dim literal at query
-    construction time). repr(float) is the shortest exact round-trip
-    decimal, and Spark SQL parses it back to the identical double, so
-    the literal is bit-equal to the F.lit form. Finite values only.
-
-    The SQL text rides along on the Column (`__dict__`-stored, so it
-    never collides with Column.__getattr__ field access): the distance
-    builders below embed it into their own single-F.expr form."""
-    body = ",".join(repr(float(v)) for v in values)
-    sql = f"cast(array({body}) as array<{element_type}>)"
-    col = F.expr(sql)
-    col.__dict__["_ilspark_sql"] = f"({sql})"
-    return col
-
-
-# ---- single-round-trip construction (r14, guide §5/§7.3) ----
-#
-# The distance builders are called at query-construction time on the
-# driver; their Column form costs 2-4 higher-order-function lambdas ≈
-# 40-80 py4j round-trips per call (measured 0.13-0.17 s of knn_cosine /
-# pairwise_cosine build time). When an operand is a column NAME (str)
-# or a lit_vec literal (SQL text attached above), the whole expression
-# renders as ONE F.expr — the parser builds the identical tree (same
-# functions, same lambda bodies, same double literals), so results are
-# bit-equal. Column operands keep the original construction.
+# Lambda parameter names in rendered SQL. Operand text is spliced into
+# lambda bodies (vec_scale, normalize, quantize_*), and Spark resolves
+# lambda variables case-insensitively before columns, so these names
+# sit outside the IQL variable grammar ([A-Z_][A-Za-z0-9_]*): no operand
+# column can be captured by them.
+_X, _Y, _ACC = "`$x`", "`$y`", "`$acc`"
 
 _SQL_INF = "CAST('Infinity' AS DOUBLE)"
 
 
-def _sqlref(x) -> str | None:
-    if isinstance(x, str):
-        return "`" + x.replace("`", "``") + "`"
-    d = getattr(x, "__dict__", None)
-    return d.get("_ilspark_sql") if isinstance(d, dict) else None
+def float_sql(v: float) -> str:
+    """SQL literal with the DOUBLE type and value of F.lit(float(v))."""
+    v = float(v)
+    if math.isnan(v):
+        return "CAST('NaN' AS DOUBLE)"
+    if math.isinf(v):
+        return _SQL_INF if v > 0 else "CAST('-Infinity' AS DOUBLE)"
+    # repr() is the shortest exact round-trip decimal; the D suffix makes
+    # the literal DOUBLE (a bare decimal parses as DECIMAL)
+    return repr(v) + "D"
 
 
-def _colref(x) -> Column:
-    return F.col(x) if isinstance(x, str) else x
+def vec_literal(values, element_type: str = "float") -> str:
+    """Literal vector: ONE parse instead of two py4j round-trips per
+    component for `F.array(*[F.lit(x) ...])`, bit-equal to that form."""
+    body = ",".join(float_sql(v) for v in values)
+    return f"CAST(ARRAY({body}) AS ARRAY<{element_type.upper()}>)"
 
 
-def _dot_sql(a: str, b: str) -> str:
-    return (
-        f"aggregate(zip_with({a}, {b}, (x, y) ->"
-        f" CAST(x AS DOUBLE) * CAST(y AS DOUBLE)),"
-        f" 0.0D, (acc, x) -> acc + x)"
-    )
+def _d(x: str) -> str:
+    return f"CAST({x} AS DOUBLE)"
 
 
-def _norm_sql(a: str) -> str:
-    return (
-        f"sqrt(aggregate(transform({a}, x ->"
-        f" CAST(x AS DOUBLE) * CAST(x AS DOUBLE)),"
-        f" 0.0D, (acc, x) -> acc + x))"
-    )
+def _fold_sum(arr: str) -> str:
+    return f"aggregate({arr}, 0.0D, ({_ACC}, {_X}) -> {_ACC} + {_X})"
 
 
-def vec_dim(a) -> Column:
-    return F.size(_colref(a)).cast("long")
+def _zip(a: str, b: str, body: str) -> str:
+    return f"zip_with({a}, {b}, ({_X}, {_Y}) -> {body})"
 
 
-def dot(a, b) -> Column:
-    """Dot product; infinity on dimension mismatch (vector_ops.rs:175)."""
-    sa, sb = _sqlref(a), _sqlref(b)
-    if sa is not None and sb is not None:
-        return F.expr(
-            f"CASE WHEN size({sa}) != size({sb}) THEN {_SQL_INF}"
-            f" ELSE {_dot_sql(sa, sb)} END"
-        )
-    a, b = _colref(a), _colref(b)
-    raw = F.aggregate(
-        F.zip_with(a, b, lambda x, y: _d(x) * _d(y)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    return F.when(F.size(a) != F.size(b), F.lit(float("inf"))).otherwise(raw)
+def _same_dim(a: str, b: str, expr: str) -> str:
+    """Distances are infinite on a dimension mismatch (vector_ops.rs:175)."""
+    return f"CASE WHEN size({a}) != size({b}) THEN {_SQL_INF} ELSE {expr} END"
 
 
-def vector_norm(a) -> Column:
-    sa = _sqlref(a)
-    if sa is not None:
-        return F.expr(_norm_sql(sa))
-    a = _colref(a)
-    return F.sqrt(
-        F.aggregate(F.transform(a, lambda x: _d(x) * _d(x)), F.lit(0.0), lambda acc, x: acc + x)
-    )
+def vec_dim(a: str) -> str:
+    return f"CAST(size({a}) AS BIGINT)"
 
 
-def euclidean(a, b) -> Column:
-    sa, sb = _sqlref(a), _sqlref(b)
-    if sa is not None and sb is not None:
-        raw = (
-            f"sqrt(aggregate(zip_with({sa}, {sb}, (x, y) ->"
-            f" (CAST(x AS DOUBLE) - CAST(y AS DOUBLE))"
-            f" * (CAST(x AS DOUBLE) - CAST(y AS DOUBLE))),"
-            f" 0.0D, (acc, x) -> acc + x))"
-        )
-        return F.expr(
-            f"CASE WHEN size({sa}) != size({sb}) THEN {_SQL_INF}"
-            f" ELSE {raw} END"
-        )
-    a, b = _colref(a), _colref(b)
-    raw = F.sqrt(
-        F.aggregate(
-            F.zip_with(a, b, lambda x, y: (_d(x) - _d(y)) * (_d(x) - _d(y))),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-    )
-    return F.when(F.size(a) != F.size(b), F.lit(float("inf"))).otherwise(raw)
+def _dot_raw(a: str, b: str) -> str:
+    return _fold_sum(_zip(a, b, f"{_d(_X)} * {_d(_Y)}"))
 
 
-def manhattan(a, b) -> Column:
-    sa, sb = _sqlref(a), _sqlref(b)
-    if sa is not None and sb is not None:
-        raw = (
-            f"aggregate(zip_with({sa}, {sb}, (x, y) ->"
-            f" abs(CAST(x AS DOUBLE) - CAST(y AS DOUBLE))),"
-            f" 0.0D, (acc, x) -> acc + x)"
-        )
-        return F.expr(
-            f"CASE WHEN size({sa}) != size({sb}) THEN {_SQL_INF}"
-            f" ELSE {raw} END"
-        )
-    a, b = _colref(a), _colref(b)
-    raw = F.aggregate(
-        F.zip_with(a, b, lambda x, y: F.abs(_d(x) - _d(y))),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    return F.when(F.size(a) != F.size(b), F.lit(float("inf"))).otherwise(raw)
+def vector_norm(a: str) -> str:
+    return f"sqrt({_fold_sum(f'transform({a}, {_X} -> {_d(_X)} * {_d(_X)})')})"
 
 
-def cosine(a, b) -> Column:
+def dot(a: str, b: str) -> str:
+    return _same_dim(a, b, _dot_raw(a, b))
+
+
+def euclidean(a: str, b: str) -> str:
+    diff = f"({_d(_X)} - {_d(_Y)})"
+    return _same_dim(a, b, f"sqrt({_fold_sum(_zip(a, b, f'{diff} * {diff}'))})")
+
+
+def manhattan(a: str, b: str) -> str:
+    return _same_dim(a, b, _fold_sum(_zip(a, b, f"abs({_d(_X)} - {_d(_Y)})")))
+
+
+def cosine(a: str, b: str) -> str:
     """Cosine *distance* = 1 − cosine similarity (vector_ops.rs:139).
 
     Zero-norm input → distance 0.0 ("treat zero vectors as identical",
     vector_ops.rs:158-160); similarity clamped to [-1, 1] before the
     subtraction, as the reference does.
     """
-    sa, sb = _sqlref(a), _sqlref(b)
-    if sa is not None and sb is not None:
-        num = _dot_sql(sa, sb)
-        na, nb = _norm_sql(sa), _norm_sql(sb)
-        sim = f"least(greatest({num} / ({na} * {nb}), -1.0D), 1.0D)"
-        dist = (
-            f"CASE WHEN ({na} = 0.0D) OR ({nb} = 0.0D) THEN 0.0D"
-            f" ELSE 1.0D - {sim} END"
-        )
-        return F.expr(
-            f"CASE WHEN size({sa}) != size({sb}) THEN {_SQL_INF}"
-            f" ELSE {dist} END"
-        )
-    a, b = _colref(a), _colref(b)
-    num = F.aggregate(
-        F.zip_with(a, b, lambda x, y: _d(x) * _d(y)), F.lit(0.0), lambda acc, x: acc + x
-    )
     na, nb = vector_norm(a), vector_norm(b)
-    sim = F.least(F.greatest(num / (na * nb), F.lit(-1.0)), F.lit(1.0))
-    dist = F.when((na == 0.0) | (nb == 0.0), F.lit(0.0)).otherwise(F.lit(1.0) - sim)
-    return F.when(F.size(a) != F.size(b), F.lit(float("inf"))).otherwise(dist)
+    sim = f"least(greatest({_dot_raw(a, b)} / ({na} * {nb}), -1.0D), 1.0D)"
+    dist = f"CASE WHEN ({na} = 0.0D) OR ({nb} = 0.0D) THEN 0.0D ELSE 1.0D - {sim} END"
+    return _same_dim(a, b, dist)
 
 
-def hamming(a: Column, b: Column) -> Column:
-    """Count of differing positions (vector_ops.rs:232)."""
-    raw = F.size(F.filter(F.zip_with(a, b, lambda x, y: x != y), lambda t: t)).cast("long")
-    return F.when(F.size(a) != F.size(b), F.lit(None).cast("long")).otherwise(raw)
+def hamming(a: str, b: str) -> str:
+    """Count of differing positions (vector_ops.rs:232); null on a
+    dimension mismatch."""
+    raw = f"CAST(size(filter({_zip(a, b, f'{_X} != {_Y}')}, {_X} -> {_X})) AS BIGINT)"
+    return f"CASE WHEN size({a}) != size({b}) THEN CAST(NULL AS BIGINT) ELSE {raw} END"
 
 
-def normalize(a: Column) -> Column:
+def normalize(a: str) -> str:
     n = vector_norm(a)
-    return F.when(n == 0.0, a.cast("array<double>")).otherwise(
-        F.transform(a, lambda x: _d(x) / n)
+    return (
+        f"CASE WHEN ({n} = 0.0D) THEN CAST({a} AS ARRAY<DOUBLE>)"
+        f" ELSE transform({a}, {_X} -> {_d(_X)} / {n}) END"
     )
 
 
-def vec_add(a: Column, b: Column) -> Column:
-    return F.zip_with(a, b, lambda x, y: _d(x) + _d(y))
+def vec_add(a: str, b: str) -> str:
+    return _zip(a, b, f"{_d(_X)} + {_d(_Y)}")
 
 
-def vec_scale(a: Column, s: Column) -> Column:
-    return F.transform(a, lambda x: _d(x) * _d(s))
+def vec_scale(a: str, s: str) -> str:
+    return f"transform({a}, {_X} -> {_d(_X)} * {_d(s)})"
+
+
+def distance(metric: str, a: str, b: str) -> str:
+    """Ranking distance of an index metric: smaller is nearer, so `dot`
+    is negated (max dot == min negative dot)."""
+    if metric == "dot":
+        return f"(- {dot(a, b)})"
+    return {
+        "cosine": cosine,
+        "euclidean": euclidean,
+        "l2": euclidean,
+        "manhattan": manhattan,
+    }[metric](a, b)
 
 
 # ------------------------------------------------------------ quantization
 
 
-def quantize_linear(a: Column) -> Column:
+def _zero_i8(a: str) -> str:
+    return f"transform({a}, {_X} -> CAST(0 AS TINYINT))"
+
+
+def _clamp_i8(lo: str, x: str) -> str:
+    return f"CAST(greatest({lo}, least(127.0D, round({x}))) AS TINYINT)"
+
+
+def quantize_linear(a: str) -> str:
     """Min-max quantize to int8: min→-128, max→127 (vector_ops.rs:450)."""
-    mn = F.array_min(a).cast("double")
-    mx = F.array_max(a).cast("double")
-    rng = mx - mn
-    return F.when(rng == 0.0, F.transform(a, lambda x: F.lit(0).cast("tinyint"))).otherwise(
-        F.transform(
-            a,
-            lambda x: F.greatest(
-                F.lit(-128.0),
-                F.least(F.lit(127.0), F.round((_d(x) - mn) / rng * 255.0 - 128.0)),
-            ).cast("tinyint"),
-        )
+    mn = f"CAST(array_min({a}) AS DOUBLE)"
+    rng = f"(CAST(array_max({a}) AS DOUBLE) - {mn})"
+    q = _clamp_i8("-128.0D", f"((({_d(_X)} - {mn}) / {rng}) * 255.0D) - 128.0D")
+    return (
+        f"CASE WHEN ({rng} = 0.0D) THEN {_zero_i8(a)}"
+        f" ELSE transform({a}, {_X} -> {q}) END"
     )
 
 
-def quantize_symmetric(a: Column) -> Column:
+def quantize_symmetric(a: str) -> str:
     """Symmetric quantize: ±max_abs → ±127, 0 → 0 (vector_ops.rs:487)."""
-    max_abs = F.array_max(F.transform(a, lambda x: F.abs(_d(x))))
-    scale = F.lit(127.0) / max_abs
-    return F.when(max_abs == 0.0, F.transform(a, lambda x: F.lit(0).cast("tinyint"))).otherwise(
-        F.transform(
-            a,
-            lambda x: F.greatest(
-                F.lit(-127.0), F.least(F.lit(127.0), F.round(_d(x) * scale))
-            ).cast("tinyint"),
-        )
+    max_abs = f"array_max(transform({a}, {_X} -> abs({_d(_X)})))"
+    q = _clamp_i8("-127.0D", f"{_d(_X)} * (127.0D / {max_abs})")
+    return (
+        f"CASE WHEN ({max_abs} = 0.0D) THEN {_zero_i8(a)}"
+        f" ELSE transform({a}, {_X} -> {q}) END"
     )
 
 
-def dequantize(a: Column) -> Column:
+def dequantize(a: str) -> str:
     """int8 → double verbatim (vector_ops.rs:535)."""
-    return F.transform(a, lambda x: _d(x))
+    return f"transform({a}, {_X} -> {_d(_X)})"
 
 
-def dequantize_scaled(a: Column, scale: Column) -> Column:
-    return F.transform(a, lambda x: _d(x) * _d(scale))
+def dequantize_scaled(a: str, scale: str) -> str:
+    return f"transform({a}, {_X} -> {_d(_X)} * {_d(scale)})"
 
 
 # int8 distances are the same expressions — elements cast to double anyway.
@@ -408,47 +344,123 @@ def _ref_multi_probe(v, table: int, num_bits: int, num_probes: int):
     return probes
 
 
+def _bucket_kernel(s: pd.Series, t: int, nb: int) -> pd.Series:
+    # vectorized per Arrow batch: group rows by dimension and compute
+    # one (rows x dim) @ (dim x bits) f32 matmul per group — orders of
+    # magnitude over per-row Python on wide corpora
+    arrs = s.tolist()
+    dims = [len(v) if v is not None else 0 for v in arrs]
+    out = np.zeros(len(arrs), dtype=np.int64)
+    for dim in set(dims):
+        if dim == 0 or nb <= 0:
+            continue
+        idx = [i for i, d in enumerate(dims) if d == dim]
+        m = np.asarray([arrs[i] for i in idx], dtype=np.float32)
+        dots = m @ _ref_planes(t, nb, dim).T  # (n, nb) float32
+        bits = (dots > 0.0).astype(np.int64)
+        out[idx] = (bits << np.arange(nb, dtype=np.int64)).sum(axis=1)
+    return pd.Series(out)
+
+
+def _multi_probe_kernel(s: pd.Series, t: int, nb: int, np_: int) -> pd.Series:
+    return s.map(lambda v: [float(p) for p in _ref_multi_probe(v, t, nb, np_)])
+
+
 def lsh_bucket(a: Column, table: int = 0, num_bits: int = 16) -> Column:
     """Sign-hash bucket id in [0, 2^num_bits) (vector_ops.rs:1038).
 
     Arrow-batched pandas kernel: the hyperplane family is the reference's
     seeded-SipHash PRNG (not expressible as a JVM hash), the planes matrix
     is cached per (table, bits, dim), and the per-batch work is one
-    float32 matmul. The scale-path dedup/similarity operators keep their
-    all-JVM xxhash64 family (operators/dedup.py)."""
+    float32 matmul. Index set-up calls this Column form; IQL reaches the
+    same kernel through `lsh_bucket_sql`. The scale-path dedup/similarity
+    operators keep their all-JVM xxhash64 family (operators/dedup.py)."""
     from pyspark.sql.functions import pandas_udf
 
     t, nb = int(table), min(int(num_bits), 62)
 
     @pandas_udf("long")
     def _bucket(s: pd.Series) -> pd.Series:
-        # vectorized per Arrow batch: group rows by dimension and compute
-        # one (rows x dim) @ (dim x bits) f32 matmul per group — orders of
-        # magnitude over per-row Python on wide corpora
-        arrs = s.tolist()
-        dims = [len(v) if v is not None else 0 for v in arrs]
-        out = np.zeros(len(arrs), dtype=np.int64)
-        for dim in set(dims):
-            if dim == 0 or nb <= 0:
-                continue
-            idx = [i for i, d in enumerate(dims) if d == dim]
-            m = np.asarray([arrs[i] for i in idx], dtype=np.float32)
-            dots = m @ _ref_planes(t, nb, dim).T  # (n, nb) float32
-            bits = (dots > 0.0).astype(np.int64)
-            out[idx] = (bits << np.arange(nb, dtype=np.int64)).sum(axis=1)
-        return pd.Series(out)
+        return _bucket_kernel(s, t, nb)
 
     return _bucket(a)
 
 
-def lsh_probes(bucket: Column, num_bits: int = 16, num_probes: int = 8) -> Column:
+def lsh_multi_probe(
+    a: Column, table: int = 0, num_bits: int = 16, num_probes: int = 8
+) -> Column:
+    """lsh_multi_probe(v, table_idx, num_hyperplanes, num_probes) →
+    boundary-ranked probe buckets as a float32 vector
+    (vector_ops.rs:1392-1400). Column form for index probing; IQL uses
+    `lsh_multi_probe_sql`."""
+    from pyspark.sql.functions import pandas_udf
+
+    t, nb, np_ = int(table), min(int(num_bits), 62), int(num_probes)
+
+    @pandas_udf("array<float>")
+    def _probes(s: pd.Series) -> pd.Series:
+        return _multi_probe_kernel(s, t, nb, np_)
+
+    return _probes(a)
+
+
+# The same two kernels as SQL functions, so an IQL call renders to SQL
+# text like every other builtin. Registered in a session the first time
+# an IQL call renders one; the int parameters arrive as constant
+# columns (the compiler only accepts int literals for them).
+_SQL_BUCKET = "ilspark_lsh_bucket"
+_SQL_MULTI_PROBE = "ilspark_lsh_multi_probe"
+
+
+def _ensure_sql_functions() -> None:
+    from pyspark.sql import SparkSession
+    from pyspark.sql.functions import pandas_udf
+
+    spark = SparkSession.active()
+    if spark.catalog.functionExists(_SQL_BUCKET):
+        return
+
+    def first(p: pd.Series) -> int:
+        return int(p.iloc[0]) if len(p) else 0
+
+    @pandas_udf("long")
+    def bucket(s: pd.Series, table: pd.Series, bits: pd.Series) -> pd.Series:
+        return _bucket_kernel(s, first(table), min(first(bits), 62))
+
+    @pandas_udf("array<float>")
+    def multi_probe(
+        s: pd.Series, table: pd.Series, bits: pd.Series, probes: pd.Series
+    ) -> pd.Series:
+        return _multi_probe_kernel(
+            s, first(table), min(first(bits), 62), first(probes)
+        )
+
+    spark.udf.register(_SQL_MULTI_PROBE, multi_probe)
+    spark.udf.register(_SQL_BUCKET, bucket)
+
+
+def lsh_bucket_sql(a: str, table: int = 0, num_bits: int = 16) -> str:
+    _ensure_sql_functions()
+    return f"{_SQL_BUCKET}({a}, {int(table)}, {int(num_bits)})"
+
+
+def lsh_multi_probe_sql(
+    a: str, table: int = 0, num_bits: int = 16, num_probes: int = 8
+) -> str:
+    _ensure_sql_functions()
+    return (
+        f"{_SQL_MULTI_PROBE}({a}, {int(table)}, {int(num_bits)}, {int(num_probes)})"
+    )
+
+
+def lsh_probes(bucket: str, num_bits: int = 16, num_probes: int = 8) -> str:
     """lsh_probes(bucket, num_hyperplanes, num_probes) → probe buckets as a
     float32 vector (the reference casts probe ids to f32,
     code_generator/mod.rs:3030-3041). Pure bit math over literal masks —
     stays JVM-side."""
     nb, np_ = min(int(num_bits), 62), int(num_probes)
     if np_ <= 0:
-        return F.array().cast("array<float>")
+        return "CAST(array() AS ARRAY<FLOAT>)"
     masks = [0]
     for bit in range(nb):
         if len(masks) >= np_:
@@ -462,26 +474,7 @@ def lsh_probes(bucket: Column, num_bits: int = 16, num_probes: int = 8) -> Colum
                 masks.append((1 << i) | (1 << j))
             if len(masks) >= np_:
                 break
-    b = bucket.cast("long")
-    return F.array(
-        *[b.bitwiseXOR(F.lit(m).cast("long")).cast("float") for m in masks]
-    )
-
-
-def lsh_multi_probe(
-    a: Column, table: int = 0, num_bits: int = 16, num_probes: int = 8
-) -> Column:
-    """lsh_multi_probe(v, table_idx, num_hyperplanes, num_probes) →
-    boundary-ranked probe buckets as a float32 vector
-    (vector_ops.rs:1392-1400)."""
-    from pyspark.sql.functions import pandas_udf
-
-    t, nb, np_ = int(table), min(int(num_bits), 62), int(num_probes)
-
-    @pandas_udf("array<float>")
-    def _probes(s: pd.Series) -> pd.Series:
-        return s.map(
-            lambda v: [float(p) for p in _ref_multi_probe(v, t, nb, np_)]
-        )
-
-    return _probes(a)
+    b = f"CAST({bucket} AS BIGINT)"
+    return "array(" + ", ".join(
+        f"CAST(({b} ^ CAST({m} AS BIGINT)) AS FLOAT)" for m in masks
+    ) + ")"

@@ -496,7 +496,7 @@ def embedding_cosine_pairs(
         joined = base.toDF("id1", "v1").crossJoin(base.toDF("id2", "v2")).filter(
             F.col("id1") < F.col("id2")
         )
-    sim = F.lit(1.0) - V.cosine("v1", "v2")
+    sim = F.expr(f"1.0D - {V.cosine('`v1`', '`v2`')}")
     return (
         joined.withColumn("cos_sim", sim)
         .filter(F.col("cos_sim") >= threshold)

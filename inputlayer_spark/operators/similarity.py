@@ -27,17 +27,8 @@ from typing import Dict, List, Optional, Sequence, Tuple
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from inputlayer_spark.compiler import sql_ident
 from inputlayer_spark.functions import vector as V
-
-
-def _dist(metric: str, a, b):
-    return {
-        "cosine": V.cosine,
-        "euclidean": V.euclidean,
-        "l2": V.euclidean,
-        "manhattan": V.manhattan,
-        "dot": lambda x, y: -V.dot(x, y),  # max dot == min negative dot
-    }[metric](a, b)
 
 
 def knn_bruteforce(
@@ -54,11 +45,11 @@ def knn_bruteforce(
     per-partition top-k then a driver merge — no full sort at scale).
     Output: id, dist.
     """
-    q = V.lit_vec(query, "float")
+    q = V.vec_literal(query)
     return (
         df.select(
             F.col(id_col).alias("id"),
-            _dist(metric, vec_col, q).alias("dist"),
+            F.expr(V.distance(metric, sql_ident(vec_col), q)).alias("dist"),
         )
         .orderBy(F.col("dist").asc(), F.col("id").asc())
         .limit(k)
@@ -84,7 +75,7 @@ def knn_join_bruteforce(
     q = queries.select(F.col(query_id).alias("qid"), F.col(query_vec).alias("qv"))
     c = corpus.select(F.col(corpus_id).alias("id"), F.col(corpus_vec).alias("cv"))
     joined = c.crossJoin(F.broadcast(q)).withColumn(
-        "dist", _dist(metric, "cv", "qv")
+        "dist", F.expr(V.distance(metric, "`cv`", "`qv`"))
     )
     w = Window.partitionBy("qid").orderBy(F.col("dist").asc(), F.col("id").asc())
     return (
@@ -172,10 +163,13 @@ def knn_lsh(
         if probes.get(t)
     ]
     cand = F.expr(" OR ".join(clauses)) if clauses else F.lit(False)
-    q = V.lit_vec(query, "float")
+    q = V.vec_literal(query)
     return (
         df.filter(cand)
-        .select(F.col(id_col).alias("id"), _dist(metric, vec_col, q).alias("dist"))
+        .select(
+            F.col(id_col).alias("id"),
+            F.expr(V.distance(metric, sql_ident(vec_col), q)).alias("dist"),
+        )
         .orderBy(F.col("dist").asc(), F.col("id").asc())
         .limit(k)
     )
@@ -262,10 +256,13 @@ def ivf_knn(
     if cents is None:
         _, cents = ivf_index(df, cell_col, vec_col)
     probed_cells = ivf_probe_cells(cents, query, n_probe, metric)
-    q = V.lit_vec(query, "float")
+    q = V.vec_literal(query)
     return (
         df.filter(F.col(cell_col).isin(probed_cells))
-        .select(F.col(id_col).alias("id"), _dist(metric, vec_col, q).alias("dist"))
+        .select(
+            F.col(id_col).alias("id"),
+            F.expr(V.distance(metric, sql_ident(vec_col), q)).alias("dist"),
+        )
         .orderBy(F.col("dist").asc(), F.col("id").asc())
         .limit(k)
     )

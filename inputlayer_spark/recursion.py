@@ -18,9 +18,19 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from inputlayer_spark.ast_nodes import Atom, Rule
-from inputlayer_spark.compiler import CompileError, compile_body, compile_head
+from inputlayer_spark.compiler import (
+    CompileError,
+    compile_body,
+    compile_head,
+    sql_ident,
+)
 
 Resolver = Callable[[str], DataFrame]
+
+
+def _qual(alias: str, col: str) -> str:
+    """Alias-qualified column reference, both parts quoted."""
+    return f"{sql_ident(alias)}.{sql_ident(col)}"
 
 
 def _pin_count(df: DataFrame) -> Tuple[DataFrame, int]:
@@ -466,7 +476,7 @@ def _try_path_doubling(
         # and projection
         cond = F.expr(
             " AND ".join(
-                f"{la}.{upd_c[i]} = {ra}.{s_cols[i]}" for i in range(k)
+                f"{_qual(la, upd_c[i])} = {_qual(ra, s_cols[i])}" for i in range(k)
             )
         )
         out = rdf.join(sdf, cond, "inner")
@@ -474,10 +484,10 @@ def _try_path_doubling(
         for i in range(arity):
             if i in updated:
                 proj.append(
-                    f"{ra}.{t_cols[updated.index(i)]} AS {rcols[i]}"
+                    f"{_qual(ra, t_cols[updated.index(i)])} AS {sql_ident(rcols[i])}"
                 )
             else:
-                proj.append(f"{la}.{rcols[i]}")
+                proj.append(_qual(la, rcols[i]))
         return out.selectExpr(*proj)
 
     def compose_s(sdf: DataFrame) -> DataFrame:
@@ -485,12 +495,13 @@ def _try_path_doubling(
         a, b = sdf.alias("__pd_l"), sdf.alias("__pd_r")
         cond = F.expr(
             " AND ".join(
-                f"__pd_l.{t_cols[i]} = __pd_r.{s_cols[i]}" for i in range(k)
+                f"{_qual('__pd_l', t_cols[i])} = {_qual('__pd_r', s_cols[i])}"
+                for i in range(k)
             )
         )
         return a.join(b, cond, "inner").selectExpr(
-            *[f"__pd_l.{c}" for c in s_cols],
-            *[f"__pd_r.{c}" for c in t_cols],
+            *[_qual("__pd_l", c) for c in s_cols],
+            *[_qual("__pd_r", c) for c in t_cols],
         )
 
     # ---- distributed blocked doubling + semi-naive delta sweep ----

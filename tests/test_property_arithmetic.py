@@ -111,7 +111,10 @@ def test_quantize_roundtrip_error_bound(spark, vecs):
     )
     df = spark.createDataFrame(list(enumerate(vecs)), schema=schema)
     max_abs = F.array_max(F.transform(F.col("v"), lambda x: F.abs(x.cast("double"))))
-    recon = V.dequantize_scaled(V.quantize_symmetric(F.col("v")), max_abs / F.lit(127.0))
+    max_abs_sql = "array_max(transform(`v`, e -> abs(CAST(e AS DOUBLE))))"
+    recon = F.expr(
+        V.dequantize_scaled(V.quantize_symmetric("`v`"), f"({max_abs_sql} / 127.0D)")
+    )
     err = F.array_max(
         F.zip_with(F.col("v"), recon, lambda a, b: F.abs(a.cast("double") - b))
     )

@@ -22,7 +22,7 @@ from __future__ import annotations
 import itertools
 from typing import Callable, Dict, List, Optional, Sequence, Set, Tuple
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from inputlayer_spark.ast_nodes import (
@@ -55,16 +55,6 @@ def positional_names(n: int) -> List[str]:
 
 
 # ------------------------------------------------------------ terms
-
-
-def lit_of(term) -> Column:
-    if isinstance(term, Const):
-        if term.value is None:
-            return F.lit(None)
-        return F.lit(term.value)
-    if isinstance(term, VecLit):
-        return F.array(*[F.lit(float(v)) for v in term.values]).cast("array<float>")
-    raise CompileError(f"not a literal: {term!r}")
 
 
 def term_is_computable(term, bound: Set[str]) -> bool:

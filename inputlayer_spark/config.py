@@ -71,8 +71,9 @@ class PerformanceConfig:
     num_threads: int = 0  # local[N] cores; 0 = SPARK_GRAFT_CPUS / all
     shuffle_partitions: int = 0  # spark.sql.shuffle.partitions; 0 = default
     max_result_rows: int = 0  # REPL/server row window; 0 = unlimited
-    # server /query watchdog: Spark job group cancelled at the deadline,
-    # client gets 408 (QueryServer.query_timeout_ms). 0 = no timeout
+    # server /query watchdog: the request's Spark job tag is cancelled
+    # at the deadline, client gets 408 (QueryServer.query_timeout_ms).
+    # 0 = no timeout
     query_timeout_ms: int = 0
     # reject queries whose structural cost estimate exceeds this
     # (engine.max_query_cost; reference lib.rs:1604 check #47). 0 = off

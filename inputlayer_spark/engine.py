@@ -44,8 +44,8 @@ from inputlayer_spark.compiler import (
     EmptyAritylessRelation,
     compile_body,
     compile_head,
-    lit_of,
     sql_ident,
+    term_to_sql,
 )
 from inputlayer_spark.parser import ParseError, parse_program
 from inputlayer_spark.magic_sets import (
@@ -976,16 +976,11 @@ class IQLEngine:
             bound = set(body_df.columns)
             key_cols: List[str] = []
             key_vars: List[str] = []
-            const_cond = None
             for col_name, term in zip(df.columns, st.terms):
-                if isinstance(term, Var):
-                    if term.is_wildcard or term.name not in bound:
-                        continue
+                if isinstance(term, Var) and not term.is_wildcard and term.name in bound:
                     key_cols.append(col_name)
                     key_vars.append(term.name)
-                else:
-                    c = F.col(col_name) == lit_of(term)
-                    const_cond = c if const_cond is None else (const_cond & c)
+            const_cond = _const_match(df.columns, st.terms)
             doomed = df.filter(const_cond) if const_cond is not None else df
             if key_cols:
                 keys = body_df.select(
@@ -996,12 +991,8 @@ class IQLEngine:
                 doomed = doomed.limit(0)  # condition derived nothing
             keep = df.join(doomed, on=list(df.columns), how="left_anti")
         else:
-            cond = None
-            for col_name, term in zip(df.columns, st.terms):
-                if isinstance(term, Var):
-                    continue  # wildcard / pattern var matches anything
-                c = F.col(col_name) == lit_of(term)
-                cond = c if cond is None else (cond & c)
+            # wildcards / pattern vars match anything
+            cond = _const_match(df.columns, st.terms)
             keep = df.filter(~cond) if cond is not None else df.limit(0)
             # exact complement of keep (filter(~cond) also drops rows
             # where cond is NULL, so doomed must include them)
@@ -2394,7 +2385,7 @@ class IQLEngine:
                     cols.append(F.col(t.name))
                     names.append(t.name)
                 elif isinstance(t, (Const, VecLit)):
-                    cols.append(lit_of(t))
+                    cols.append(F.expr(term_to_sql(t, set())))
                     names.append(term_to_iql(t))
             # body literals extend the projection: new vars bound by
             # positive atoms, hnsw_nearest, and `=`-bindings appear as
@@ -3802,6 +3793,17 @@ class IQLEngine:
         plan = df._jdf.queryExecution().explainString(explain_mode)
         rows = [(i, line) for i, line in enumerate(plan.split("\n"))]
         return self.spark.createDataFrame(rows, schema="line int, plan string")
+
+
+def _const_match(columns, terms):
+    """One filter matching every non-variable term against its column
+    (`c0 = 1 AND c2 = 'x'`), or None when all terms are variables."""
+    conds = [
+        f"{sql_ident(c)} = {term_to_sql(t, set())}"
+        for c, t in zip(columns, terms)
+        if not isinstance(t, Var)
+    ]
+    return F.expr(" AND ".join(conds)) if conds else None
 
 
 def _result_names(goal: Atom) -> List[str]:

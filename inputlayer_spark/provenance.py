@@ -19,7 +19,7 @@ from typing import Dict, List, Optional, Set, Tuple
 from pyspark.sql import functions as F
 
 from inputlayer_spark.ast_nodes import Atom, Comparison, Const, Var, VecLit
-from inputlayer_spark.compiler import CompileError, compile_body, lit_of
+from inputlayer_spark.compiler import CompileError, compile_body
 from inputlayer_spark.parser import Parser
 from inputlayer_spark.printer import rule_to_iql, term_to_iql
 

@@ -44,6 +44,7 @@ import hashlib
 import json
 import struct
 import threading
+import uuid
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from typing import Dict
 
@@ -78,21 +79,6 @@ def _json_val(v):
 
 
 # ------------------------------------------------------------ websocket
-
-
-def _cancel_until_acknowledged(spark, done, token, interval=0.25):
-    """Watchdog cancel loop: repeatedly cancelAllJobs until the request
-    handler acknowledges (`done`). The single-job-source invariant is
-    re-checked on EVERY lap, not just at entry — a maintainer or second
-    server registering mid-loop must not have its jobs killed for the
-    remainder of the deadline (TOCTOU guard; unit-tested with a fake
-    context in tests/test_config.py)."""
-    from inputlayer_spark.session import sole_job_source
-
-    while not done.wait(interval):
-        if not sole_job_source(spark, token):
-            return
-        spark.sparkContext.cancelAllJobs()
 
 
 def _ws_accept_key(key: str) -> str:
@@ -151,9 +137,11 @@ class QueryServer:
         (reference src/auth.rs layer-1 authorization).
 
         `query_timeout_ms` (config performance.query_timeout_ms): when
-        > 0, each /query request runs under its own Spark job group and
-        a watchdog cancels the group at the deadline — the client gets
-        408 instead of holding the writer lock forever."""
+        > 0, each read-only /query request runs under its own Spark job
+        tag and a watchdog cancels that tag's jobs at the deadline — the
+        client gets 408 instead of holding the writer lock forever, and
+        jobs outside the request (streaming maintainers, other sessions
+        on the same SparkContext) keep running."""
         self.spark = spark
         self.engine = IQLEngine(spark)
         self.sessions: Dict[str, IQLEngine] = {}
@@ -170,13 +158,6 @@ class QueryServer:
         # KG, handler.rs:1695-1810; ours live with the credentials)
         self.engine.auth_store = auth
         self._lock = threading.Lock()
-        # declare this server as a job source: the timeout watchdog's
-        # cancelAllJobs() is request-scoped ONLY while we are the sole
-        # producer of Spark jobs on the shared context (see
-        # session.register_job_source)
-        from inputlayer_spark.session import register_job_source
-
-        self._job_source = register_job_source(spark, "query-server")
         # one-time WebSocket handshake tickets (POST /ws_ticket): browsers
         # cannot set headers on a WS handshake, and a long-lived API key
         # in the URL query string ends up in access/proxy logs — a
@@ -608,46 +589,27 @@ class QueryServer:
                                 for st in parse_program(q).statements
                             )
                         if timed:
-                            # the watchdog cancels ALL jobs at the
-                            # deadline. This is exactly request-scoped
-                            # here because outer._lock serializes every
-                            # engine.execute — the timed request is the
-                            # only job source while it runs. (Job-group
-                            # cancellation would be narrower, but py4j's
-                            # unpinned thread pool scatters thread-local
-                            # job groups across JVM threads, making
-                            # setJobGroup/cancelJobGroup unreliable.)
+                            # the request's jobs carry a tag of their own:
+                            # job tags are thread-local and PySpark pins
+                            # each Python thread to one JVM thread, so
+                            # every job this handler thread submits (and
+                            # nothing another thread submits) is tagged
+                            sc = outer.spark.sparkContext
+                            tag = f"iql-query-{uuid.uuid4().hex}"
+                            sc.addJobTag(tag)
                             done = threading.Event()
 
                             def _watch():
                                 if done.wait(outer.query_timeout_ms / 1000.0):
                                     return
                                 timed_out.set()
-                                # guard the single-job-source invariant:
-                                # cancelAllJobs() kills EVERY job on the
-                                # shared SparkContext. If another source
-                                # is registered (a streaming maintainer,
-                                # a second server), skip the cancel —
-                                # the request still reports 408 when the
-                                # query eventually finishes, but no
-                                # bystander loses its jobs
-                                from inputlayer_spark.session import (
-                                    sole_job_source,
-                                )
-
-                                if not sole_job_source(
-                                    outer.spark, outer._job_source
-                                ):
-                                    return
                                 # cancel REPEATEDLY until the handler
-                                # acknowledges: a multi-stage query keeps
-                                # submitting fresh jobs after a one-shot
-                                # cancel, which would sail past the
-                                # deadline untouched (the loop re-checks
-                                # the single-source invariant every lap)
-                                _cancel_until_acknowledged(
-                                    outer.spark, done, outer._job_source
-                                )
+                                # acknowledges: the engine's fallback
+                                # paths can catch a cancelled job's error
+                                # and submit fresh jobs under the tag
+                                sc.cancelJobsWithTag(tag)
+                                while not done.wait(0.25):
+                                    sc.cancelJobsWithTag(tag)
 
                             watchdog = threading.Thread(
                                 target=_watch, daemon=True
@@ -661,13 +623,14 @@ class QueryServer:
                         finally:
                             if watchdog is not None:
                                 done.set()
+                                sc.removeJobTag(tag)
                                 watchdog.join(timeout=2)
                             engine.auth_identity = None
                             self._apply_creator_grants(ident, grants, engine)
                     if timed_out.is_set():
-                        # the watchdog skipped cancelAllJobs (another job
-                        # source was registered) and the query ran to
-                        # completion past the deadline: report-only 408
+                        # the deadline passed: the request's jobs were
+                        # cancelled, or it finished just after the
+                        # deadline — either way the client gets 408
                         self._send(
                             408,
                             {
@@ -681,6 +644,7 @@ class QueryServer:
                     self._send(403, {"error": str(exc)})
                 except Exception as exc:  # noqa: BLE001 — wire errors back
                     if timed_out.is_set():
+                        # the cancelled jobs surface as the engine's error
                         self._send(
                             408,
                             {
@@ -785,11 +749,6 @@ class QueryServer:
             # only issue it for a server that was actually start()ed
             self._httpd.shutdown()
             self._thread.join(timeout=5)
-        if self._job_source is not None:
-            from inputlayer_spark.session import unregister_job_source
-
-            unregister_job_source(self.spark, self._job_source)
-            self._job_source = None
 
 
 def main(argv=None) -> int:

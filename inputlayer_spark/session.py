@@ -93,77 +93,20 @@ def tune_session(spark: SparkSession) -> SparkSession:
     """Apply runtime-settable engine defaults to an externally-created session.
 
     Used by the driver entry points, which receive a SparkSession we did not
-    build. Only runtime-mutable confs are touched (not driver memory etc.).
+    build. Only runtime-mutable confs are touched (not driver memory etc.);
+    a session that refuses one raises instead of running without it.
     """
     for key in (
         "spark.sql.adaptive.enabled",
         "spark.sql.adaptive.coalescePartitions.enabled",
+        "spark.sql.adaptive.coalescePartitions.parallelismFirst",
+        "spark.sql.adaptive.coalescePartitions.minPartitionSize",
         "spark.sql.adaptive.skewJoin.enabled",
         "spark.sql.legacy.parquet.nanosAsLong",
+        "spark.sql.ansi.enabled",
+        "spark.sql.files.minPartitionNum",
+        "spark.sql.files.openCostInBytes",
+        "spark.sql.session.timeZone",
     ):
-        try:
-            spark.conf.set(key, "true")
-        except Exception:
-            pass
-    try:
-        spark.conf.set("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-        spark.conf.set("spark.sql.adaptive.coalescePartitions.minPartitionSize", "1m")
-    except Exception:
-        pass
-    try:
-        spark.conf.set("spark.sql.ansi.enabled", "false")
-    except Exception:
-        pass
-    try:
-        spark.conf.set(
-            "spark.sql.files.minPartitionNum", os.environ.get("SPARK_GRAFT_CPUS", "32")
-        )
-        spark.conf.set("spark.sql.files.openCostInBytes", "131072")
-    except Exception:
-        pass
-    try:
-        spark.conf.set("spark.sql.session.timeZone", "UTC")
-    except Exception:
-        pass
+        spark.conf.set(key, _DEFAULTS[key])
     return spark
-
-
-# --------------------------------------------------------------- job sources
-#
-# Registry of concurrent Spark-job producers sharing one SparkContext.
-# The QueryServer's read-only-query watchdog enforces its deadline with
-# sparkContext.cancelAllJobs() — safe ONLY while the timed request is
-# the sole job source (py4j's unpinned thread pool scatters JVM
-# thread-locals, so job-group/tag-scoped cancellation is unreliable
-# from Python threads). Every long-lived job source registers here;
-# the watchdog skips the cancel when it is not alone, degrading to a
-# report-only timeout instead of cancelling a bystander's jobs.
-
-import threading as _threading
-
-_JOB_SOURCES: dict = {}
-_JOB_SOURCES_LOCK = _threading.Lock()
-_JOB_SOURCE_SEQ = [0]
-
-
-def register_job_source(spark: SparkSession, name: str) -> int:
-    """Declare a component that will submit Spark jobs on this session.
-    Returns a token for unregister_job_source."""
-    with _JOB_SOURCES_LOCK:
-        _JOB_SOURCE_SEQ[0] += 1
-        token = _JOB_SOURCE_SEQ[0]
-        _JOB_SOURCES.setdefault(id(spark), {})[token] = name
-        return token
-
-
-def unregister_job_source(spark: SparkSession, token: int) -> None:
-    with _JOB_SOURCES_LOCK:
-        _JOB_SOURCES.get(id(spark), {}).pop(token, None)
-
-
-def sole_job_source(spark: SparkSession, token: int) -> bool:
-    """True when `token` is the only registered job source for this
-    session — the precondition for a safe cancelAllJobs()."""
-    with _JOB_SOURCES_LOCK:
-        srcs = _JOB_SOURCES.get(id(spark), {})
-        return set(srcs) <= {token}

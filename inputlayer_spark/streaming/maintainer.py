@@ -214,28 +214,7 @@ class IncrementalMaintainer:
             writer = writer.trigger(availableNow=True)
         else:
             writer = writer.trigger(processingTime=processing_interval)
-        # streaming micro-batches are an independent job source on the
-        # shared SparkContext: register so a QueryServer watchdog on the
-        # same session won't cancelAllJobs() out from under the stream.
-        # Release any previous registration first — a restart without
-        # stop() must not orphan a token (which would permanently
-        # disable every watchdog on this context)
-        from inputlayer_spark.session import (
-            register_job_source,
-            unregister_job_source,
-        )
-
-        if getattr(self, "_job_source", None) is not None:
-            unregister_job_source(self.engine.spark, self._job_source)
-        self._job_source = register_job_source(
-            self.engine.spark, "incremental-maintainer"
-        )
-        try:
-            self._query = writer.start()
-        except Exception:
-            unregister_job_source(self.engine.spark, self._job_source)
-            self._job_source = None
-            raise
+        self._query = writer.start()
         return self._query
 
     def process_available(self) -> None:
@@ -244,17 +223,12 @@ class IncrementalMaintainer:
         try:
             q.awaitTermination()
         finally:
-            self.stop()  # also unregisters the job source
+            self.stop()
 
     def stop(self) -> None:
         if self._query is not None:
             self._query.stop()
             self._query = None
-        if getattr(self, "_job_source", None) is not None:
-            from inputlayer_spark.session import unregister_job_source
-
-            unregister_job_source(self.engine.spark, self._job_source)
-            self._job_source = None
 
 
 class StreamingCorpusDeduper:
@@ -787,20 +761,7 @@ class StreamingCorpusDeduper:
             writer = writer.trigger(availableNow=True)
         else:
             writer = writer.trigger(processingTime=processing_interval)
-        from inputlayer_spark.session import (
-            register_job_source,
-            unregister_job_source,
-        )
-
-        if getattr(self, "_job_source", None) is not None:
-            unregister_job_source(self.spark, self._job_source)
-        self._job_source = register_job_source(self.spark, "streaming-deduper")
-        try:
-            self._query = writer.start()
-        except Exception:
-            unregister_job_source(self.spark, self._job_source)
-            self._job_source = None
-            raise
+        self._query = writer.start()
         return self._query
 
     def process_available(self) -> None:
@@ -815,8 +776,3 @@ class StreamingCorpusDeduper:
         if self._query is not None:
             self._query.stop()
             self._query = None
-        if getattr(self, "_job_source", None) is not None:
-            from inputlayer_spark.session import unregister_job_source
-
-            unregister_job_source(self.spark, self._job_source)
-            self._job_source = None

@@ -217,6 +217,18 @@ def test_int_literal_beyond_int64_is_a_compile_error(engine):
     assert rows(df) == [(1, float("inf"))]
 
 
+def test_delete_int_literal_beyond_int64_is_a_compile_error(engine):
+    """Delete patterns render their constants through the same SQL
+    literal path as queries: a literal no Spark type holds is a
+    CompileError naming it, and the relation keeps its rows."""
+    engine.execute("+big(1, 2)\n+big(3, 4)")
+    with pytest.raises(compiler.CompileError, match="99999999999999999999"):
+        engine.execute("-big(99999999999999999999, _)")
+    with pytest.raises(compiler.CompileError, match="99999999999999999999"):
+        engine.execute("-big(99999999999999999999, Y) <- big(1, Y)")
+    assert rows(engine.query("?big(X, Y)")) == [(1, 2), (3, 4)]
+
+
 @pytest.mark.parametrize("name", ["__score", "__val", "__rn", "_g"])
 def test_ranking_aggregate_over_internal_looking_names(engine, name):
     """Body variables may be named like the ranking window's internal

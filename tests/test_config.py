@@ -228,6 +228,98 @@ def test_query_timeout_returns_408(spark):
         srv.stop()
 
 
+def test_query_timeout_cancels_only_the_timed_request(spark, tmp_path):
+    """The watchdog cancels the timed request's own Spark jobs, not the
+    shared context's: a bystander job running in another thread returns
+    its full count, and a streaming maintainer on the same session stays
+    active and folds in a file dropped after the 408."""
+    import threading
+    import time
+
+    from pyspark.sql import functions as F
+    from pyspark.sql import types as T
+
+    from inputlayer_spark.engine import IQLEngine
+    from inputlayer_spark.server import QueryServer
+    from inputlayer_spark.streaming.maintainer import IncrementalMaintainer
+
+    schema = T.StructType(
+        [T.StructField("src", T.LongType()), T.StructField("dst", T.LongType())]
+    )
+    src = tmp_path / "in"
+    src.mkdir()
+    stream_eng = IQLEngine(spark)
+    stream_eng.execute("+edge(src: int, dst: int)")
+    m = IncrementalMaintainer(
+        stream_eng, "edge", str(src), schema, str(tmp_path / "ckpt"), refresh=False
+    )
+    m.start(processing_interval="1 second")
+
+    timeout_s = 1.5
+    srv = QueryServer(spark, query_timeout_ms=int(timeout_s * 1000))
+    # 400K x 400K pairs behind a filter no pair passes: the query has no
+    # rows, and uncancelled it runs for minutes of nested-loop work
+    big = spark.range(0, 400_000).select(F.col("id").alias("c0"))
+    srv.engine.register("big_a", big)
+    srv.engine.register("big_b", big)
+
+    # the bystander runs untagged ~1 s jobs back to back until told to
+    # stop, so jobs of its own are running while the watchdog cancels
+    side = spark.range(0, 20_000)
+    pairs = side.crossJoin(side.withColumnRenamed("id", "j")).filter("id + j >= 0")
+    stop = threading.Event()
+    spans, counts, errors = [], [], []
+
+    def bystander():
+        while not stop.is_set():
+            t0 = time.monotonic()
+            try:
+                counts.append(pairs.count())
+            except Exception as exc:  # noqa: BLE001 — asserted below
+                errors.append(exc)
+                return
+            spans.append((t0, time.monotonic()))
+
+    by = threading.Thread(target=bystander, daemon=True)
+    srv.start()
+    try:
+        by.start()
+        req = urllib.request.Request(
+            f"http://127.0.0.1:{srv.port}/query",
+            data=json.dumps({"query": "?big_a(A), big_b(B), A + B < 0"}).encode(),
+            headers={"Content-Type": "application/json"},
+        )
+        sent = time.monotonic()
+        with pytest.raises(urllib.error.HTTPError) as e:
+            urllib.request.urlopen(req, timeout=30)
+        answered = time.monotonic()
+        assert e.value.code == 408
+        assert answered - sent < timeout_s + 8
+        stop.set()
+        by.join(timeout=30)
+        assert not by.is_alive()
+        assert not errors
+        assert counts and set(counts) == {20_000 * 20_000}
+        # some bystander job was in flight while the watchdog cancelled
+        assert any(t0 < answered and t1 > sent + timeout_s for t0, t1 in spans)
+
+        assert m._query.isActive
+        spark.createDataFrame([(3, 4)], schema).coalesce(1).write.mode(
+            "append"
+        ).parquet(str(src))
+        deadline = time.monotonic() + 30
+        while m.batches_seen < 1 and time.monotonic() < deadline:
+            time.sleep(0.2)
+        assert m._query.isActive
+        assert sorted(
+            tuple(r) for r in stream_eng.query("?edge(X, Y)").collect()
+        ) == [(3, 4)]
+    finally:
+        stop.set()
+        srv.stop()
+        m.stop()
+
+
 def test_session_engine_idle_eviction(spark):
     """http.auth.session_timeout_secs: session engines idle past the
     window are evicted (their overlays drop); active ones survive."""
@@ -240,51 +332,7 @@ def test_session_engine_idle_eviction(spark):
     srv._session_last_use["sess-a"] -= 5  # age it past the window
     srv._engine_for("sess-b")  # any other access sweeps
     assert "sess-a" not in srv.sessions
-    srv.stop()  # release the job-source registration
-
-
-def test_watchdog_skips_cancel_with_second_job_source(spark):
-    """ADVICE r7: cancelAllJobs() kills every job on the shared
-    SparkContext. With a second registered job source the watchdog must
-    NOT cancel — the request degrades to a report-only 408 after the
-    query completes, and the bystander's jobs survive."""
-    import pytest
-    from pyspark.sql import functions as F
-
-    from inputlayer_spark.server import QueryServer
-    from inputlayer_spark.session import (
-        register_job_source,
-        sole_job_source,
-        unregister_job_source,
-    )
-
-    srv = QueryServer(spark, query_timeout_ms=400)
-    big = spark.range(0, 3000).select(F.col("id").alias("c0"))
-    srv.engine.register("big_a", big)
-    srv.engine.register("big_b", big)
-    srv.engine.execute("+cross(A, B) <- big_a(A), big_b(B)")
-    other = register_job_source(spark, "bystander-stream")
-    assert not sole_job_source(spark, srv._job_source)
-    srv.start()
-    try:
-        req = urllib.request.Request(
-            f"http://127.0.0.1:{srv.port}/query",
-            data=json.dumps({"query": "?cross(A, B)"}).encode(),
-            headers={"Content-Type": "application/json"},
-        )
-        # the 9M-row cross product RUNS TO COMPLETION (no cancel), then
-        # reports the blown deadline as 408
-        with pytest.raises(urllib.error.HTTPError) as e:
-            urllib.request.urlopen(req, timeout=300)
-        assert e.value.code == 408
-        # a bystander job submitted right after is untouched (nothing
-        # cancelled it while the watchdog was live)
-        assert spark.range(5).count() == 5
-    finally:
-        srv.stop()
-        unregister_job_source(spark, other)
-    # stop() released the server's own registration
-    assert srv._job_source is None
+    srv.stop()
 
 
 def test_session_engines_inherit_config_bindings(spark):
@@ -303,108 +351,3 @@ def test_session_engines_inherit_config_bindings(spark):
     assert eng.agent_llm_version == "2099-01-01"
     assert eng.max_query_cost == 123
     srv.stop()
-
-
-def test_maintainer_restart_does_not_leak_job_source(spark, tmp_path):
-    """start() after a dead stream (no stop()) must not orphan a
-    job-source token — that would permanently disable every watchdog
-    on the context."""
-    from pyspark.sql import types as T
-
-    from inputlayer_spark.engine import IQLEngine
-    from inputlayer_spark.session import (
-        register_job_source,
-        sole_job_source,
-        unregister_job_source,
-    )
-    from inputlayer_spark.streaming.maintainer import IncrementalMaintainer
-
-    src = tmp_path / "in"
-    src.mkdir()
-    eng = IQLEngine(spark)
-    eng.execute("+edge[(1, 2)]")
-    schema = T.StructType(
-        [T.StructField("src", T.LongType()), T.StructField("dst", T.LongType())]
-    )
-    m = IncrementalMaintainer(
-        eng, "edge", str(src), schema, str(tmp_path / "ckpt"), refresh=False
-    )
-    m.process_available()
-    first = m._job_source
-    assert first is None  # process_available stops (and unregisters)
-    q = m.start(processing_interval=None)
-    tok1 = m._job_source
-    q.awaitTermination()
-    # restart WITHOUT stop(): old token must be released, not orphaned
-    q2 = m.start(processing_interval=None)
-    tok2 = m._job_source
-    q2.awaitTermination()
-    assert tok1 != tok2
-    # the maintainer's CURRENT token is registered, the old one is
-    # not: a probe alongside tok2 sees exactly those two (token-level
-    # check — other suites' leftovers must not affect this test)
-    from inputlayer_spark import session as sess_mod
-
-    live = sess_mod._JOB_SOURCES.get(id(spark), {})
-    assert tok2 in live and tok1 not in live
-    m.stop()
-    assert m._job_source is None
-    live = sess_mod._JOB_SOURCES.get(id(spark), {})
-    assert tok2 not in live
-
-
-def test_watchdog_cancel_loop_rechecks_job_sources_every_lap():
-    """ADVICE r8 TOCTOU: the watchdog checked sole_job_source once at
-    the deadline, then looped cancelAllJobs — a bystander registering
-    just after the check had its jobs killed for the rest of the loop.
-    The loop must re-check every lap and bail as soon as a second
-    source appears. Unit-level with a fake context (no timing)."""
-    import threading
-
-    from inputlayer_spark.server import _cancel_until_acknowledged
-    from inputlayer_spark.session import (
-        register_job_source,
-        sole_job_source,
-        unregister_job_source,
-    )
-
-    class FakeCtx:
-        def __init__(self):
-            self.cancels = 0
-
-        def cancelAllJobs(self):
-            self.cancels += 1
-
-    class FakeSpark:
-        def __init__(self):
-            self.sparkContext = FakeCtx()
-
-    fake = FakeSpark()
-    mine = register_job_source(fake, "server")
-    other = [None]
-    done = threading.Event()
-
-    real_cancel = fake.sparkContext.cancelAllJobs
-
-    def cancel_then_register():
-        real_cancel()
-        if fake.sparkContext.cancels == 2:
-            # a maintainer registers mid-loop, AFTER the entry check
-            other[0] = register_job_source(fake, "bystander")
-
-    fake.sparkContext.cancelAllJobs = cancel_then_register
-    try:
-        t = threading.Thread(
-            target=_cancel_until_acknowledged,
-            args=(fake, done, mine, 0.01),
-        )
-        t.start()
-        t.join(timeout=10)
-        assert not t.is_alive()  # bailed out without done being set
-        assert fake.sparkContext.cancels == 2  # no cancel after register
-        assert not sole_job_source(fake, mine)
-    finally:
-        done.set()
-        unregister_job_source(fake, mine)
-        if other[0] is not None:
-            unregister_job_source(fake, other[0])

@@ -70,10 +70,13 @@ class LoggingConfig:
 class PerformanceConfig:
     num_threads: int = 0  # local[N] cores; 0 = SPARK_GRAFT_CPUS / all
     shuffle_partitions: int = 0  # spark.sql.shuffle.partitions; 0 = default
-    max_result_rows: int = 0  # REPL/server row window; 0 = unlimited
-    # server /query watchdog: the request's Spark job tag is cancelled
-    # at the deadline, client gets 408 (QueryServer.query_timeout_ms).
-    # 0 = no timeout
+    # REPL row window; 0 = unlimited. The server ignores it and caps
+    # every reply at server.MAX_WIRE_ROWS
+    max_result_rows: int = 0
+    # server watchdog for read-only programs (/query and WebSocket
+    # `query`): the request's Spark job tag is cancelled at the deadline,
+    # REST answers 408 and WebSocket an error frame with code 408
+    # (QueryServer.query_timeout_ms). 0 = no timeout
     query_timeout_ms: int = 0
     # reject queries whose structural cost estimate exceeds this
     # (engine.max_query_cost; reference lib.rs:1604 check #47). 0 = off

@@ -22,12 +22,17 @@ protocol mirrors src/protocol/rest/handlers/ws.rs:9-23:
     server → {"type": "result", "columns": [...], "rows": [...]}
              {"type": "ack", "message": "..."} | {"type": "pong"}
              {"type": "error", "message": "..."}
+             {"type": "error", "code": 408, "message": "query timed out
+              after Nms"}  (a read-only query past query_timeout_ms)
              Requests may carry an "id"; every reply frame echoes it and
              query replies end with {"type": "done", "id": ..., "frames": N}
              so clients can match multi-frame (multi-statement) replies
              to requests by id instead of FIFO order.
              {"type": "notification", "event": "persistent_update",
               "relation": "..."}  (pushed on engine changes)
+    Every message runs through the same program path as POST /query:
+    the same two-layer authorization and, for a read-only query, the
+    same deadline.
 
 Per-session ephemeral facts/rules ride on a session id: each session id
 gets its own IQLEngine view of the shared SparkSession (the reference's
@@ -42,6 +47,7 @@ from __future__ import annotations
 import base64
 import hashlib
 import json
+import re
 import struct
 import threading
 import uuid
@@ -55,6 +61,17 @@ from inputlayer_spark.engine import IQLEngine
 MAX_WIRE_ROWS = 10_000
 
 _WS_GUID = "258EAFA5-E914-47DA-95CA-C5AB0DC85B11"
+
+# the parser's identifier token (parser.py `ident`)
+_IDENT = re.compile(r"[a-zA-Z_][a-zA-Z0-9_]*")
+
+_HTML = "text/html; charset=utf-8"
+
+
+class QueryTimeout(Exception):
+    """A timed read-only program passed `query_timeout_ms` and its jobs
+    were cancelled. REST answers 408; WebSocket sends an error frame
+    carrying `"code": 408`."""
 
 
 def _df_payload(df) -> dict:
@@ -76,6 +93,22 @@ def _json_val(v):
     if isinstance(v, float) and (v != v or v in (float("inf"), float("-inf"))):
         return None  # serde_json renders non-finite f64 as null
     return v
+
+
+def _facts_program(sign: str, relation, tuples) -> str:
+    """IQL for a WebSocket `insert_facts` (`+rel[(..)]`) or
+    `retract_facts` (`-rel(..)`) message. The relation must be one IQL
+    identifier and every tuple a list, checked before any text is built;
+    JSON-encoded values cannot close the tuple or start a new line, so
+    the client's input stays inside its own statements."""
+    if not isinstance(relation, str) or not _IDENT.fullmatch(relation):
+        raise ValueError(f"invalid relation name {relation!r}")
+    if not isinstance(tuples, list) or not all(isinstance(t, list) for t in tuples):
+        raise ValueError("tuples must be a list of lists")
+    fmt = "+{}[({})]" if sign == "+" else "-{}({})"
+    return "\n".join(
+        fmt.format(relation, ", ".join(json.dumps(v) for v in tup)) for tup in tuples
+    )
 
 
 # ------------------------------------------------------------ websocket
@@ -132,16 +165,18 @@ class QueryServer:
     ):
         """`auth`: optional `inputlayer_spark.auth.AuthStore`. When set,
         every endpoint except `/health` requires a valid API key
-        (`Authorization: Bearer <key>` or `X-API-Key`), and statements
-        are authorized against the key's global role before execution
-        (reference src/auth.rs layer-1 authorization).
+        (`Authorization: Bearer <key>` or `X-API-Key`), and every
+        statement, from `/query` and from each WebSocket message alike,
+        is authorized before execution against the key's global role
+        and its per-KG ACLs (reference src/auth.rs layers 1 and 2).
 
         `query_timeout_ms` (config performance.query_timeout_ms): when
-        > 0, each read-only /query request runs under its own Spark job
-        tag and a watchdog cancels that tag's jobs at the deadline — the
-        client gets 408 instead of holding the writer lock forever, and
-        jobs outside the request (streaming maintainers, other sessions
-        on the same SparkContext) keep running."""
+        > 0, each read-only program, a /query request or a WebSocket
+        `query`, runs under its own Spark job tag and a watchdog cancels
+        that tag's jobs at the deadline. REST answers 408 and WebSocket
+        an error frame with `"code": 408`, instead of holding the writer
+        lock forever; jobs outside the request (streaming maintainers,
+        other sessions on the same SparkContext) keep running."""
         self.spark = spark
         self.engine = IQLEngine(spark)
         self.sessions: Dict[str, IQLEngine] = {}
@@ -171,13 +206,17 @@ class QueryServer:
             def log_message(self, *a):  # quiet
                 pass
 
-            def _send(self, code: int, payload: dict):
-                body = json.dumps(payload).encode()
+            def _send(self, code: int, body, content_type: str = "application/json"):
+                """Send one response. A str body goes out as is under
+                `content_type`; anything else is encoded as JSON."""
+                if not isinstance(body, str):
+                    body = json.dumps(body)
+                data = body.encode()
                 self.send_response(code)
-                self.send_header("Content-Type", "application/json")
-                self.send_header("Content-Length", str(len(body)))
+                self.send_header("Content-Type", content_type)
+                self.send_header("Content-Length", str(len(data)))
                 self.end_headers()
-                self.wfile.write(body)
+                self.wfile.write(data)
 
             def _identity(self):
                 """Resolve the request's AuthIdentity, or None. With no
@@ -208,86 +247,6 @@ class QueryServer:
                     return None
                 return outer.auth.authenticate_api_key(key)
 
-            def _authorize_program(self, identity, engine, text: str):
-                """Two-layer authorization (reference auth.rs:326-345 +
-                handler.rs:4330-4369): layer 1 gates system-level ops by
-                global role; layer 2 resolves each statement's target KG
-                and gates it by the identity's per-KG role — a non-admin
-                with no ACL entry on the target KG is denied outright.
-                `.kg use` that passes moves the current-KG cursor so
-                later statements in the same program check against the
-                right KG.
-
-                Returns the list of KG names the program will NEWLY
-                create — the caller grants the creator owner on them
-                only AFTER the program executes successfully, mirroring
-                handler.rs:4584's switched_kg check. Granting here (or
-                for a KG that already exists — engine create is a
-                setdefault no-op) would let any global editor hijack
-                ownership of an existing KG via `.kg create <name>`."""
-                from inputlayer_spark.auth import (
-                    authorize,
-                    authorize_kg,
-                    target_kg,
-                )
-                from inputlayer_spark.parser import parse_program
-
-                current = engine.current.name
-                existing = set(engine.kgs)
-                pending_grants: list[str] = []
-                for st in parse_program(text).statements:
-                    authorize(identity, st)
-                    args = list(getattr(st, "args", ()))
-                    is_kg_meta = getattr(st, "command", None) == "kg"
-                    if outer.auth is not None and identity.role != "admin":
-                        kg = target_kg(st, current)
-                        if kg is not None:
-                            # a KG this same program creates counts as
-                            # owned for the remainder of the program —
-                            # the grant is deferred to post-execution,
-                            # but 'create foo; use foo; +r(..)' must
-                            # authorize like it will after the grant
-                            if kg in pending_grants:
-                                role = "owner"
-                            else:
-                                role = outer.auth.kg_role_for(kg, identity)
-                            if role is None:
-                                raise PermissionError("Access denied")
-                            authorize_kg(role, st)
-                    if is_kg_meta and len(args) > 1:
-                        if args[0] == "use":
-                            current = args[1]
-                        elif args[0] == "create":
-                            if args[1] not in existing:
-                                existing.add(args[1])
-                                if (
-                                    outer.auth is not None
-                                    and identity.role != "admin"
-                                ):
-                                    pending_grants.append(args[1])
-                        elif args[0] == "drop":
-                            existing.discard(args[1])
-                            if args[1] in pending_grants:
-                                pending_grants.remove(args[1])
-                return pending_grants
-
-            def _apply_creator_grants(self, identity, grants, engine) -> None:
-                """Post-execution owner grants for newly created KGs
-                (handler.rs:4584 grants only on successful create).
-
-                Called from a ``finally`` so that a multi-statement
-                program that creates a KG and then fails on a later
-                statement still grants the creator owner on any KG the
-                engine actually created — otherwise the creator is
-                permanently locked out (re-running `.kg create` is a
-                setdefault no-op and queues no grant). Membership in
-                ``engine.kgs`` is the ground truth for "was created"."""
-                if outer.auth is None or not grants:
-                    return
-                for kg in grants:
-                    if kg in engine.kgs:
-                        outer.auth.grant_kg(kg, identity.username, "owner")
-
             def do_GET(self):
                 if self.path == "/health":
                     self._send(200, {"status": "ok"})
@@ -298,12 +257,7 @@ class QueryServer:
                     # /query and /ws endpoints
                     from inputlayer_spark.gui import render_console
 
-                    body = render_console().encode()
-                    self.send_response(200)
-                    self.send_header("Content-Type", "text/html; charset=utf-8")
-                    self.send_header("Content-Length", str(len(body)))
-                    self.end_headers()
-                    self.wfile.write(body)
+                    self._send(200, render_console(), _HTML)
                     return
                 if self.path == "/front" or self.path.startswith("/front/"):
                     # public marketing/landing site (reference front/ +
@@ -315,12 +269,7 @@ class QueryServer:
                     if page is None:
                         self._send(404, {"error": "no such page"})
                         return
-                    body = page.encode()
-                    self.send_response(200)
-                    self.send_header("Content-Type", "text/html; charset=utf-8")
-                    self.send_header("Content-Length", str(len(body)))
-                    self.end_headers()
-                    self.wfile.write(body)
+                    self._send(200, page, _HTML)
                     return
                 if self.path == "/docs" or self.path.startswith("/docs/"):
                     # user documentation (reference gui/app/docs renders
@@ -336,20 +285,12 @@ class QueryServer:
                     if page is None:
                         self._send(404, {"error": "no such docs page"})
                         return
-                    body = page.encode()
-                    self.send_response(200)
-                    self.send_header(
-                        "Content-Type", "text/markdown; charset=utf-8"
-                    )
-                    self.send_header("Content-Length", str(len(body)))
-                    self.end_headers()
-                    self.wfile.write(body)
+                    self._send(200, page, "text/markdown; charset=utf-8")
                     return
                 ident = self._identity()
                 if ident is None:
                     self._send(401, {"error": "invalid or missing API key"})
                     return
-                self._auth_identity = ident
                 if self.path == "/status":
                     with outer._lock:
                         df = outer.engine.execute(".status")[0]
@@ -359,13 +300,13 @@ class QueryServer:
                     self.path.startswith("/sessions/")
                     and self.path.split("?", 1)[0].endswith("/ws")
                 ):
-                    self._websocket()
+                    self._websocket(ident)
                 else:
                     self._send(404, {"error": "not found"})
 
             # ---------------------------------------------- websocket
 
-            def _websocket(self):
+            def _websocket(self, ident):
                 key = self.headers.get("Sec-WebSocket-Key")
                 if not key or "websocket" not in (
                     self.headers.get("Upgrade", "").lower()
@@ -459,13 +400,13 @@ class QueryServer:
                         except ValueError:
                             send_json({"type": "error", "message": "invalid JSON"})
                             continue
-                        self._ws_dispatch(engine, msg, send_json)
+                        self._ws_dispatch(ident, engine, msg, send_json)
                 finally:
                     outer.engine.unsubscribe("*", on_change)
                     notif_stop.set()
                     notif_thread.join(timeout=1.0)
 
-            def _ws_dispatch(self, engine, msg, send_json):
+            def _ws_dispatch(self, ident, engine, msg, send_json):
                 mtype = msg.get("type")
                 rid = msg.get("id")
                 tag = {} if rid is None else {"id": rid}
@@ -473,25 +414,9 @@ class QueryServer:
                     if mtype == "ping":
                         send_json({"type": "pong", **tag})
                     elif mtype == "query":
-                        with outer._lock:
-                            ws_ident = (
-                                getattr(self, "_auth_identity", None)
-                                or self._identity()
-                            )
-                            grants = self._authorize_program(
-                                ws_ident, engine, msg.get("query", "")
-                            )
-                            # caller identity for identity-aware metas
-                            # (`.apikey create` owner, handler.rs:4433)
-                            engine.auth_identity = ws_ident
-                            try:
-                                dfs = engine.execute(msg.get("query", ""))
-                            finally:
-                                engine.auth_identity = None
-                                self._apply_creator_grants(
-                                    ws_ident, grants, engine
-                                )
-                            payloads = [_df_payload(df) for df in dfs]
+                        payloads = outer._run_program(
+                            ident, engine, msg.get("query", "")
+                        )
                         if payloads:
                             for p in payloads:
                                 send_json({"type": "result", **tag, **p})
@@ -507,31 +432,20 @@ class QueryServer:
                                     "frames": max(len(payloads), 1),
                                 }
                             )
-                    elif mtype == "insert_facts":
-                        rel = msg["relation"]
-                        stmts = []
-                        for tup in msg.get("tuples", []):
-                            vals = ", ".join(json.dumps(v) for v in tup)
-                            stmts.append(f"+{rel}[({vals})]")
-                        with outer._lock:
-                            engine.execute("\n".join(stmts))
-                        send_json(
-                            {
-                                "type": "ack",
-                                **tag,
-                                "message": f"Inserted {len(msg.get('tuples', []))} fact(s) into '{rel}'.",
-                            }
+                    elif mtype in ("insert_facts", "retract_facts"):
+                        rel, tuples = msg.get("relation"), msg.get("tuples", [])
+                        sign = "+" if mtype == "insert_facts" else "-"
+                        outer._run_program(
+                            ident, engine, _facts_program(sign, rel, tuples)
                         )
-                    elif mtype == "retract_facts":
-                        rel = msg["relation"]
-                        with outer._lock:
-                            for tup in msg.get("tuples", []):
-                                vals = ", ".join(json.dumps(v) for v in tup)
-                                engine.execute(f"-{rel}({vals})")
-                        send_json({"type": "ack", **tag, "message": "retracted"})
+                        message = (
+                            f"Inserted {len(tuples)} fact(s) into '{rel}'."
+                            if sign == "+"
+                            else "retracted"
+                        )
+                        send_json({"type": "ack", **tag, "message": message})
                     elif mtype == "add_rule":
-                        with outer._lock:
-                            engine.execute(msg.get("rule", ""))
+                        outer._run_program(ident, engine, msg.get("rule", ""))
                         send_json({"type": "ack", **tag, "message": "rule added"})
                     else:
                         send_json(
@@ -541,6 +455,10 @@ class QueryServer:
                                 "message": f"unknown type {mtype!r}",
                             }
                         )
+                except QueryTimeout as exc:
+                    send_json(
+                        {"type": "error", **tag, "code": 408, "message": str(exc)}
+                    )
                 except Exception as exc:  # noqa: BLE001 — wire errors back
                     send_json({"type": "error", **tag, "message": str(exc)})
 
@@ -563,101 +481,160 @@ class QueryServer:
                 if ident is None:
                     self._send(401, {"error": "invalid or missing API key"})
                     return
-                timed_out = threading.Event()
                 try:
                     n = int(self.headers.get("Content-Length", 0))
                     req = json.loads(self.rfile.read(n) or b"{}")
-                    q = req.get("query", "")
                     engine = outer._engine_for(req.get("session"))
-                    watchdog = None
-                    with outer._lock:
-                        grants = self._authorize_program(ident, engine, q)
-                        engine.auth_identity = ident
-                        timed = False
-                        if outer.query_timeout_ms > 0:
-                            # the watchdog times READ-ONLY programs only:
-                            # cancelling a mutation mid-flight could leave
-                            # partially applied state, and the reference's
-                            # knob is a QUERY timeout
-                            from inputlayer_spark.ast_nodes import (
-                                Query as _Query,
-                            )
-                            from inputlayer_spark.parser import parse_program
-
-                            timed = all(
-                                isinstance(st, _Query)
-                                for st in parse_program(q).statements
-                            )
-                        if timed:
-                            # the request's jobs carry a tag of their own:
-                            # job tags are thread-local and PySpark pins
-                            # each Python thread to one JVM thread, so
-                            # every job this handler thread submits (and
-                            # nothing another thread submits) is tagged
-                            sc = outer.spark.sparkContext
-                            tag = f"iql-query-{uuid.uuid4().hex}"
-                            sc.addJobTag(tag)
-                            done = threading.Event()
-
-                            def _watch():
-                                if done.wait(outer.query_timeout_ms / 1000.0):
-                                    return
-                                timed_out.set()
-                                # cancel REPEATEDLY until the handler
-                                # acknowledges: the engine's fallback
-                                # paths can catch a cancelled job's error
-                                # and submit fresh jobs under the tag
-                                sc.cancelJobsWithTag(tag)
-                                while not done.wait(0.25):
-                                    sc.cancelJobsWithTag(tag)
-
-                            watchdog = threading.Thread(
-                                target=_watch, daemon=True
-                            )
-                            watchdog.start()
-                        try:
-                            results = engine.execute(q)
-                            payload = {
-                                "results": [_df_payload(df) for df in results]
-                            }
-                        finally:
-                            if watchdog is not None:
-                                done.set()
-                                sc.removeJobTag(tag)
-                                watchdog.join(timeout=2)
-                            engine.auth_identity = None
-                            self._apply_creator_grants(ident, grants, engine)
-                    if timed_out.is_set():
-                        # the deadline passed: the request's jobs were
-                        # cancelled, or it finished just after the
-                        # deadline — either way the client gets 408
-                        self._send(
-                            408,
-                            {
-                                "error": "query timed out after "
-                                f"{outer.query_timeout_ms}ms"
-                            },
-                        )
-                        return
-                    self._send(200, payload)
+                    results = outer._run_program(ident, engine, req.get("query", ""))
+                    self._send(200, {"results": results})
                 except PermissionError as exc:
                     self._send(403, {"error": str(exc)})
+                except QueryTimeout as exc:
+                    self._send(408, {"error": str(exc)})
                 except Exception as exc:  # noqa: BLE001 — wire errors back
-                    if timed_out.is_set():
-                        # the cancelled jobs surface as the engine's error
-                        self._send(
-                            408,
-                            {
-                                "error": "query timed out after "
-                                f"{outer.query_timeout_ms}ms"
-                            },
-                        )
-                    else:
-                        self._send(400, {"error": str(exc)})
+                    self._send(400, {"error": str(exc)})
 
         self._httpd = ThreadingHTTPServer((host, port), Handler)
         self.port = self._httpd.server_address[1]
         self._thread: threading.Thread | None = None
+
+    def _authorize_program(self, identity, engine, statements) -> list[str]:
+        """Two-layer authorization (reference auth.rs:326-345 +
+        handler.rs:4330-4369): layer 1 gates system-level ops by
+        global role; layer 2 resolves each statement's target KG
+        and gates it by the identity's per-KG role — a non-admin
+        with no ACL entry on the target KG is denied outright.
+        `.kg use` that passes moves the current-KG cursor so
+        later statements in the same program check against the
+        right KG.
+
+        Returns the list of KG names the program will NEWLY
+        create — the caller grants the creator owner on them
+        only AFTER the program executes successfully, mirroring
+        handler.rs:4584's switched_kg check. Granting here (or
+        for a KG that already exists — engine create is a
+        setdefault no-op) would let any global editor hijack
+        ownership of an existing KG via `.kg create <name>`."""
+        from inputlayer_spark.auth import authorize, authorize_kg, target_kg
+
+        current = engine.current.name
+        existing = set(engine.kgs)
+        pending_grants: list[str] = []
+        for st in statements:
+            authorize(identity, st)
+            args = list(getattr(st, "args", ()))
+            is_kg_meta = getattr(st, "command", None) == "kg"
+            if self.auth is not None and identity.role != "admin":
+                kg = target_kg(st, current)
+                if kg is not None:
+                    # a KG this same program creates counts as
+                    # owned for the remainder of the program —
+                    # the grant is deferred to post-execution,
+                    # but 'create foo; use foo; +r(..)' must
+                    # authorize like it will after the grant
+                    if kg in pending_grants:
+                        role = "owner"
+                    else:
+                        role = self.auth.kg_role_for(kg, identity)
+                    if role is None:
+                        raise PermissionError("Access denied")
+                    authorize_kg(role, st)
+            if is_kg_meta and len(args) > 1:
+                if args[0] == "use":
+                    current = args[1]
+                elif args[0] == "create":
+                    if args[1] not in existing:
+                        existing.add(args[1])
+                        if self.auth is not None and identity.role != "admin":
+                            pending_grants.append(args[1])
+                elif args[0] == "drop":
+                    existing.discard(args[1])
+                    if args[1] in pending_grants:
+                        pending_grants.remove(args[1])
+        return pending_grants
+
+    def _apply_creator_grants(self, identity, grants, engine) -> None:
+        """Post-execution owner grants for newly created KGs
+        (handler.rs:4584 grants only on successful create).
+
+        Called from a ``finally`` so that a multi-statement
+        program that creates a KG and then fails on a later
+        statement still grants the creator owner on any KG the
+        engine actually created — otherwise the creator is
+        permanently locked out (re-running `.kg create` is a
+        setdefault no-op and queues no grant). Membership in
+        ``engine.kgs`` is the ground truth for "was created"."""
+        if self.auth is None or not grants:
+            return
+        for kg in grants:
+            if kg in engine.kgs:
+                self.auth.grant_kg(kg, identity.username, "owner")
+
+    def _run_program(self, ident, engine, text: str) -> list:
+        """Run one client IQL program for `ident` and return one
+        `_df_payload` per result. Every REST and WebSocket statement
+        comes through here: the program is parsed once, every statement
+        is authorized, and it runs under the writer lock with the
+        caller's identity set (identity-aware metas such as `.apikey
+        create` read it, handler.rs:4433). Raises PermissionError when
+        a statement is denied and QueryTimeout when a timed program
+        passes its deadline."""
+        from inputlayer_spark.ast_nodes import Query
+        from inputlayer_spark.parser import parse_program
+
+        statements = parse_program(text).statements
+        timed_out = threading.Event()
+        watchdog = None
+        with self._lock:
+            grants = self._authorize_program(ident, engine, statements)
+            engine.auth_identity = ident
+            # the watchdog times READ-ONLY programs only: cancelling a
+            # mutation mid-flight could leave partially applied state,
+            # and the reference's knob is a QUERY timeout
+            if self.query_timeout_ms > 0 and all(
+                isinstance(st, Query) for st in statements
+            ):
+                # the request's jobs carry a tag of their own: job tags
+                # are thread-local and PySpark pins each Python thread to
+                # one JVM thread, so every job this handler thread
+                # submits (and nothing another thread submits) is tagged
+                sc = self.spark.sparkContext
+                tag = f"iql-query-{uuid.uuid4().hex}"
+                sc.addJobTag(tag)
+                done = threading.Event()
+
+                def _watch():
+                    if done.wait(self.query_timeout_ms / 1000.0):
+                        return
+                    timed_out.set()
+                    # cancel REPEATEDLY until the handler acknowledges:
+                    # the engine's fallback paths can catch a cancelled
+                    # job's error and submit fresh jobs under the tag
+                    sc.cancelJobsWithTag(tag)
+                    while not done.wait(0.25):
+                        sc.cancelJobsWithTag(tag)
+
+                watchdog = threading.Thread(target=_watch, daemon=True)
+                watchdog.start()
+            try:
+                payloads = [_df_payload(df) for df in engine.execute(text)]
+            except Exception:
+                # past the deadline the cancelled jobs surface as the
+                # engine's error; the timeout is the answer
+                if not timed_out.is_set():
+                    raise
+            finally:
+                if watchdog is not None:
+                    done.set()
+                    sc.removeJobTag(tag)
+                    watchdog.join(timeout=2)
+                engine.auth_identity = None
+                self._apply_creator_grants(ident, grants, engine)
+        if timed_out.is_set():
+            # the jobs were cancelled, or the program finished just after
+            # the deadline — either way the client gets the timeout
+            raise QueryTimeout(f"query timed out after {self.query_timeout_ms}ms")
+        return payloads
 
     def _engine_for(self, session_id) -> IQLEngine:
         """Session engines share the KG dict (shared base relations +

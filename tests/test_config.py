@@ -191,8 +191,8 @@ def test_magic_sets_and_join_planning_toggles(spark):
 
 def test_query_timeout_returns_408(spark):
     """performance.query_timeout_ms: the /query watchdog cancels the
-    request's Spark job group at the deadline and the client gets 408;
-    subsequent fast queries still succeed."""
+    jobs under the request's Spark job tag at the deadline and the
+    client gets 408; subsequent fast queries still succeed."""
     import pytest
     from pyspark.sql import functions as F
 
@@ -318,6 +318,65 @@ def test_query_timeout_cancels_only_the_timed_request(spark, tmp_path):
         stop.set()
         srv.stop()
         m.stop()
+
+
+def test_websocket_query_timeout(spark):
+    """A read-only WebSocket `query` gets performance.query_timeout_ms
+    like /query: at the deadline its jobs are cancelled and the socket
+    gets an error frame with code 408 that echoes the request id, and a
+    /query sent meanwhile from another thread answers with its rows."""
+    import threading
+    import time
+
+    from pyspark.sql import functions as F
+
+    from inputlayer_spark.server import QueryServer
+    from tests.test_server_sources import _WsClient
+
+    timeout_s = 1.5
+    srv = QueryServer(spark, query_timeout_ms=int(timeout_s * 1000))
+    # the same 400K x 400K cross product behind an always-false filter
+    # as the /query test above: uncancelled it runs for minutes
+    big = spark.range(0, 400_000).select(F.col("id").alias("c0"))
+    srv.engine.register("big_a", big)
+    srv.engine.register("big_b", big)
+    srv.engine.execute("+ok[(1)]")
+    rest = {}
+
+    def rest_query():
+        req = urllib.request.Request(
+            f"http://127.0.0.1:{srv.port}/query",
+            data=json.dumps({"query": "?ok(X)"}).encode(),
+            headers={"Content-Type": "application/json"},
+        )
+        with urllib.request.urlopen(req, timeout=60) as resp:
+            rest["status"] = resp.status
+            rest["rows"] = json.loads(resp.read())["results"][0]["rows"]
+
+    srv.start()
+    try:
+        ws = _WsClient(srv.port)
+        ws.send(
+            {"type": "query", "id": "slow", "query": "?big_a(A), big_b(B), A + B < 0"}
+        )
+        sent = time.monotonic()
+        time.sleep(0.3)
+        other = threading.Thread(target=rest_query, daemon=True)
+        other.start()
+        frame = ws.recv()
+        answered = time.monotonic()
+        assert frame == {
+            "type": "error",
+            "id": "slow",
+            "code": 408,
+            "message": "query timed out after 1500ms",
+        }
+        assert answered - sent < timeout_s + 8
+        other.join(timeout=60)
+        assert rest == {"status": 200, "rows": [[1]]}
+        ws.close()
+    finally:
+        srv.stop()
 
 
 def test_session_engine_idle_eviction(spark):

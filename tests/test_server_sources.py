@@ -687,6 +687,84 @@ def test_server_per_kg_acls(spark, tmp_path):
         srv.stop()
 
 
+def _ws_ticket(port, key):
+    req = urllib.request.Request(
+        f"http://127.0.0.1:{port}/ws_ticket",
+        data=b"{}",
+        headers={"Authorization": f"Bearer {key}"},
+    )
+    with urllib.request.urlopen(req) as resp:
+        return json.loads(resp.read())["ticket"]
+
+
+def test_websocket_writes_are_authorized_like_query(spark, tmp_path):
+    """Every WebSocket message passes the same two-layer authorization
+    as /query: a KG viewer's insert_facts, retract_facts, add_rule and a
+    query carrying a write each get an error frame, a `relation` that
+    smuggles in statements or a non-list tuple is rejected before any
+    IQL is built, and none of it lands."""
+    from inputlayer_spark.auth import AuthStore
+
+    store_path = str(tmp_path / "creds.json")
+    store = AuthStore(store_path)
+    store.add_user("root", "pw", role="admin")
+    store.add_user("vic", "pw", role="viewer")
+    admin_key = store.issue_api_key("root")
+    viewer_key = store.issue_api_key("vic")
+    store.grant_kg("default", "vic", "viewer")
+
+    srv = QueryServer(spark, auth=AuthStore(store_path)).start()
+    try:
+        _post_auth(srv.port, {"query": "+t[(1)]"}, key=admin_key)
+
+        def state():
+            return [
+                _post_auth(srv.port, {"query": q}, key=admin_key)["results"]
+                for q in ("?t(X)", ".rule list", ".kg list")
+            ]
+
+        before = state()
+        ws = _WsClient(
+            srv.port, path=f"/ws?ticket={_ws_ticket(srv.port, viewer_key)}"
+        )
+
+        def reply(msg):
+            """First reply frame to `msg`, skipping pushed notifications
+            and the `done` marker that ends an earlier query's reply."""
+            ws.send(msg)
+            while True:
+                m = ws.recv()
+                if m["type"] not in ("notification", "done"):
+                    assert m.get("id") == msg["id"]
+                    return m
+
+        # the viewer still reads
+        assert reply({"type": "query", "id": 0, "query": "?t(X)"})["rows"] == [[1]]
+        writes = [
+            {"type": "insert_facts", "relation": "t", "tuples": [[2]]},
+            {"type": "retract_facts", "relation": "t", "tuples": [[1]]},
+            {"type": "add_rule", "rule": "+u(X) <- t(X)"},
+            {"type": "query", "query": "+t[(3)]"},
+        ]
+        for i, msg in enumerate(writes, start=1):
+            m = reply({**msg, "id": i})
+            assert m["type"] == "error" and "viewer access" in m["message"], m
+        malformed = [
+            {
+                "type": "insert_facts",
+                "relation": "t[(5)]\n.kg create pwned\n+u",
+                "tuples": [[6]],
+            },
+            {"type": "retract_facts", "relation": "t", "tuples": [1]},
+        ]
+        for i, msg in enumerate(malformed, start=10):
+            assert reply({**msg, "id": i})["type"] == "error"
+        ws.close()
+        assert state() == before
+    finally:
+        srv.stop()
+
+
 def test_engine_orc_roundtrip(spark, tmp_path):
     eng = IQLEngine(spark)
     eng.execute('+r[(1, "a"), (2, "b")]')

@@ -51,6 +51,7 @@ from inputlayer_spark.parser import ParseError, parse_program
 from inputlayer_spark.magic_sets import (
     magic_rewrite,
     seeded_tc_closure,
+    tc_adjacency,
     tc_bfs_shape,
 )
 from inputlayer_spark.recursion import (
@@ -217,6 +218,10 @@ class IQLEngine:
         # queries load-and-probe (operators/hnsw.py ShardedHnswIndex)
         self._sharded_hnsw: Dict[Tuple[str, str], "object"] = {}
         self._hnsw_shard_gen = 0  # unique build dirs across rebuilds
+        # (kg, edge relation, forward) -> (edge frame, head_epoch stamp,
+        # tc_adjacency result): the driver-side arrangement that bound
+        # reads over a transitive closure reuse (_edge_adjacency)
+        self._adjacency: Dict[Tuple[str, str, bool], tuple] = {}
         # write-ahead statement log + snapshot dir: when set, persistent
         # mutations are appended durably and replayed on startup over the
         # last snapshot (reference src/storage/persist/wal.rs:76-122,
@@ -680,12 +685,10 @@ class IQLEngine:
                     "tuples had type/arity errors"
                 )
         rows = [_coerce_row(r, schema) for r in rows]
-        # Literal-fact frames are pinned JVM-side (small_local_df): a
-        # Python-list LocalRelation re-pays ~1.3s of serialization +
-        # planning on EVERY downstream action; a checkpointed
-        # single-partition RDD leaf costs ~0.15s. Fact relations are read
-        # many times per script — one eager job at insert time buys back
-        # an order of magnitude on every query.
+        # Literal-fact frames are Arrow-built JVM leaves (small_local_df):
+        # no job at insert time and no Python worker on later reads. A
+        # Python-list createDataFrame would re-run a Python worker on
+        # every downstream action (300-520 ms each, measured).
         df = small_local_df(self.spark, rows, schema)
         delta_df, old_base = df, None
         if rel in self.current.relations:
@@ -1379,10 +1382,6 @@ class IQLEngine:
     def _all_rules(self) -> List[Rule]:
         return list(self.current.rules) + list(self.session_rules)
 
-    def _materialize_all(self) -> Dict[str, DataFrame]:
-        """Evaluate every derived relation (all strata, topo order)."""
-        return self._materialize_for(None)
-
     def _materialize_for(
         self, targets: Optional[set], skip: frozenset = frozenset()
     ) -> Dict[str, DataFrame]:
@@ -1568,6 +1567,27 @@ class IQLEngine:
             self.current.head_epoch.get(target, 0) if epoch is None else epoch
         )
 
+    def _edge_adjacency(self, edge_rel: str, forward: bool):
+        """The edge frame of a bound transitive-closure read and its
+        driver-side adjacency (`tc_adjacency`), kept across reads: the
+        small-relation form of the reference's arrangements. An entry
+        serves while the relation's head_epoch equals the one taken
+        before its frame was resolved (as in _stamp_artifact) and the
+        relation still resolves to that same frame; the second check
+        also covers rule drops and a re-created KG, which do not bump
+        the epoch. A relation with session facts is rebuilt on every
+        read, so it is not cached."""
+        key = (self.current.name, edge_rel, forward)
+        stamp = self.current.head_epoch.get(edge_rel, 0)
+        edge_df = self._resolver(self._materialize_for({edge_rel}))(edge_rel)
+        ent = self._adjacency.get(key)
+        if ent is not None and ent[0] is edge_df and ent[1] == stamp:
+            return edge_df, ent[2]
+        adjacency = tc_adjacency(edge_df, forward)
+        if edge_rel not in self.session_facts:
+            self._adjacency[key] = (edge_df, stamp, adjacency)
+        return edge_df, adjacency
+
     def _artifact_stale(self, key: Tuple[str, str]) -> bool:
         """True when a write from another engine sharing this KG dirtied
         the artifact's target relation since it was built."""
@@ -1608,11 +1628,12 @@ class IQLEngine:
 
     @staticmethod
     def _is_materialized(df: DataFrame) -> bool:
-        """True when the frame is an RDD-backed leaf (localCheckpoint
-        output) rather than a lazy plan over base tables."""
+        """True when the frame is a leaf holding its rows: an RDD-backed
+        localCheckpoint output or a driver-built LocalRelation
+        (small_local_df), rather than a lazy plan over base tables."""
         try:
             plan = df._jdf.queryExecution().optimizedPlan()
-            return plan.getClass().getSimpleName() == "LogicalRDD"
+            return plan.getClass().getSimpleName() in ("LogicalRDD", "LocalRelation")
         except Exception:
             return False
 
@@ -2201,14 +2222,11 @@ class IQLEngine:
         if df is None:
             if name in self.session_facts:
                 rows = self.session_facts[name]
-                return self.spark.createDataFrame(
-                    rows, schema=_infer_schema(rows)
-                ).coalesce(1)
+                return small_local_df(self.spark, rows, _infer_schema(rows))
             return None
         if name in self.session_facts:
-            rows = self.session_facts[name]
             df = df.unionByName(
-                self.spark.createDataFrame(rows, schema=df.schema).coalesce(1)
+                small_local_df(self.spark, self.session_facts[name], df.schema)
             )
         return df
 
@@ -2219,17 +2237,14 @@ class IQLEngine:
             if name in self.current.relations:
                 df = self.current.relations[name]
                 if name in self.session_facts:
-                    rows = self.session_facts[name]
                     df = df.unionByName(
-                        self.spark.createDataFrame(rows, schema=df.schema).coalesce(1)
+                        small_local_df(self.spark, self.session_facts[name], df.schema)
                     )
                 return df
             if name in self.session_facts:
                 # session-only relation (bare facts, no persistent base)
                 rows = self.session_facts[name]
-                return self.spark.createDataFrame(
-                    rows, schema=_infer_schema(rows)
-                ).coalesce(1)
+                return small_local_df(self.spark, rows, _infer_schema(rows))
             if name in self.current.empty_relations:
                 raise EmptyAritylessRelation(f"empty relation {name}")
             # Unknown relations behave as empty, not as errors: querying a
@@ -2527,9 +2542,8 @@ class IQLEngine:
         shape = tc_bfs_shape(goal, rules, scc_members)
         if shape is not None:
             edge_rel, forward, seed_val, _other = shape
-            derived = self._materialize_for({edge_rel})
-            edge_df = self._resolver(derived)(edge_rel)
-            out = seeded_tc_closure(edge_df, seed_val, forward)
+            edge_df, adjacency = self._edge_adjacency(edge_rel, forward)
+            out = seeded_tc_closure(edge_df, seed_val, forward, adjacency)
             if not forward:
                 # closure returns (seed, reached); ?p(X, const) wants
                 # (reached, seed) positionally
@@ -2839,7 +2853,7 @@ class IQLEngine:
         from inputlayer_spark.operators.hnsw import HnswGraph, ShardedHnswIndex
 
         try:
-            df = self._resolver(self._derived_for_index())(relation)
+            df = self._resolver(self._derived_for_index(relation))(relation)
             if column not in df.columns:
                 return None
             id_col = df.columns[0]
@@ -2906,7 +2920,7 @@ class IQLEngine:
         from inputlayer_spark.operators.similarity import lsh_index
 
         try:
-            df = self._resolver(self._derived_for_index())(relation)
+            df = self._resolver(self._derived_for_index(relation))(relation)
             if column not in df.columns:
                 return None
             idx = lsh_index(
@@ -2947,7 +2961,7 @@ class IQLEngine:
         from inputlayer_spark.functions import vector as V
 
         try:
-            df = self._resolver(self._derived_for_index())(relation)
+            df = self._resolver(self._derived_for_index(relation))(relation)
             if column not in df.columns:
                 return None, None
             cell = next(
@@ -2992,7 +3006,7 @@ class IQLEngine:
             # the query variable and corpus column names
             queries = acc.select(F.col(qname).alias("__hq")).distinct()
             if idx is None:
-                corpus = self._resolver(self._derived_for_index())(relation)
+                corpus = self._resolver(self._derived_for_index(relation))(relation)
                 cand = corpus.select(
                     F.col(corpus.columns[0]).alias("__hid"),
                     F.col(column).alias("__hv"),
@@ -3119,7 +3133,7 @@ class IQLEngine:
                 F.col("id").alias(h.id_var.name), F.col("dist").alias(h.dist_var.name)
             )
         # fallback: exact scan (reference's non-indexed resolve path)
-        df = self._resolver(self._derived_for_index())(relation)
+        df = self._resolver(self._derived_for_index(relation))(relation)
         id_col = F.col(df.columns[0])
         vec_col = sql_ident(column if column in df.columns else df.columns[1])
         dist = F.expr(V.distance(metric, vec_col, V.vec_literal(qvals)))
@@ -3129,12 +3143,10 @@ class IQLEngine:
             .limit(h.k)
         )
 
-    def _derived_for_index(self) -> Dict[str, DataFrame]:
-        # indexes may target derived relations; materialize lazily
-        try:
-            return self._materialize_all()
-        except Exception:
-            return {}
+    def _derived_for_index(self, relation: str) -> Dict[str, DataFrame]:
+        # indexes may target derived relations; materialize only the
+        # indexed one and what it depends on
+        return self._materialize_for({relation})
 
     # ------------------------------------------------------------ meta
 
@@ -3199,7 +3211,7 @@ class IQLEngine:
                     except Exception:
                         pass
                     self._shared_frames.pop(key, None)
-                for cache in (self._hnsw_graphs, self._ivf_cents):
+                for cache in (self._hnsw_graphs, self._ivf_cents, self._adjacency):
                     for key in [k for k in cache if k[0] == args[1]]:
                         cache.pop(key, None)
                 for key in [k for k in self._sharded_hnsw if k[0] == args[1]]:

@@ -172,14 +172,40 @@ def tc_bfs_shape(
     return edge_rel, False, consts[1], None
 
 
+def tc_adjacency(edge_df, forward: bool) -> Optional[Dict]:
+    """Driver-side adjacency of a 2-column edge frame for
+    `seeded_tc_closure`: normalized source key -> reached targets, read
+    with one limit-pushdown collect. None when the relation holds more
+    than `_local_fixpoint_max()` rows; the distributed path runs then.
+    Edges with a null endpoint never join, so they are left out."""
+    from inputlayer_spark.recursion import _local_fixpoint_max, _norm_key
+
+    cols = edge_df.columns
+    s, t = (cols[0], cols[1]) if forward else (cols[1], cols[0])
+    lmax = _local_fixpoint_max()
+    rows = edge_df.select(edge_df[s], edge_df[t]).limit(lmax + 1).collect()
+    if len(rows) > lmax:
+        return None
+    adj: Dict = {}
+    for a, b in rows:
+        if a is not None and b is not None:
+            adj.setdefault(_norm_key((a,))[0], []).append(b)
+    return adj
+
+
 def seeded_tc_closure(
     edge_df,
     seed_value,
     forward: bool = True,
+    adjacency: Optional[Dict] = None,
     growth_cap: int = 32,
 ):
-    """Single-source reachability over `edge_df` (2 columns) by blocked
-    path doubling: square the step relation while it stays under
+    """Single-source reachability over `edge_df` (2 columns).
+
+    With `adjacency` (from `tc_adjacency`: the edge list fits the driver)
+    it is a BFS in Python whose answer becomes a driver-built leaf, the
+    broadcast-threshold principle. Otherwise it runs blocked path
+    doubling: square the step relation while it stays under
     `growth_cap`x the edge count (on a path-like graph S^(<=2^k) grows
     linearly, so squaring is cheap and each BFS job then advances up to
     2^k hops), then frontier-BFS with the widened step. Deep chains take
@@ -204,23 +230,12 @@ def seeded_tc_closure(
         e_raw["s"].alias("c0"), e_raw["t"].alias("c1")
     ).filter(F.lit(False))
 
-    # small graphs: pull the edge list straight into the driver (one
-    # limit-pushdown job) and BFS in Python — the broadcast-threshold
-    # principle. Distributed blocked doubling below is the 100TB path.
-    from inputlayer_spark.recursion import _local_fixpoint_max, _norm_key
-    from inputlayer_spark.session import small_local_df
+    if adjacency is not None:
+        from inputlayer_spark.recursion import _norm_key
+        from inputlayer_spark.session import small_local_df
 
-    lmax = _local_fixpoint_max()
-    head_rows = e_raw.limit(lmax + 1).collect()
-    if len(head_rows) <= lmax:
-        adj = {}
-        for r in head_rows:
-            s, t = r[0], r[1]
-            if s is None or t is None:
-                continue
-            adj.setdefault(_norm_key((s,))[0], []).append(t)
         visited_local = set()
-        frontier_local = adj.get(_norm_key((seed_value,))[0], [])
+        frontier_local = adjacency.get(_norm_key((seed_value,))[0], [])
         while frontier_local:
             nxt = []
             for v in frontier_local:
@@ -228,7 +243,7 @@ def seeded_tc_closure(
                 if key in visited_local:
                     continue
                 visited_local.add(key)
-                nxt.extend(adj.get(key, ()))
+                nxt.extend(adjacency.get(key, ()))
             frontier_local = nxt
         if not visited_local:
             return empty

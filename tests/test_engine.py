@@ -455,6 +455,35 @@ def test_hnsw_index_artifact_and_bound_query(engine):
     assert [g[0] for g in got2] == [4]
 
 
+def test_index_build_materializes_only_its_target(engine, monkeypatch):
+    """An index read resolves its corpus demand-driven: a recursive view
+    the index does not read stays unevaluated, and a failing derivation
+    of the indexed relation raises instead of reading as empty."""
+    engine.execute("+emb(id: int, v: vector)")
+    engine.execute("+emb[(1, [1.0, 0.0]), (2, [0.0, 1.0])]")
+    engine.execute("+edge[(1, 2), (2, 3)]")
+    engine.execute("+reach(X, Y) <- edge(X, Y)\n+reach(X, Z) <- edge(X, Y), reach(Y, Z)")
+    engine.execute(".index create vidx on emb(v) type hnsw")
+    got = rows(engine.query('?n(Id, D), hnsw_nearest("vidx", [1.0, 0.0], 1, Id, D)'))
+    assert [g[0] for g in got] == [1]
+    assert "reach" not in engine._derived_cache
+
+    import inputlayer_spark.engine as engine_mod
+
+    real = engine_mod.evaluate_scc
+
+    def failing(scc, *args, **kwargs):
+        if "vemb" in scc:
+            raise RuntimeError("vemb failed")
+        return real(scc, *args, **kwargs)
+
+    monkeypatch.setattr(engine_mod, "evaluate_scc", failing)
+    engine.execute("+vemb(I, V) <- emb(I, V)")
+    engine.create_index("vidx2", "vemb", "c1", kind="hnsw")
+    with pytest.raises(RuntimeError, match="vemb failed"):
+        engine.query('?m(Id, D), hnsw_nearest("vidx2", [1.0, 0.0], 1, Id, D)').collect()
+
+
 def test_hnsw_typed_index_exact_search_and_tombstone_delete(engine):
     """`.index create ... type hnsw` builds the reference's exact
     in-process graph (src/hnsw_index.rs) instead of the LSH artifact;
@@ -705,8 +734,9 @@ def test_goal_query_derived_plan_has_no_distinct(engine):
     """Plan pin: ?view(X, Y) over a MATERIALIZED (checkpoint-pinned)
     derived extent must not re-shuffle the view through a distinct —
     the re-query of a pinned 1M-pair closure is metadata-only (bench
-    incr_recursive_* rows). Recursive views pin their fixpoint output,
-    so the cached extent is a bare LogicalRDD; the query on top must
+    incr_recursive_* rows). Recursive views hold their fixpoint output
+    as a leaf (a checkpointed LogicalRDD, or a LocalRelation when a
+    small closure was computed on the driver); the query on top must
     add only a projection. A registered base frame keeps the distinct
     (users can register duplicate-bearing DataFrames)."""
     engine.execute("+e[(1, 2), (2, 3), (3, 4)]")

@@ -667,8 +667,8 @@ def q_shortest_path(spark, sf_dir):
 
 def q_incr_agg_delta(spark, sf_dir):
     """Materialized sum/count view maintained through an insert delta
-    AND a conditional-delete delta (engine._insert_maintain /
-    _retract_maintain → try_delta_merge O(delta) paths; reference
+    AND a conditional-delete delta (engine._maintain → try_delta_merge /
+    try_delta_retract O(delta) paths; reference
     differential update src/incremental.rs:26-41). The oracle computes
     the same FINAL state from scratch; the paired test
     test_insert_then_delete_maintenance_sequence proves the engine side

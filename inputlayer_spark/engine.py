@@ -54,6 +54,9 @@ from inputlayer_spark.magic_sets import (
     tc_adjacency,
     tc_bfs_shape,
 )
+# maintenance calls recursion.seminaive_insert / dred_retract through the
+# module, so a wrapper installed on it (tests, perfbench) sees each call
+from inputlayer_spark import recursion
 from inputlayer_spark.recursion import (
     StratificationError,
     condensation,
@@ -103,6 +106,14 @@ def _new_rlock():
     import threading
 
     return threading.RLock()
+
+
+def _unpersist(df: DataFrame) -> None:
+    # best-effort release: it fails only when the JVM gateway is gone
+    try:
+        df.unpersist()
+    except Exception:
+        pass
 
 
 @dataclass
@@ -248,19 +259,10 @@ class IQLEngine:
         self.current.relations[name] = df
         self._invalidate(name)
 
-    def _invalidate(self, relation: str, keep_indexes: Optional[set] = None) -> None:
-        """Cascade invalidation: drop cached derivations that (transitively)
-        depend on `relation` — the reference's base→derived / derived→
-        derived invalidation maps (src/derived_relations.rs:50-65,
-        docs/internals/architecture.md:167-193). Untouched derivations
-        keep their (possibly checkpointed) materializations.
-
-        `keep_indexes`: (kg, index-name) keys whose in-memory artifact was
-        already maintained in place for this write (tombstoned HNSW
-        graphs) and must survive the cascade."""
-        rules = self._all_rules()
+    def _dependents(self, relation: str) -> set:
+        """Heads that read `relation` through some chain of rule bodies."""
         rev: Dict[str, set] = {}
-        for r in rules:
+        for r in self._all_rules():
             for lit in r.body:
                 if isinstance(lit, Atom):
                     rev.setdefault(lit.relation, set()).add(r.head.relation)
@@ -272,7 +274,19 @@ class IQLEngine:
                 if head not in dirty:
                     dirty.add(head)
                     frontier.append(head)
-        dirty.add(relation)
+        return dirty
+
+    def _invalidate(self, relation: str, keep_indexes: Optional[set] = None) -> None:
+        """Cascade invalidation: drop cached derivations that (transitively)
+        depend on `relation` — the reference's base→derived / derived→
+        derived invalidation maps (src/derived_relations.rs:50-65,
+        docs/internals/architecture.md:167-193). Untouched derivations
+        keep their (possibly checkpointed) materializations.
+
+        `keep_indexes`: (kg, index-name) keys whose in-memory artifact was
+        already maintained in place for this write (tombstoned HNSW
+        graphs) and must survive the cascade."""
+        dirty = self._dependents(relation) | {relation}
         self.current.epoch += 1
         for head in dirty:
             self.current.head_epoch[head] = self.current.epoch
@@ -284,10 +298,7 @@ class IQLEngine:
             if kg == self.current.name:
                 target = self.current.indexes.get(iname, (None,))[0]
                 if target in dirty:
-                    try:
-                        frame.unpersist()
-                    except Exception:
-                        pass
+                    _unpersist(frame)
                     self._index_frames.pop((kg, iname), None)
         for (kg, iname) in list(self._hnsw_graphs):
             if kg == self.current.name and (kg, iname) not in (keep_indexes or ()):
@@ -309,10 +320,7 @@ class IQLEngine:
             if kg == self.current.name:
                 target = self.current.indexes.get(iname, (None,))[0]
                 if target in dirty:
-                    try:
-                        frame.unpersist()
-                    except Exception:
-                        pass
+                    _unpersist(frame)
                     self._ivf_frames.pop((kg, iname), None)
                     self._ivf_cents.pop((kg, iname), None)
         for rel in dirty:
@@ -324,7 +332,7 @@ class IQLEngine:
                 try:
                     cb(rel)
                 except Exception:
-                    pass
+                    pass  # a listener's failure must not fail the write
 
     def subscribe(self, relation: str, callback) -> None:
         """Register a change listener: `callback(relation_name)` fires when
@@ -673,26 +681,24 @@ class IQLEngine:
                 # double — IQL relations are dynamically typed (golden
                 # 11_types/18_mixed_numeric_types.iql).
                 schema = _widen_schema(self.current.relations[rel].schema, schema)
-        else:
-            # Declared schemas are enforced: a batch with any type
-            # mismatch is rejected WHOLE (golden 12_errors/29: "Insert
-            # rejected for 'typed_rel': batch of 1 tuples had type/arity
-            # errors"). int→float widening is the only allowed coercion.
-            bad = sum(0 if _row_matches_schema(r, schema) else 1 for r in rows)
-            if bad:
-                raise CompileError(
-                    f"Insert rejected for '{rel}': batch of {len(rows)} "
-                    "tuples had type/arity errors"
-                )
+        # A batch with any type mismatch against the declared or inferred
+        # schema is rejected WHOLE (golden 12_errors/29: "Insert rejected
+        # for 'typed_rel': batch of 1 tuples had type/arity errors").
+        # int→float widening is the only allowed coercion.
+        bad = sum(0 if _row_matches_schema(r, schema) else 1 for r in rows)
+        if bad:
+            raise CompileError(
+                f"Insert rejected for '{rel}': batch of {len(rows)} "
+                "tuples had type/arity errors"
+            )
         rows = [_coerce_row(r, schema) for r in rows]
         # Literal-fact frames are Arrow-built JVM leaves (small_local_df):
         # no job at insert time and no Python worker on later reads. A
         # Python-list createDataFrame would re-run a Python worker on
         # every downstream action (300-520 ms each, measured).
         df = small_local_df(self.spark, rows, schema)
-        delta_df, old_base = df, None
-        if rel in self.current.relations:
-            old = self.current.relations[rel]
+        delta_df, old = df, self.current.relations.get(rel)
+        if old is not None:
             if [f.dataType for f in old.schema.fields] != [
                 f.dataType for f in schema.fields
             ]:
@@ -703,24 +709,55 @@ class IQLEngine:
                     ]
                 )
             # both sides are pinned leaves; the union scans them directly
-            delta_df, old_base = df.toDF(*old.columns), old
+            delta_df = df.toDF(*old.columns)
             df = old.unionByName(delta_df)
-        self.current.relations[rel] = df
+        self._commit_write(rel, df, old, delta_df)
         self.current.empty_relations.discard(rel)
-        # incremental insertion first (mirror of the delete path's
-        # _retract_maintain): qualifying aggregate views merge the delta
-        # rows (try_delta_merge), positive recursive SCC fixpoints extend
-        # semi-naively from the delta (seminaive_insert) — then the
-        # cascade wipes the cache and the maintained views re-seed it, so
-        # the next query over a view with a million-tuple extent pays
-        # O(delta), not a recompute (reference differential update,
-        # src/incremental.rs:26-34; BENCHMARKS.md:50-66).
-        maintained: Dict[str, DataFrame] = {}
-        if old_base is not None:
-            maintained = self._insert_maintain(rel, delta_df, old_base)
-        self._invalidate(rel)
-        for h, v in maintained.items():
-            self._cache_view(h, v)
+
+    def _commit_write(
+        self,
+        rel: str,
+        new_base: DataFrame,
+        old_base: Optional[DataFrame],
+        delta: DataFrame,
+        retract: bool = False,
+    ) -> Dict[str, DataFrame]:
+        """The one commit point of a base-relation write (fact batch,
+        delete, stream micro-batch): swap `new_base` in, maintain the
+        cached views over `rel` from the `delta` rows (`_maintain`;
+        `old_base` is the previous extent, None for a new relation),
+        tombstone deleted ids into live HNSW graphs, run the invalidation
+        cascade, then re-seed the cache with the maintained views, so the
+        next read of a view with a million-tuple extent pays O(delta)
+        (reference differential update, src/incremental.rs:26-41).
+
+        If any step raises, the previous base is put back, the cascade
+        drops every view the write may have touched, and the error
+        propagates: the write is not applied, and since the WAL logs a
+        statement only after it returns, it leaves no record. Returns
+        {head: maintained view}."""
+        prior = self.current.relations.get(rel)
+        self.current.relations[rel] = new_base
+        try:
+            maintained = (
+                {} if old_base is None
+                else self._maintain(rel, delta, old_base, retract)
+            )
+            kept = (
+                self._hnsw_tombstone(rel, delta.select(delta.columns[0]))
+                if retract else set()
+            )
+            self._invalidate(rel, keep_indexes=kept)
+            for h, v in maintained.items():
+                self._cache_view(h, v)
+        except BaseException:
+            if prior is None:
+                self.current.relations.pop(rel, None)
+            else:
+                self.current.relations[rel] = prior
+            self._invalidate(rel)
+            raise
+        return maintained
 
     def _resolve_type_name(self, name: str) -> str:
         """Follow `type X: Y` alias chains to a base type name."""
@@ -1000,31 +1037,22 @@ class IQLEngine:
             # exact complement of keep (filter(~cond) also drops rows
             # where cond is NULL, so doomed must include them)
             doomed = df.filter(cond.isNull() | cond) if cond is not None else df
+        # pin the deleted rows ONCE (they're a tiny delta): every
+        # maintained view and the HNSW tombstone path read them from a
+        # checkpointed leaf instead of re-deriving the doomed-row plan —
+        # which embeds a full base scan — per consumer. Column order is
+        # restored first: the semi-join above puts join keys leftmost,
+        # and rule atoms bind POSITIONALLY.
+        doomed_pinned = doomed.select(*df.columns).localCheckpoint(eager=True)
         # LAZY pin (r14): the rewritten base folds into the first
         # consumer's job (the retraction-maintenance pass or the next
         # query) instead of running as its own materialization job per
         # delete statement. `keep` reads only the pinned old base, so
         # what materializes is unaffected by later mutations.
-        new_base = keep.localCheckpoint(eager=False)
-        self.current.relations[st.relation] = new_base
-        # incremental retraction first (the maintainer's insert-path
-        # protocol): qualifying aggregate views are maintained from the
-        # deleted rows, re-seeded after the cascade wipes the cache —
-        # a delete touching k groups no longer recomputes the whole view.
-        # Column order restored first: the semi-join above puts join keys
-        # leftmost, and rule atoms bind POSITIONALLY.
-        # pin the deleted rows ONCE (they're a tiny delta): every
-        # maintained view and the HNSW tombstone path read them from a
-        # checkpointed leaf instead of re-deriving the doomed-row plan —
-        # which embeds a full base scan — per consumer
-        doomed_pinned = doomed.select(*df.columns).localCheckpoint(eager=True)
-        maintained = self._retract_maintain(
-            st.relation, doomed_pinned, new_base, old_base=df
+        self._commit_write(
+            st.relation, keep.localCheckpoint(eager=False), df, doomed_pinned,
+            retract=True,
         )
-        kept_idx = self._hnsw_tombstone(st.relation, doomed_pinned.select(df.columns[0]))
-        self._invalidate(st.relation, keep_indexes=kept_idx)
-        for h, v in maintained.items():
-            self._cache_view(h, v)
 
     _HNSW_TOMBSTONE_CAP = 100_000
 
@@ -1044,10 +1072,7 @@ class IQLEngine:
         ]
         if not targeting:
             return kept
-        try:
-            rows = doomed_ids.limit(self._HNSW_TOMBSTONE_CAP + 1).collect()
-        except Exception:
-            return kept
+        rows = doomed_ids.limit(self._HNSW_TOMBSTONE_CAP + 1).collect()
         if len(rows) > self._HNSW_TOMBSTONE_CAP:
             return kept
         ids = [r[0] for r in rows]
@@ -1527,10 +1552,7 @@ class IQLEngine:
             if ent[1] == stamp == live:
                 derived[view.name] = ent[0]
                 return
-            try:
-                ent[0].unpersist()
-            except Exception:
-                pass
+            _unpersist(ent[0])
             self._shared_frames.pop(key, None)
         out = evaluate_scc(
             [view.name],
@@ -1543,10 +1565,7 @@ class IQLEngine:
         if len(self._shared_frames) >= 64:
             # bounded registry: evict the oldest entry (insertion order)
             old = next(iter(self._shared_frames))
-            try:
-                self._shared_frames[old][0].unpersist()
-            except Exception:
-                pass
+            _unpersist(self._shared_frames[old][0])
             self._shared_frames.pop(old, None)
         self._shared_frames[key] = (df, stamp)
         derived[view.name] = df
@@ -1635,7 +1654,7 @@ class IQLEngine:
             plan = df._jdf.queryExecution().optimizedPlan()
             return plan.getClass().getSimpleName() in ("LogicalRDD", "LocalRelation")
         except Exception:
-            return False
+            return False  # uninspectable plan: treat as lazy, the caller pins it
 
     def _pinned_view(self, head: str) -> Optional[DataFrame]:
         """The cached extent of `head`, guaranteed materialized: O(delta)
@@ -1916,273 +1935,88 @@ class IQLEngine:
         # swaps cannot change what materializes.
         return merged.localCheckpoint(eager=False)
 
-    def _retract_maintain(
-        self,
-        rel: str,
-        deleted_df: DataFrame,
-        new_base: DataFrame,
-        old_base: Optional[DataFrame] = None,
+    def _maintain(
+        self, rel: str, delta: DataFrame, old_base: DataFrame, retract: bool
     ) -> Dict[str, DataFrame]:
-        """Run the incremental retraction paths for every cached view
-        over `rel` — try_delta_retract for aggregate views, DRed for
-        positive recursive SCCs — returning {head: maintained view} for
-        the caller to re-seed after invalidation (same protocol as the
-        streaming maintainer's insert path)."""
+        """O(delta) maintenance of the cached views over base relation
+        `rel` after one write that inserted the `delta` rows, or removed
+        them when `retract`. `self.current.relations[rel]` already holds
+        the new extent, `old_base` the previous one.
+
+        Aggregate views take try_delta_merge / try_delta_retract. Cached
+        POSITIVE RECURSIVE SCC fixpoints take recursion.seminaive_insert /
+        recursion.dred_retract (reference differential update and
+        retraction, src/incremental.rs:26-41). Returns {head: maintained
+        view}. A head left out is a designed bail-out — session overlays,
+        a shape out of scope (negation, aggregates or hnsw inside the
+        SCC), an uncached member, a lower stratum the write also dirties,
+        or a cost guard — and is recomputed on its next read. Errors
+        raise."""
         maintained: Dict[str, DataFrame] = {}
-        if deleted_df is None:
-            return maintained
-        # symmetric to _insert_maintain: with session overlays the cached
-        # view includes overlay bindings, but the touched-group recompute
-        # reads only the persistent base — deleting a row that duplicates
-        # a session fact would under-count. Fall back to recompute.
+        # Session overlays put bindings in the cached views that the
+        # delta's binding checks (which read only the persistent base)
+        # cannot see: an insert duplicating a session fact would
+        # double-count, deleting one would under-count.
         if self.session_rules or self.session_facts:
             return maintained
-        for rule in self.current.rules:
-            deps = {
-                l.relation
-                for l in rule.body
-                if isinstance(l, Atom) and not l.negated
-            }
-            if rel not in deps:
-                continue
-            try:
-                v = self.try_delta_retract(
-                    rule.head.relation, rel, deleted_df, new_base
-                )
-            except Exception:
-                # the fast path is an optimization — any analysis/compile
-                # hiccup falls back to invalidate + full recompute, never
-                # fails the delete itself
-                v = None
-            if v is not None:
-                maintained[rule.head.relation] = v
-        if old_base is not None:
-            try:
-                maintained.update(
-                    self._try_dred_retract(rel, deleted_df, old_base)
-                )
-            except Exception:
-                pass  # fall back to invalidate + full recompute
-        return maintained
-
-    def _insert_maintain(
-        self, rel: str, delta_df: DataFrame, old_base: DataFrame
-    ) -> Dict[str, DataFrame]:
-        """Run the incremental insertion paths for every cached view over
-        `rel` — try_delta_merge for aggregate views, semi-naive delta
-        extension for positive recursive SCCs — returning {head:
-        maintained view} for the caller to re-seed after the
-        invalidation cascade (the exact protocol of _retract_maintain)."""
-        maintained: Dict[str, DataFrame] = {}
-        # Session overlays put bindings in the cached view that the
-        # delta's distinct-binding anti-join (which only checks old_base)
-        # can't see — a persistent insert duplicating a session fact
-        # would double-count. Bail to invalidate+recompute, matching
-        # _try_seminaive_insert.
-        if self.session_rules or self.session_facts:
-            return maintained
-        for rule in self.current.rules:
-            deps = {
-                l.relation
-                for l in rule.body
-                if isinstance(l, Atom) and not l.negated
-            }
-            if rel not in deps:
-                continue
-            try:
-                v = self.try_delta_merge(
-                    rule.head.relation, rel, delta_df, old_base
-                )
-            except Exception:
-                # the fast path is an optimization — any analysis/compile
-                # hiccup falls back to invalidate + full recompute, never
-                # fails the insert itself
-                v = None
-            if v is not None:
-                maintained[rule.head.relation] = v
-        try:
-            maintained.update(self._try_seminaive_insert(rel, delta_df))
-        except Exception:
-            pass  # fall back to invalidate + full recompute
-        return maintained
-
-    def _try_seminaive_insert(
-        self, rel: str, delta_df: DataFrame
-    ) -> Dict[str, DataFrame]:
-        """Semi-naive insertion maintenance of cached POSITIVE RECURSIVE
-        SCC fixpoints that depend on the inserted base relation `rel`
-        (recursion.seminaive_insert; reference differential update,
-        src/incremental.rs:26-34). Bails — returning {} so the normal
-        invalidate + recompute path runs — on the same out-of-scope
-        shapes as _try_dred_retract: session overlays, negation /
-        aggregates / hnsw inside the SCC, uncached members, or a lower
-        stratum the insert also dirties. Called AFTER
-        self.current.relations[rel] is the post-insert extent, so the
-        plain resolver already sees the new base."""
-        from inputlayer_spark.recursion import (
-            condensation,
-            is_recursive_scc,
-            seminaive_insert,
-        )
-
-        if self.session_rules or self.session_facts:
-            return {}
         rules = self.current.rules
-        if not rules:
-            return {}
-        rev: Dict[str, set] = {}
-        for r in rules:
-            for lit in r.body:
-                if isinstance(lit, Atom):
-                    rev.setdefault(lit.relation, set()).add(r.head.relation)
-        dirty: set = set()
-        frontier = [rel]
-        while frontier:
-            x = frontier.pop()
-            for head in rev.get(x, ()):
-                if head not in dirty:
-                    dirty.add(head)
-                    frontier.append(head)
+        new_base = self.current.relations[rel]
+        for rule in rules:
+            if not any(
+                isinstance(l, Atom) and not l.negated and l.relation == rel
+                for l in rule.body
+            ):
+                continue
+            head = rule.head.relation
+            if retract:
+                v = self.try_delta_retract(head, rel, delta, new_base)
+            else:
+                v = self.try_delta_merge(head, rel, delta, old_base)
+            if v is not None:
+                maintained[head] = v
 
-        maintained: Dict[str, DataFrame] = {}
+        dirty = self._dependents(rel)
+        valid = {
+            h: df
+            for h in list(self._derived_cache)
+            if (df := self._cached_view_get(h)) is not None
+        }
         for scc in condensation(rules):
             if not is_recursive_scc(scc, rules):
                 continue
             scc_set = set(scc)
             scc_rules = [r for r in rules if r.head.relation in scc_set]
             body_atoms = [
-                lit
-                for r in scc_rules
-                for lit in r.body
-                if isinstance(lit, Atom)
+                lit for r in scc_rules for lit in r.body if isinstance(lit, Atom)
             ]
             if rel not in {a.relation for a in body_atoms}:
                 continue
             if any(a.negated for a in body_atoms):
                 continue
-            if any(
-                isinstance(t, Agg) for r in scc_rules for t in r.head.terms
-            ):
+            if any(isinstance(t, Agg) for r in scc_rules for t in r.head.terms):
                 continue
-            if any(
-                isinstance(l, HnswNearest) for r in scc_rules for l in r.body
-            ):
+            if any(isinstance(l, HnswNearest) for r in scc_rules for l in r.body):
                 continue
             scc_cached = {h: self._cached_view_get(h) for h in scc_set}
             if not all(v is not None for v in scc_cached.values()):
                 continue
-            outside = {a.relation for a in body_atoms} - scc_set - {rel}
-            # a non-member dependency the insert also dirties would feed
+            # a non-member dependency the write also dirties would feed
             # stale extents into the delta evaluation
-            if outside & dirty:
+            if ({a.relation for a in body_atoms} - scc_set - {rel}) & dirty:
                 continue
-            clean_cache = {
-                h: df
-                for h in list(self._derived_cache)
-                if h not in scc_set
-                and (df := self._cached_view_get(h)) is not None
-            }
-            resolve_new = self._resolver(clean_cache)
-            out = seminaive_insert(
-                scc_rules,
-                scc,
-                rel,
-                delta_df,
-                scc_cached,
-                resolve_new,
-                self._hnsw_resolver,
-            )
-            if out is not None:
-                maintained.update(out)
-        return maintained
-
-    def _try_dred_retract(
-        self, rel: str, deleted_df: DataFrame, old_base: DataFrame
-    ) -> Dict[str, DataFrame]:
-        """DRed maintenance of cached POSITIVE RECURSIVE SCC fixpoints
-        that directly depend on the deleted base relation `rel`
-        (recursion.dred_retract; reference differential retraction,
-        src/incremental.rs:36-41). Bails — returning {} so the normal
-        invalidate + recompute path runs — whenever the shape is out of
-        scope: session overlays active, negation/aggregates/hnsw inside
-        the SCC, uncached members, or a lower stratum that is itself
-        dirtied by the delete."""
-        from inputlayer_spark.recursion import (
-            condensation,
-            dred_retract,
-            is_recursive_scc,
-        )
-
-        if self.session_rules or self.session_facts:
-            return {}
-        rules = self.current.rules
-        if not rules:
-            return {}
-        # transitive dirty set (what _invalidate will wipe)
-        rev: Dict[str, set] = {}
-        for r in rules:
-            for lit in r.body:
-                if isinstance(lit, Atom):
-                    rev.setdefault(lit.relation, set()).add(r.head.relation)
-        dirty: set = set()
-        frontier = [rel]
-        while frontier:
-            x = frontier.pop()
-            for head in rev.get(x, ()):
-                if head not in dirty:
-                    dirty.add(head)
-                    frontier.append(head)
-
-        maintained: Dict[str, DataFrame] = {}
-        for scc in condensation(rules):
-            if not is_recursive_scc(scc, rules):
-                continue
-            scc_set = set(scc)
-            scc_rules = [r for r in rules if r.head.relation in scc_set]
-            body_atoms = [
-                lit
-                for r in scc_rules
-                for lit in r.body
-                if isinstance(lit, Atom)
-            ]
-            if rel not in {a.relation for a in body_atoms}:
-                continue
-            if any(a.negated for a in body_atoms):
-                continue
-            if any(
-                isinstance(t, Agg) for r in scc_rules for t in r.head.terms
-            ):
-                continue
-            if any(
-                isinstance(l, HnswNearest) for r in scc_rules for l in r.body
-            ):
-                continue
-            scc_cached = {h: self._cached_view_get(h) for h in scc_set}
-            if not all(v is not None for v in scc_cached.values()):
-                continue
-            outside = {a.relation for a in body_atoms} - scc_set - {rel}
-            # a non-member dependency that the delete also dirties would
-            # feed stale extents into the DRed evaluation
-            if outside & dirty:
-                continue
-            clean_cache = {
-                h: df
-                for h in list(self._derived_cache)
-                if h not in scc_set
-                and (df := self._cached_view_get(h)) is not None
-            }
-            resolve_old = self._resolver({**clean_cache, rel: old_base})
-            resolve_new = self._resolver(clean_cache)
-            out = dred_retract(
-                scc_rules,
-                scc,
-                rel,
-                deleted_df,
-                scc_cached,
-                resolve_old,
-                resolve_new,
-                self._hnsw_resolver,
-            )
+            clean = {h: df for h, df in valid.items() if h not in scc_set}
+            resolve_new = self._resolver(clean)
+            if retract:
+                out = recursion.dred_retract(
+                    scc_rules, scc, rel, delta, scc_cached,
+                    self._resolver({**clean, rel: old_base}), resolve_new,
+                    self._hnsw_resolver,
+                )
+            else:
+                out = recursion.seminaive_insert(
+                    scc_rules, scc, rel, delta, scc_cached, resolve_new,
+                    self._hnsw_resolver,
+                )
             if out is not None:
                 maintained.update(out)
         return maintained
@@ -2294,7 +2128,7 @@ class IQLEngine:
                     recursive = scc is not None and is_recursive_scc(
                         scc, self._all_rules()
                     )
-                except Exception:
+                except StratificationError:
                     recursive = True
                 if not recursive and any(
                     {t.name for t in r.head.terms if isinstance(t, Var)}
@@ -2477,7 +2311,7 @@ class IQLEngine:
             return None
         try:
             sccs = condensation(rules)
-        except Exception:
+        except StratificationError:
             return None
         scc = next((s for s in sccs if goal.relation in s), None)
         if scc is None or not is_recursive_scc(scc, rules):
@@ -2818,7 +2652,7 @@ class IQLEngine:
             try:
                 idx.delete()  # backend-aware: rmtree / key-prefix delete
             except Exception:
-                pass
+                pass  # best-effort disk cleanup: a failure leaks the build dir
 
     def _hnsw_graph(self, name: str):
         """Lazily-built driver-side HnswGraph for a kind="hnsw" index:
@@ -2829,8 +2663,9 @@ class IQLEngine:
         builds a ShardedHnswIndex instead — per-partition graphs built
         and persisted executor-side, registered in self._sharded_hnsw —
         and this returns None so callers take the sharded path.
-        Returns None too when the corpus can't index (missing/ragged
-        vector column, duplicate ids) — callers fall back to LSH/exact."""
+        Returns None too when the vector column is missing or the corpus
+        is empty — callers fall back to LSH/exact. A corpus the graph
+        rejects (ragged vectors, duplicate ids) raises."""
         key = (self.current.name, name)
         if self._artifact_stale(key):
             # a write from another engine sharing this KG dirtied the
@@ -2852,54 +2687,51 @@ class IQLEngine:
         pre_epoch = self.current.head_epoch.get(relation, 0)
         from inputlayer_spark.operators.hnsw import HnswGraph, ShardedHnswIndex
 
-        try:
-            df = self._resolver(self._derived_for_index(relation))(relation)
-            if column not in df.columns:
-                return None
-            id_col = df.columns[0]
-            meta = self.current.indexes[name]
-            params = dict(meta[4]) if len(meta) > 4 and meta[4] else {}
-            cap = self._hnsw_driver_cap()
-            # bounded existence probe: scans at most cap+1 rows, never
-            # the whole relation
-            if df.limit(cap + 1).count() > cap:
-                if key not in self._sharded_hnsw:
-                    self._sharded_hnsw[key] = ShardedHnswIndex.build(
-                        df,
-                        id_col,
-                        column,
-                        self._hnsw_shard_dir(name),
-                        metric=metric,
-                        m=int(params.get("m", 16)),
-                        ef_construction=int(params.get("ef_construction", 100)),
-                        ef_search=int(params.get("ef_search", 64)),
-                    )
-                    self._stamp_artifact(key, epoch=pre_epoch)
-                return None
-            rows = (
-                df.select(F.col(id_col), F.col(column))
-                .orderBy(F.col(id_col).asc())
-                .collect()
-            )
-            if not rows:
-                return None
-            dim = len(rows[0][1])
-            g = HnswGraph(
-                dim,
-                metric=metric,
-                m=int(params.get("m", 16)),
-                ef_construction=int(params.get("ef_construction", 100)),
-                ef_search=int(params.get("ef_search", 50)),
-            )
-            g.add_batch(
-                [r[0] for r in rows],
-                [[float(x) for x in r[1]] for r in rows],
-            )
-            self._hnsw_graphs[key] = g
-            self._stamp_artifact(key, epoch=pre_epoch)
-            return g
-        except Exception:
+        df = self._resolver(self._derived_for_index(relation))(relation)
+        if column not in df.columns:
             return None
+        id_col = df.columns[0]
+        meta = self.current.indexes[name]
+        params = dict(meta[4]) if len(meta) > 4 and meta[4] else {}
+        cap = self._hnsw_driver_cap()
+        # bounded existence probe: scans at most cap+1 rows, never
+        # the whole relation
+        if df.limit(cap + 1).count() > cap:
+            if key not in self._sharded_hnsw:
+                self._sharded_hnsw[key] = ShardedHnswIndex.build(
+                    df,
+                    id_col,
+                    column,
+                    self._hnsw_shard_dir(name),
+                    metric=metric,
+                    m=int(params.get("m", 16)),
+                    ef_construction=int(params.get("ef_construction", 100)),
+                    ef_search=int(params.get("ef_search", 64)),
+                )
+                self._stamp_artifact(key, epoch=pre_epoch)
+            return None
+        rows = (
+            df.select(F.col(id_col), F.col(column))
+            .orderBy(F.col(id_col).asc())
+            .collect()
+        )
+        if not rows:
+            return None
+        dim = len(rows[0][1])
+        g = HnswGraph(
+            dim,
+            metric=metric,
+            m=int(params.get("m", 16)),
+            ef_construction=int(params.get("ef_construction", 100)),
+            ef_search=int(params.get("ef_search", 50)),
+        )
+        g.add_batch(
+            [r[0] for r in rows],
+            [[float(x) for x in r[1]] for r in rows],
+        )
+        self._hnsw_graphs[key] = g
+        self._stamp_artifact(key, epoch=pre_epoch)
+        return g
 
     def _index_frame(self, name: str) -> Optional[DataFrame]:
         """Materialized LSH artifact for an index, built lazily and cached
@@ -2908,10 +2740,7 @@ class IQLEngine:
         if self._artifact_stale(key):
             old = self._index_frames.pop(key, None)
             if old is not None:
-                try:
-                    old.unpersist()
-                except Exception:
-                    pass
+                _unpersist(old)
         cached = self._index_frames.get(key)
         if cached is not None:
             return cached
@@ -2919,18 +2748,15 @@ class IQLEngine:
         pre_epoch = self.current.head_epoch.get(relation, 0)
         from inputlayer_spark.operators.similarity import lsh_index
 
-        try:
-            df = self._resolver(self._derived_for_index(relation))(relation)
-            if column not in df.columns:
-                return None
-            idx = lsh_index(
-                df, column, num_tables=self._INDEX_TABLES, num_bits=self._INDEX_BITS
-            ).persist()
-            self._index_frames[key] = idx
-            self._stamp_artifact(key, epoch=pre_epoch)
-            return idx
-        except Exception:
+        df = self._resolver(self._derived_for_index(relation))(relation)
+        if column not in df.columns:
             return None
+        idx = lsh_index(
+            df, column, num_tables=self._INDEX_TABLES, num_bits=self._INDEX_BITS
+        ).persist()
+        self._index_frames[key] = idx
+        self._stamp_artifact(key, epoch=pre_epoch)
+        return idx
 
     _IVF_CELL_BITS = 4  # 16 coarse cells from the sign-hash quantizer
 
@@ -2947,10 +2773,7 @@ class IQLEngine:
             old = self._ivf_frames.pop(key, None)
             self._ivf_cents.pop(key, None)
             if old is not None:
-                try:
-                    old.unpersist()
-                except Exception:
-                    pass
+                _unpersist(old)
         cached = self._ivf_frames.get(key)
         cents = self._ivf_cents.get(key)
         if cached is not None and cents is not None:
@@ -2960,27 +2783,24 @@ class IQLEngine:
         from inputlayer_spark.operators.similarity import ivf_index
         from inputlayer_spark.functions import vector as V
 
-        try:
-            df = self._resolver(self._derived_for_index(relation))(relation)
-            if column not in df.columns:
-                return None, None
-            cell = next(
-                (c for c in df.columns if c.lower() in ("label", "cell")), None
-            )
-            if cell is None:
-                df = df.withColumn(
-                    "__cell", V.lsh_bucket(F.col(column), 0, self._IVF_CELL_BITS)
-                )
-                cell = "__cell"
-            celled = df.persist()
-            celled.count()
-            _, cent_list = ivf_index(celled, cell, column)
-            self._ivf_frames[key] = celled
-            self._ivf_cents[key] = cent_list
-            self._stamp_artifact(key, epoch=pre_epoch)
-            return celled, cent_list
-        except Exception:
+        df = self._resolver(self._derived_for_index(relation))(relation)
+        if column not in df.columns:
             return None, None
+        cell = next(
+            (c for c in df.columns if c.lower() in ("label", "cell")), None
+        )
+        if cell is None:
+            df = df.withColumn(
+                "__cell", V.lsh_bucket(F.col(column), 0, self._IVF_CELL_BITS)
+            )
+            cell = "__cell"
+        celled = df.persist()
+        celled.count()
+        _, cent_list = ivf_index(celled, cell, column)
+        self._ivf_frames[key] = celled
+        self._ivf_cents[key] = cent_list
+        self._stamp_artifact(key, epoch=pre_epoch)
+        return celled, cent_list
 
     def _hnsw_resolver(self, h: HnswNearest, acc: Optional[DataFrame] = None) -> DataFrame:
         from inputlayer_spark.functions import vector as V
@@ -3090,7 +2910,7 @@ class IQLEngine:
                     F.col("id").alias(h.id_var.name),
                     F.col("dist").alias(h.dist_var.name),
                 )
-            # unbuildable artifact → LSH/exact fallback below
+            # missing vector column → LSH/exact fallback below
         if self._index_kind(h.index) == "hnsw":
             # exact in-process graph walk (reference hnsw_index.rs:214-223:
             # search_k with ef override); hnsw_nearest's ef_search argument
@@ -3113,7 +2933,7 @@ class IQLEngine:
                     F.col("id").alias(h.id_var.name),
                     F.col("dist").alias(h.dist_var.name),
                 )
-            # unbuildable graph (ragged/duplicate-id corpus) → LSH/exact
+            # missing vector column or empty corpus → LSH/exact
         idx = self._index_frame(h.index)
         if idx is not None:
             from inputlayer_spark.operators.similarity import knn_lsh
@@ -3197,19 +3017,13 @@ class IQLEngine:
                 # centroids) for a namespace that no longer exists
                 for cache in (self._index_frames, self._ivf_frames):
                     for key in [k for k in cache if k[0] == args[1]]:
-                        try:
-                            cache[key].unpersist()
-                        except Exception:
-                            pass
+                        _unpersist(cache[key])
                         cache.pop(key, None)
                 # shared-subplan frames are epoch-stamped, but a re-created
                 # KG of the same name starts its epochs back at 0 — drop
                 # them with the namespace so a stale frame can't match
                 for key in [k for k in self._shared_frames if k[0] == args[1]]:
-                    try:
-                        self._shared_frames[key][0].unpersist()
-                    except Exception:
-                        pass
+                    _unpersist(self._shared_frames[key][0])
                     self._shared_frames.pop(key, None)
                 for cache in (self._hnsw_graphs, self._ivf_cents, self._adjacency):
                     for key in [k for k in cache if k[0] == args[1]]:
@@ -3647,17 +3461,11 @@ class IQLEngine:
                 if len(args) > 1 and args[1] in self.current.indexes:
                     old = self._index_frames.pop((self.current.name, args[1]), None)
                     if old is not None:
-                        try:
-                            old.unpersist()
-                        except Exception:
-                            pass
+                        _unpersist(old)
                     self._hnsw_graphs.pop((self.current.name, args[1]), None)
                     old_ivf = self._ivf_frames.pop((self.current.name, args[1]), None)
                     if old_ivf is not None:
-                        try:
-                            old_ivf.unpersist()
-                        except Exception:
-                            pass
+                        _unpersist(old_ivf)
                     self._ivf_cents.pop((self.current.name, args[1]), None)
                     kind = self._index_kind(args[1])
                     if kind == "hnsw":

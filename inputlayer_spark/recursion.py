@@ -391,7 +391,7 @@ def _try_path_doubling(
             hnsw_resolver,
             bool_consts_nop=getattr(r, "persistent", False),
         )
-    except Exception:
+    except CompileError:
         return None  # sub-body not safe standalone — fall back
     ecols = set(step_body.columns)
     if not (set(in_vars) | set(out_vars)) <= ecols:

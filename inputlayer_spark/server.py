@@ -607,9 +607,10 @@ class QueryServer:
                     if done.wait(self.query_timeout_ms / 1000.0):
                         return
                     timed_out.set()
-                    # cancel REPEATEDLY until the handler acknowledges:
-                    # the engine's fallback paths can catch a cancelled
-                    # job's error and submit fresh jobs under the tag
+                    # cancel REPEATEDLY until the handler acknowledges: a
+                    # cancel reaches only the jobs running at that moment,
+                    # and a statement submits more after it (a fixpoint
+                    # runs one job per iteration) under the same tag
                     sc.cancelJobsWithTag(tag)
                     while not done.wait(0.25):
                         sc.cancelJobsWithTag(tag)

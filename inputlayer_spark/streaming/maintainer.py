@@ -169,25 +169,16 @@ class IncrementalMaintainer:
             # append = the reference's (tuple, time, +1) delta stream;
             # collect into the driver-held relation plan. The batch is
             # tiny relative to the base (micro-batch), and checkpointing
-            # keeps the union lineage flat.
+            # keeps the union lineage flat. The engine's commit point
+            # (the one literal fact inserts use) maintains qualifying
+            # views from the micro-batch and re-seeds them; if it raises,
+            # the relation is left as it was and the batch fails
+            # uncommitted, so a restart from the checkpoint replays it.
             current = eng.current.relations.get(rel)
             merged = batch_df if current is None else current.unionByName(batch_df)
-            eng.current.relations[rel] = merged.localCheckpoint(eager=True)
-            # O(delta) paths first (engine._insert_maintain — the same
-            # protocol literal fact inserts use): qualifying aggregate
-            # views merge the micro-batch (try_delta_merge, reference
-            # differential update BENCHMARKS.md:89-93), positive
-            # recursive SCC fixpoints extend semi-naively from it
-            # (recursion.seminaive_insert) — computed BEFORE invalidation
-            # wipes their cache, re-seeded after.
-            merged_views = {}
-            if current is not None:
-                merged_views = eng._insert_maintain(rel, batch_df, current)
-            eng._invalidate(rel)
-            # re-seed the cache with delta-merged views so the follow-up
-            # materialization (and later queries) reuse them
-            for h, v in merged_views.items():
-                eng._cache_view(h, v)
+            merged_views = eng._commit_write(
+                rel, merged.localCheckpoint(eager=True), current, batch_df
+            )
             self.delta_merges += len(merged_views)
             if self.refresh:
                 # auto-rematerialization of remaining invalidated rules

@@ -374,6 +374,21 @@ def test_arity_mismatch_within_batch_rejected(engine):
         engine.execute("+s[(1, 2), (3, 4, 5)]")
 
 
+def test_mixed_type_fact_batches_are_rejected(engine):
+    """An inferred schema is enforced like a declared one: a batch whose
+    values conflict with it is rejected whole with the engine's error,
+    not a raw pyarrow one."""
+    from inputlayer_spark.compiler import CompileError
+
+    with pytest.raises(CompileError, match="Insert rejected for 't'"):
+        engine.execute('+t[(1), ("a")]')
+    assert "t" not in engine.current.relations
+    engine.execute("+u[(1)]")
+    with pytest.raises(CompileError, match="Insert rejected for 'u'"):
+        engine.execute('+u[("a")]')
+    assert rows(engine.query("?u(X)")) == [(1,)]
+
+
 def test_kg_drop_current_clears_overlays_and_cache(engine):
     engine.execute(".kg create tmp")
     engine.execute(".kg use tmp")
@@ -471,9 +486,11 @@ def test_index_build_materializes_only_its_target(engine, monkeypatch):
     import inputlayer_spark.engine as engine_mod
 
     real = engine_mod.evaluate_scc
+    poisoned = []
 
     def failing(scc, *args, **kwargs):
         if "vemb" in scc:
+            poisoned.append(scc)
             raise RuntimeError("vemb failed")
         return real(scc, *args, **kwargs)
 
@@ -482,6 +499,8 @@ def test_index_build_materializes_only_its_target(engine, monkeypatch):
     engine.create_index("vidx2", "vemb", "c1", kind="hnsw")
     with pytest.raises(RuntimeError, match="vemb failed"):
         engine.query('?m(Id, D), hnsw_nearest("vidx2", [1.0, 0.0], 1, Id, D)').collect()
+    # the graph build raises it; no LSH or exact-scan fallback retries
+    assert len(poisoned) == 1
 
 
 def test_hnsw_typed_index_exact_search_and_tombstone_delete(engine):

@@ -2010,7 +2010,7 @@ class IQLEngine:
                 out = recursion.dred_retract(
                     scc_rules, scc, rel, delta, scc_cached,
                     self._resolver({**clean, rel: old_base}), resolve_new,
-                    self._hnsw_resolver,
+                    self._base_of, self._hnsw_resolver,
                 )
             else:
                 out = recursion.seminaive_insert(
@@ -2433,7 +2433,7 @@ class IQLEngine:
                 return seed_df
             return self._base_of(name)
 
-        from inputlayer_spark.recursion import _seminaive_fixpoint
+        from inputlayer_spark.recursion import _positional, _seminaive_fixpoint
 
         for sub in condensation(rw.rules):
             if len(sub) > 1 and is_recursive_scc(sub, rw.rules):
@@ -2446,20 +2446,13 @@ class IQLEngine:
                     r for r in rw.rules if r.head.relation in sub_set
                 ]
 
-                def base_extent(h):
-                    df = base_of(h)
-                    if df is None:
-                        return None
-                    return df.toDF(*[f"c{i}" for i in range(len(df.columns))])
-
                 overlay.update(
                     _seminaive_fixpoint(
                         sub_rules,
-                        list(sub_set),
+                        sub_set,
                         resolve,
                         self._hnsw_resolver,
-                        base_extent,
-                        10_000,
+                        lambda h: _positional(base_of(h)),
                     )
                 )
             else:

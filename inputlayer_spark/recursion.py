@@ -27,10 +27,28 @@ from inputlayer_spark.compiler import (
 
 Resolver = Callable[[str], DataFrame]
 
+# Rounds a from-scratch fixpoint may take: a runaway backstop, not a
+# semantic limit.
+FIXPOINT_MAX_ROUNDS = 10_000
+# Rounds past its seed that a maintenance loop (insert, overdelete,
+# rederive) may take before it bails to a recompute: a deep cone loses
+# to the log-depth recompute (see dred_retract).
+MAINTAIN_MAX_ROUNDS = 24
+# Tuples the driver-local composition closure may reach before it hands
+# back to the distributed path.
+LOCAL_FIXPOINT_RESULT_MAX = 2_000_000
+
 
 def _qual(alias: str, col: str) -> str:
     """Alias-qualified column reference, both parts quoted."""
     return f"{sql_ident(alias)}.{sql_ident(col)}"
+
+
+def _positional(df: Optional[DataFrame]) -> Optional[DataFrame]:
+    """A base extent renamed to the compiler's c0..cn columns."""
+    if df is None:
+        return None
+    return df.toDF(*[f"c{i}" for i in range(len(df.columns))])
 
 
 def _pin_count(df: DataFrame) -> Tuple[DataFrame, int]:
@@ -155,7 +173,6 @@ def evaluate_scc(
     rules: Sequence[Rule],
     resolve: Resolver,
     hnsw_resolver=None,
-    max_iterations: int = 10_000,
     base_of: Optional[Callable[[str], Optional[DataFrame]]] = None,
 ) -> Dict[str, DataFrame]:
     """Evaluate one SCC; returns head → DataFrame (positional columns).
@@ -177,11 +194,7 @@ def evaluate_scc(
     def base_extent(head: str) -> Optional[DataFrame]:
         if base_of is None:
             return None
-        df = base_of(head)
-        if df is None:
-            return None
-        # positional rename to the compiler's c0..cn convention
-        return df.toDF(*[f"c{i}" for i in range(len(df.columns))])
+        return _positional(base_of(head))
 
     # ---- reference recursion quirks (golden-pinned) --------------------
     # The reference's *persistent*-rule recursion only evaluates SCCs that
@@ -224,8 +237,7 @@ def evaluate_scc(
             if kept:
                 out.update(
                     evaluate_scc(
-                        [head], kept, resolve, hnsw_resolver,
-                        max_iterations, base_of,
+                        [head], kept, resolve, hnsw_resolver, base_of=base_of
                     )
                 )
             else:
@@ -287,7 +299,7 @@ def evaluate_scc(
         if doubled is not None:
             return doubled
         return _seminaive_fixpoint(
-            scc_rules, members, resolve, hnsw_resolver, base_extent, max_iterations
+            scc_rules, members, resolve, hnsw_resolver, base_extent
         )
     finally:
         # unpersist on every exit path (incl. non-convergence / compile
@@ -408,22 +420,18 @@ def _try_path_doubling(
     ).distinct()
 
     # seed: exit rules + base extent, in positional c0..cn form
-    seed_parts = []
-    for er in exit_rules:
-        try:
-            seed_parts.append(
-                compile_head(
-                    compile_body(
-                        er.body,
-                        resolve,
-                        hnsw_resolver,
-                        bool_consts_nop=getattr(er, "persistent", False),
-                    ),
-                    er.head,
-                )
-            )
-        except _EmptyRelation:
-            continue
+    seed_parts = [
+        compile_head(
+            compile_body(
+                er.body,
+                resolve,
+                hnsw_resolver,
+                bool_consts_nop=getattr(er, "persistent", False),
+            ),
+            er.head,
+        )
+        for er in exit_rules
+    ]
     base = base_extent(head_rel)
     if base is not None:
         seed_parts.append(base)
@@ -621,12 +629,6 @@ def _local_fixpoint_max() -> int:
     return int(os.environ.get("SPARK_GRAFT_LOCAL_FIXPOINT_MAX", "100000"))
 
 
-def _local_fixpoint_result_max() -> int:
-    import os
-
-    return int(os.environ.get("SPARK_GRAFT_LOCAL_FIXPOINT_RESULT_MAX", "2000000"))
-
-
 def _norm_key(vals: tuple):
     """Join-key normalization so Python dict equality matches Spark join
     semantics: Spark treats NaN == NaN as true in joins; Python's NaN is
@@ -656,7 +658,6 @@ def _local_composition_closure(
             continue  # null keys don't join
         adj.setdefault(_norm_key(key_in), []).append(key_out)
 
-    cap = _local_fixpoint_result_max()
     result = set(seed_rows)
     frontier = list(result)
     while frontier:
@@ -673,7 +674,7 @@ def _local_composition_closure(
                 if ntt not in result:
                     result.add(ntt)
                     new.append(ntt)
-        if len(result) > cap:
+        if len(result) > LOCAL_FIXPOINT_RESULT_MAX:
             return None
         frontier = new
 
@@ -682,204 +683,11 @@ def _local_composition_closure(
     return small_local_df(spark, result, seed.schema)
 
 
-def _seminaive_fixpoint(
-    scc_rules,
-    members,
-    resolve,
-    hnsw_resolver,
-    base_extent,
-    max_iterations,
-) -> Dict[str, DataFrame]:
-    exit_rules = []
-    rec_rules = []
-    for r in scc_rules:
-        rec_atoms = [
-            idx
-            for idx, lit in enumerate(r.body)
-            if isinstance(lit, Atom) and not lit.negated and lit.relation in members
-        ]
-        if rec_atoms:
-            rec_rules.append((r, rec_atoms))
-        else:
-            exit_rules.append(r)
-
-    acc: Dict[str, Optional[DataFrame]] = {h: None for h in members}
-    delta: Dict[str, Optional[DataFrame]] = {h: None for h in members}
-
-    def resolve_with(overlay: Dict[str, DataFrame]) -> Resolver:
-        def _r(name: str) -> DataFrame:
-            if name in overlay:
-                df = overlay[name]
-                if df is None:
-                    raise _EmptyRelation(name)
-                return df
-            return resolve(name)
-
-        return _r
-
-    # Pinning strategy: eager localCheckpoint. persist() caches DATA but
-    # leaves the LOGICAL plan intact, so per-iteration plan analysis
-    # (unionByName/anti-join over an acc that references prior iterations)
-    # grows without bound — measured as 10s+ driver-side unionByName calls
-    # by iteration ~8 (faulthandler stack: py4j send_command inside
-    # unionByName). localCheckpoint swaps the plan for a LogicalRDD leaf:
-    # analysis stays O(1) per iteration. Checkpoint blocks are freed by
-    # the ContextCleaner (spark.cleaner.periodicGC.interval=45s,
-    # session.py) rather than deterministically — the lesser evil.
-    pinned: List[DataFrame] = []
-
-    def pin(df: DataFrame) -> Tuple[DataFrame, int]:
-        return _pin_count(df)
-
-    # initialize from exit rules + base extents (explicit facts / magic seeds)
-    for r in exit_rules:
-        df = compile_head(
-            compile_body(
-                r.body, resolve, hnsw_resolver,
-                bool_consts_nop=getattr(r, "persistent", False),
-            ),
-            r.head,
-        )
-        prev = acc[r.head.relation]
-        acc[r.head.relation] = df if prev is None else prev.unionByName(df).distinct()
-    for h in members:
-        base = base_extent(h)
-        if base is not None:
-            prev = acc[h]
-            acc[h] = base if prev is None else prev.unionByName(base).distinct()
-    acc_rows: Dict[str, int] = {h: 0 for h in members}
-    for h in members:
-        if acc[h] is not None:
-            acc[h], acc_rows[h] = pin(acc[h])
-        delta[h] = acc[h]
-
-    def apply_rules(
-        cur_delta: Dict[str, Optional[DataFrame]],
-        cur_acc: Dict[str, Optional[DataFrame]],
-    ) -> Dict[str, Optional[DataFrame]]:
-        """One semi-naive application: per rule, one evaluation per
-        recursive occurrence with that occurrence reading the delta and
-        the rest the accumulator. Purely lazy — no actions."""
-        new_tuples: Dict[str, Optional[DataFrame]] = {h: None for h in members}
-        for r, rec_positions in rec_rules:
-            for focus in rec_positions:
-                overlay: Dict[str, DataFrame] = {}
-                skip = False
-                body = list(r.body)
-                for idx, lit in enumerate(r.body):
-                    if not (isinstance(lit, Atom) and not lit.negated and lit.relation in members):
-                        continue
-                    source = cur_delta if idx == focus else cur_acc
-                    df = source[lit.relation]
-                    if df is None:
-                        skip = True
-                        break
-                    # same relation may need delta AND acc in one body —
-                    # alias each occurrence to a unique name
-                    alias = f"__{lit.relation}__{idx}"
-                    overlay[alias] = df
-                    body[idx] = Atom(alias, lit.terms)
-                if skip:
-                    continue
-                try:
-                    df = compile_head(
-                        compile_body(
-                            tuple(body),
-                            resolve_with(overlay),
-                            hnsw_resolver,
-                            bool_consts_nop=getattr(r, "persistent", False),
-                        ),
-                        r.head,
-                    )
-                except _EmptyRelation:
-                    continue
-                prev = new_tuples[r.head.relation]
-                new_tuples[r.head.relation] = df if prev is None else prev.unionByName(df)
-        return new_tuples
-
-    # acc is kept as a lazy union of pinned deltas; every few iterations
-    # it is compacted into one fresh pinned frame so per-iteration plan
-    # analysis (anti-join against acc) stays O(1) instead of growing with
-    # the iteration count — measured to dominate deep-BFS fixpoints.
-    ACC_COMPACT_EVERY = 4
-    acc_parts: Dict[str, int] = {h: 1 for h in members}
-
-    iteration = 0
-    while True:
-        iteration += 1
-        if iteration > max_iterations:
-            raise CompileError(f"fixpoint did not converge in {max_iterations} iterations")
-
-        collected = apply_rules(delta, acc)
-
-        any_new = False
-        for h in members:
-            if collected[h] is None:
-                delta[h] = None
-                continue
-            candidate = collected[h].distinct()
-            if acc[h] is not None:
-                # dedup against acc map-side while acc is broadcastable
-                # (the distributed-TC branch's 3M-row policy): a plain
-                # left-anti would shuffle BOTH the candidate and the
-                # ever-growing acc every iteration — the dominant cost
-                # of deep fixpoints once acc outgrows a few 100k rows.
-                # Row cap scaled by width so WIDE relations don't ship
-                # multi-GB broadcasts (strings estimated at ~24B/cell;
-                # ≤3M rows for the 2-col closure shape, shrinking as
-                # columns grow, bounded by ~256MB estimated).
-                est_row_bytes = 12 + 24 * len(acc[h].columns)
-                bcast_rows = min(3_000_000, (256 << 20) // est_row_bytes)
-                anti = (
-                    F.broadcast(acc[h])
-                    if acc_rows[h] <= bcast_rows
-                    else acc[h]
-                )
-                candidate = candidate.join(
-                    anti, on=list(candidate.columns), how="left_anti"
-                )
-            candidate, n = pin(candidate)
-            if n == 0:
-                delta[h] = None
-                continue
-            any_new = True
-            delta[h] = candidate
-            # acc grows as a lazy union of pinned deltas; compact it back
-            # to one pinned frame every few iterations (see above)
-            acc[h] = candidate if acc[h] is None else acc[h].unionByName(candidate)
-            acc_rows[h] += n
-            acc_parts[h] += 1
-            if acc_parts[h] >= ACC_COMPACT_EVERY:
-                acc[h], _ = pin(acc[h])
-                acc_parts[h] = 1
-        if not any_new:
-            break
-
-    out = {}
-    for h in members:
-        if acc[h] is not None:
-            # compact: acc is a lazy union over iteration checkpoints;
-            # one final checkpoint gives consumers a flat scan. LAZY
-            # (r14, the r13 _pin_count discipline): the eager form ran
-            # the full-closure rewrite as its own standalone job; the
-            # lazy pin folds it into the consumer's first action —
-            # same blocks, one fewer job per recursive query.
-            out[h] = acc[h].localCheckpoint(eager=False)
-    return out
-
-
-class _EmptyRelation(Exception):
-    def __init__(self, name: str):
-        self.name = name
-
-
-# ---------------------------------------------------------------- DRed
-
-
 def _bcast_rows_cap(ncols: int) -> int:
     """Row cap for broadcast hints, scaled by estimated row width
-    (~24B/cell) and bounded at ~256MB — the same policy as the general
-    fixpoint's dedup gate."""
+    (~24B/cell) and bounded at ~256MB: ≤3M rows for the 2-column closure
+    shape, shrinking as columns grow, so wide relations don't ship
+    multi-GB broadcasts."""
     return min(3_000_000, (256 << 20) // (12 + 24 * max(ncols, 1)))
 
 
@@ -921,6 +729,8 @@ def _apply_with_sources(
             continue
         if df is None:
             return None
+        # same relation may need delta AND accumulator in one body —
+        # alias each occurrence to a unique name
         alias = f"__{lit.relation}__{idx}"
         overlay[alias] = df
         body[idx] = Atom(alias, lit.terms)
@@ -942,6 +752,179 @@ def _apply_with_sources(
         return None
 
 
+def _delta_rounds(
+    rules: Sequence[Rule],
+    members: Set[str],
+    delta: Dict[str, Tuple[DataFrame, int]],
+    seed: Dict[str, List[Optional[DataFrame]]],
+    acc: Dict[str, Optional[DataFrame]],
+    acc_rows: Dict[str, int],
+    source: Callable[[], Dict[str, Optional[DataFrame]]],
+    keep: Callable[[str, DataFrame], Optional[DataFrame]],
+    resolve_base: Resolver,
+    hnsw_resolver,
+    max_rounds: int,
+    row_budget: Optional[int] = None,
+    compact_every: Optional[int] = None,
+    bcast_delta: bool = True,
+) -> bool:
+    """The one semi-naive loop: from-scratch evaluation, insert, and
+    DRed's overdelete and rederive differ only in what they pass.
+
+    Each round applies every rule once per positive body atom whose
+    relation has a Δ, that atom reading the Δ (broadcast-hinted when
+    small, with `bcast_delta`) and the other member atoms reading
+    `source()`; every other relation resolves through `resolve_base`.
+    Per head, the derivations (plus
+    `seed[head]` in the first round) go through distinct, `keep` (the
+    caller's candidate filter, reading `acc`; None drops the head) and
+    one `_pin_count`. What survives is the head's next Δ and is unioned
+    into `acc[head]`, its row count added to `acc_rows[head]`; with
+    `compact_every`, a head's accumulated union is re-pinned as one leaf
+    once it has that many parts. A None seed frame derives nothing.
+
+    `delta` maps a relation to the first round's Δ rows and their count;
+    it may name a non-member (the written base relation). Returns True
+    once a round leaves no Δ, False when another round would exceed
+    `max_rounds` rounds past the first or the accumulated rows exceed
+    `row_budget`."""
+    parts: Dict[str, int] = {}
+    rounds = 0
+    while delta or seed:
+        if rounds > max_rounds or (
+            row_budget is not None and sum(acc_rows.values()) > row_budget
+        ):
+            return False
+        rounds += 1
+        src = source()
+        focus = {
+            rel: _maybe_bcast(df, n) if bcast_delta else df
+            for rel, (df, n) in delta.items()
+        }
+        found = {h: list(seed.get(h, ())) for h in members}
+        for r in rules:
+            for idx, lit in enumerate(r.body):
+                if isinstance(lit, Atom) and not lit.negated and lit.relation in focus:
+                    found[r.head.relation].append(
+                        _apply_with_sources(
+                            r, idx, focus[lit.relation], src, resolve_base,
+                            hnsw_resolver,
+                        )
+                    )
+        delta, seed = {}, {}
+        for h, dfs in found.items():
+            dfs = [df for df in dfs if df is not None]
+            if not dfs:
+                continue
+            cand = dfs[0]
+            for df in dfs[1:]:
+                cand = cand.unionByName(df)
+            cand = keep(h, cand.distinct())
+            if cand is None:
+                continue
+            cand, n = _pin_count(cand)
+            if n == 0:
+                continue
+            delta[h] = (cand, n)
+            acc_rows[h] += n
+            if acc[h] is None:
+                acc[h], parts[h] = cand, 1
+                continue
+            acc[h] = acc[h].unionByName(cand)
+            parts[h] = parts.get(h, 1) + 1
+            if compact_every is not None and parts[h] >= compact_every:
+                acc[h], _ = _pin_count(acc[h])
+                parts[h] = 1
+    return True
+
+
+def _seminaive_fixpoint(
+    scc_rules,
+    members,
+    resolve,
+    hnsw_resolver,
+    base_extent,
+) -> Dict[str, DataFrame]:
+    """From-scratch semi-naive evaluation of a recursive SCC: the exit
+    rules (no positive member atom) and each member's base extent seed
+    the first round; later rounds read the accumulator for non-focus
+    member atoms and keep what the accumulator lacks."""
+    members = set(members)
+    seed: Dict[str, List[Optional[DataFrame]]] = {h: [] for h in members}
+    for r in scc_rules:
+        if not any(
+            isinstance(lit, Atom) and not lit.negated and lit.relation in members
+            for lit in r.body
+        ):
+            seed[r.head.relation].append(
+                _apply_with_sources(r, None, None, {}, resolve, hnsw_resolver)
+            )
+    for h in members:
+        seed[h].append(base_extent(h))
+
+    # Pinning strategy: eager localCheckpoint. persist() caches DATA but
+    # leaves the LOGICAL plan intact, so per-iteration plan analysis
+    # (unionByName/anti-join over an acc that references prior iterations)
+    # grows without bound — measured as 10s+ driver-side unionByName calls
+    # by iteration ~8 (faulthandler stack: py4j send_command inside
+    # unionByName). localCheckpoint swaps the plan for a LogicalRDD leaf:
+    # analysis stays O(1) per iteration. Checkpoint blocks are freed by
+    # the ContextCleaner (spark.cleaner.periodicGC.interval=45s,
+    # session.py) rather than deterministically — the lesser evil.
+    acc: Dict[str, Optional[DataFrame]] = {h: None for h in members}
+    acc_rows = {h: 0 for h in members}
+
+    def keep(h: str, cand: DataFrame) -> DataFrame:
+        if acc[h] is None:
+            return cand
+        # dedup against acc map-side while acc is broadcastable: a plain
+        # left-anti would shuffle BOTH the candidate and the ever-growing
+        # acc every iteration — the dominant cost of deep fixpoints once
+        # acc outgrows a few 100k rows
+        return cand.join(
+            _maybe_bcast(acc[h], acc_rows[h]), on=list(cand.columns), how="left_anti"
+        )
+
+    # acc is kept as a lazy union of pinned deltas; every few iterations
+    # it is compacted into one fresh pinned frame so per-iteration plan
+    # analysis (anti-join against acc) stays O(1) instead of growing with
+    # the iteration count — measured to dominate deep-BFS fixpoints.
+    if not _delta_rounds(
+        scc_rules, members, {}, seed, acc, acc_rows, lambda: acc, keep,
+        resolve, hnsw_resolver, FIXPOINT_MAX_ROUNDS, compact_every=4,
+        # no Δ hint: a from-scratch Δ can be a large share of the
+        # fixpoint, and broadcasting it measured ~1.5x slower on the
+        # 349K-pair same_generation row (13.3 s vs 9.1 s, 4 vCPUs)
+        bcast_delta=False,
+    ):
+        raise CompileError(
+            f"fixpoint did not converge in {FIXPOINT_MAX_ROUNDS} iterations"
+        )
+    # compact: acc is a lazy union over iteration checkpoints; one final
+    # checkpoint gives consumers a flat scan. LAZY (r14, the r13
+    # _pin_count discipline): the eager form ran the full-closure rewrite
+    # as its own standalone job; the lazy pin folds it into the
+    # consumer's first action — same blocks, one fewer job per recursive
+    # query.
+    return {
+        h: df.localCheckpoint(eager=False) for h, df in acc.items() if df is not None
+    }
+
+
+def _written_delta(
+    rel: str, df: DataFrame, members: Set[str]
+) -> Tuple[Dict[str, Tuple[DataFrame, int]], Dict[str, List[DataFrame]]]:
+    """First-round Δ and seed of a maintenance loop for the rows `df`
+    written to `rel`: the rows are the Δ of `rel`'s atoms, and when `rel`
+    is itself a member (a head with facts of its own) they are also
+    candidates for that head directly."""
+    delta = {rel: (df, df.count())}
+    return delta, ({rel: [_positional(df)]} if rel in members else {})
+
+
+# ---------------------------------------------------------------- DRed
+
+
 def dred_retract(
     scc_rules: Sequence[Rule],
     members: Sequence[str],
@@ -950,8 +933,8 @@ def dred_retract(
     cached: Dict[str, DataFrame],
     resolve_old: Resolver,
     resolve_new: Resolver,
+    base_new: Callable[[str], Optional[DataFrame]],
     hnsw_resolver,
-    max_iterations: int = 24,
 ) -> Optional[Dict[str, DataFrame]]:
     """DRed (delete–rederive) maintenance of a positive recursive SCC's
     materialized fixpoint after base-fact deletions — the Spark analog of
@@ -961,13 +944,16 @@ def dred_retract(
 
     1. OVERDELETE — semi-naive fixpoint over deletions: every cached
        tuple with at least one derivation through a deleted fact, seeded
-       by the deleted base tuples, propagated through the SCC's rules
+       by the deleted base tuples (themselves overdeleted when
+       `deleted_rel` is a member), propagated through the SCC's rules
        against the OLD database. Cost tracks the deletion cone, not the
        view.
     2. REDERIVE — restrict to overdeleted tuples and find those with an
-       alternative derivation from the remaining database; one full rule
-       application seeds it, then semi-naive deltas. This is the only
-       full-width step — a single application, not depth-many.
+       alternative derivation from the remaining database, or that are
+       a member's own fact in `base_new` (its extent after the delete);
+       one full rule application seeds it, then semi-naive deltas. This
+       is the only full-width step — a single application, not
+       depth-many.
 
     Caller guarantees: all rules positive (no negation), no aggregates,
     no hnsw predicates, `cached` holds every member's old extent, and
@@ -982,258 +968,97 @@ def dred_retract(
     depth-many tuples across depth-many iterations — measured runaway
     (hundreds of iterations × ~4 jobs) where the from-scratch
     path-doubling recompute is LOG-depth. So DRed bails to recompute
-    when (a) the cone hasn't converged within `max_iterations` hops, or
-    (b) the overdeleted set exceeds half of the cached view (rederiving
-    most of the view = recomputing it, with extra bookkeeping). Bailing
-    is always safe: the caller invalidates and re-derives.
+    when (a) the cone hasn't converged within `MAINTAIN_MAX_ROUNDS`
+    hops, or (b) the overdeleted set exceeds half of the cached view
+    (rederiving most of the view = recomputing it, with extra
+    bookkeeping). Bailing is always safe: the caller invalidates and
+    re-derives.
     """
-    import os
-    import sys
-    import time as _time
-
-    trace = os.environ.get("SPARK_GRAFT_DRED_TRACE") == "1"
-    t_start = _time.perf_counter()
-    n_pins = [0]
-    marks: List[Tuple[str, float]] = []
-
-    def mark(label: str):
-        if trace:
-            marks.append((label, _time.perf_counter() - t_start))
-
     rules = list(scc_rules)
-    members_set = set(members)
-
-    def pin(df: DataFrame) -> Tuple[DataFrame, int]:
-        n_pins[0] += 1
-        return _pin_count(df)
-
-    def union_into(acc: Dict[str, Optional[DataFrame]], head: str, df):
-        if df is None:
-            return
-        prev = acc.get(head)
-        acc[head] = df if prev is None else prev.unionByName(df)
-
-    cached_src: Dict[str, Optional[DataFrame]] = {m: cached[m] for m in members_set}
+    members = set(members)
 
     # ---------------------------------------------------- 1. overdelete
-    over: Dict[str, Optional[DataFrame]] = {h: None for h in members_set}
-    delta: Dict[str, Optional[DataFrame]] = {h: None for h in members_set}
-    delta_rows: Dict[str, int] = {}
-    seed: Dict[str, Optional[DataFrame]] = {h: None for h in members_set}
-    deleted_small = _maybe_bcast(deleted_df, deleted_df.count())
-    for r in rules:
-        for idx, lit in enumerate(r.body):
-            if (
-                isinstance(lit, Atom)
-                and not lit.negated
-                and lit.relation == deleted_rel
-            ):
-                union_into(
-                    seed,
-                    r.head.relation,
-                    _apply_with_sources(
-                        r, idx, deleted_small, cached_src, resolve_old, hnsw_resolver
-                    ),
-                )
-    over_rows = 0
-    for h in members_set:
-        if seed[h] is None:
-            continue
-        cand = seed[h].distinct().join(
-            cached[h], on=list(seed[h].columns), how="left_semi"
-        )
-        cand, n = pin(cand)
-        if n:
-            over[h] = delta[h] = cand
-            delta_rows[h] = n
-            over_rows += n
+    over: Dict[str, Optional[DataFrame]] = {h: None for h in members}
 
-    mark("overdelete_seed")
+    def keep_over(h: str, cand: DataFrame) -> DataFrame:
+        cand = cand.join(cached[h], on=list(cand.columns), how="left_semi")
+        if over[h] is not None:
+            cand = cand.join(over[h], on=list(cand.columns), how="left_anti")
+        return cand
+
+    delta, seed = _written_delta(deleted_rel, deleted_df, members)
     # cone-size budget: half the cached view (see docstring guard (b));
     # counting cached extents costs one job per member, paid once
-    cone_budget = max(1, sum(cached[h].count() for h in members_set) // 2)
-    mark("cone_budget")
-
-    iteration = 0
-    while any(delta[h] is not None for h in members_set):
-        iteration += 1
-        if iteration > max_iterations or over_rows > cone_budget:
-            return None  # deep/wide cone: recompute (log-depth) wins
-        new_tuples: Dict[str, Optional[DataFrame]] = {h: None for h in members_set}
-        for r in rules:
-            for idx, lit in enumerate(r.body):
-                if not (
-                    isinstance(lit, Atom)
-                    and not lit.negated
-                    and lit.relation in members_set
-                ):
-                    continue
-                if delta[lit.relation] is None:
-                    continue
-                union_into(
-                    new_tuples,
-                    r.head.relation,
-                    _apply_with_sources(
-                        r,
-                        idx,
-                        _maybe_bcast(
-                            delta[lit.relation], delta_rows.get(lit.relation)
-                        ),
-                        cached_src,
-                        resolve_old,
-                        hnsw_resolver,
-                    ),
-                )
-        next_delta: Dict[str, Optional[DataFrame]] = {h: None for h in members_set}
-        for h in members_set:
-            if new_tuples[h] is None:
-                continue
-            cand = new_tuples[h].distinct().join(
-                cached[h], on=list(new_tuples[h].columns), how="left_semi"
-            )
-            if over[h] is not None:
-                cand = cand.join(over[h], on=list(cand.columns), how="left_anti")
-            cand, n = pin(cand)
-            if n:
-                next_delta[h] = cand
-                delta_rows[h] = n
-                over[h] = cand if over[h] is None else over[h].unionByName(cand)
-                over_rows += n
-        delta = next_delta
-    over_iters = iteration
-    mark("overdelete_loop")
-
-    if all(over[h] is None for h in members_set):
+    cone_budget = max(1, sum(cached[h].count() for h in members) // 2)
+    if not _delta_rounds(
+        rules, members, delta, seed, over, {h: 0 for h in members}, lambda: cached,
+        keep_over, resolve_old, hnsw_resolver, MAINTAIN_MAX_ROUNDS,
+        row_budget=cone_budget,
+    ):
+        return None  # deep/wide cone: recompute (log-depth) wins
+    if all(over[h] is None for h in members):
         # deletion cone never reached this SCC — extents unchanged
-        return {h: cached[h] for h in members_set}
-    for h in members_set:
+        return {h: cached[h] for h in members}
+    for h in members:
         if over[h] is not None:
-            over[h], _ = pin(over[h])
+            over[h], _ = _pin_count(over[h])
 
     # ---------------------------------------------------- 2. rederive
     remaining: Dict[str, DataFrame] = {}
-    for h in members_set:
+    for h in members:
         if over[h] is None:
             remaining[h] = cached[h]
         else:
             rem = cached[h].join(over[h], on=list(cached[h].columns), how="left_anti")
-            remaining[h], _ = pin(rem)
+            remaining[h], _ = _pin_count(rem)
 
-    red: Dict[str, Optional[DataFrame]] = {h: None for h in members_set}
-    # seed: ONE rule application over the remaining db, restricted to the
-    # overdeleted tuples (alternative-derivation check). Rules whose head
-    # has no overdeleted tuples are skipped outright — their seed would
-    # be discarded by the semi-join below. (A cone-column pre-filter of
-    # the body atoms was measured here and REVERTED: on dense closures
-    # the cone's head-variable projections cover most of the domain, so
-    # the extra broadcast semi-joins cost a view-width pass without
-    # shrinking the join — r10 probe: rederive_seed 1.0-1.5 s unfiltered
-    # vs 2.6-3.4 s filtered on the bench's 1M-pair closure.)
-    seedR: Dict[str, Optional[DataFrame]] = {h: None for h in members_set}
-    for r in rules:
-        h = r.head.relation
+    red: Dict[str, Optional[DataFrame]] = {h: None for h in members}
+
+    def keep_red(h: str, cand: DataFrame) -> Optional[DataFrame]:
         if over[h] is None:
-            continue  # nothing overdeleted under this head: no rederive
-        union_into(
-            seedR,
-            h,
-            _apply_with_sources(
-                r, None, None, remaining, resolve_new, hnsw_resolver
-            ),
-        )
-    deltaR: Dict[str, Optional[DataFrame]] = {h: None for h in members_set}
-    deltaR_rows: Dict[str, int] = {}
-    for h in members_set:
-        if seedR[h] is None or over[h] is None:
-            continue
-        cand = seedR[h].distinct().join(
-            over[h], on=list(seedR[h].columns), how="left_semi"
-        )
-        cand, n = pin(cand)
-        if n:
-            red[h] = deltaR[h] = cand
-            deltaR_rows[h] = n
-    mark("rederive_seed")
-
-    iteration = 0
-    while any(deltaR[h] is not None for h in members_set):
-        iteration += 1
-        if iteration > max_iterations:
             return None
-        cur: Dict[str, Optional[DataFrame]] = {}
-        for h in members_set:
-            cur[h] = (
-                remaining[h]
-                if red[h] is None
-                else remaining[h].unionByName(red[h])
-            )
-        new_tuples = {h: None for h in members_set}
-        for r in rules:
-            for idx, lit in enumerate(r.body):
-                if not (
-                    isinstance(lit, Atom)
-                    and not lit.negated
-                    and lit.relation in members_set
-                ):
-                    continue
-                if deltaR[lit.relation] is None:
-                    continue
-                union_into(
-                    new_tuples,
-                    r.head.relation,
-                    _apply_with_sources(
-                        r,
-                        idx,
-                        _maybe_bcast(
-                            deltaR[lit.relation], deltaR_rows.get(lit.relation)
-                        ),
-                        cur,
-                        resolve_new,
-                        hnsw_resolver,
-                    ),
-                )
-        next_deltaR: Dict[str, Optional[DataFrame]] = {h: None for h in members_set}
-        for h in members_set:
-            if new_tuples[h] is None or over[h] is None:
-                continue
-            cand = new_tuples[h].distinct().join(
-                over[h], on=list(new_tuples[h].columns), how="left_semi"
-            )
-            if red[h] is not None:
-                cand = cand.join(red[h], on=list(cand.columns), how="left_anti")
-            cand, n = pin(cand)
-            if n:
-                next_deltaR[h] = cand
-                deltaR_rows[h] = n
-                red[h] = cand if red[h] is None else red[h].unionByName(cand)
-        deltaR = next_deltaR
-    mark("rederive_loop")
+        cand = cand.join(over[h], on=list(cand.columns), how="left_semi")
+        if red[h] is not None:
+            cand = cand.join(red[h], on=list(cand.columns), how="left_anti")
+        return cand
 
-    out: Dict[str, DataFrame] = {}
-    for h in members_set:
-        final = remaining[h] if red[h] is None else remaining[h].unionByName(red[h])
-        # LAZY pin (r14): the overdelete anti-join + closure rewrite
-        # fold into the consumer's first action (one job) instead of
-        # running as a standalone materialization job per retraction;
-        # all inputs are pinned leaves, so what materializes is
-        # identical (same immutability argument as the r13 engine-view
-        # pins).
-        out[h] = final.localCheckpoint(eager=False)
-    if trace:
-        mark("final_pin")
-        total = _time.perf_counter() - t_start
-        prev = 0.0
-        parts = []
-        for label, t in marks:
-            parts.append(f"{label}={t - prev:.3f}s")
-            prev = t
-        print(
-            f"# DRED_TRACE total={total:.3f}s over_iters={over_iters} "
-            f"red_iters={iteration} pins={n_pins[0]} over_rows={over_rows} "
-            + " ".join(parts),
-            file=sys.stderr,
-        )
-    return out
+    # seed: ONE rule application over the remaining db plus each
+    # member's own facts, restricted to the overdeleted tuples
+    # (alternative-derivation check). Heads with no overdeleted tuples
+    # are skipped outright — their seed would be discarded by the
+    # semi-join. (A cone-column pre-filter of the body atoms was
+    # measured here and REVERTED: on dense closures the cone's
+    # head-variable projections cover most of the domain, so the extra
+    # broadcast semi-joins cost a view-width pass without shrinking the
+    # join — r10 probe: rederive_seed 1.0-1.5 s unfiltered vs 2.6-3.4 s
+    # filtered on the bench's 1M-pair closure.)
+    seed = {h: [] for h in members if over[h] is not None}
+    for r in rules:
+        if r.head.relation in seed:
+            seed[r.head.relation].append(
+                _apply_with_sources(r, None, None, remaining, resolve_new, hnsw_resolver)
+            )
+    for h in seed:
+        seed[h].append(_positional(base_new(h)))
+
+    def current() -> Dict[str, Optional[DataFrame]]:
+        return {
+            h: remaining[h] if red[h] is None else remaining[h].unionByName(red[h])
+            for h in members
+        }
+
+    if not _delta_rounds(
+        rules, members, {}, seed, red, {h: 0 for h in members}, current, keep_red,
+        resolve_new, hnsw_resolver, MAINTAIN_MAX_ROUNDS,
+    ):
+        return None
+
+    # LAZY pin (r14): the overdelete anti-join + closure rewrite fold
+    # into the consumer's first action (one job) instead of running as a
+    # standalone materialization job per retraction; all inputs are
+    # pinned leaves, so what materializes is identical (same
+    # immutability argument as the r13 engine-view pins).
+    return {h: df.localCheckpoint(eager=False) for h, df in current().items()}
 
 
 def seminaive_insert(
@@ -1244,7 +1069,6 @@ def seminaive_insert(
     cached: Dict[str, DataFrame],
     resolve_new: Resolver,
     hnsw_resolver,
-    max_iterations: int = 24,
 ) -> Optional[Dict[str, DataFrame]]:
     """Semi-naive INSERTION maintenance of a positive recursive SCC's
     materialized fixpoint after base-fact inserts — the counterpart of
@@ -1259,7 +1083,8 @@ def seminaive_insert(
        relation bound to the Δ rows and everything else at its NEW
        extent (members at their cached fixpoints). Applying Δ at each
        occurrence separately covers multi-occurrence rules under set
-       semantics.
+       semantics. When `inserted_rel` is a member, the Δ rows are new
+       tuples of that head too.
     2. PROPAGATE — classic semi-naive deltas through the member atoms,
        anti-joined against the accumulated extents, until empty.
 
@@ -1272,29 +1097,17 @@ def seminaive_insert(
     Cost guard: a Δ whose derivation cone is DEEP (an edge prepended to
     a long chain reaches depth-many new tuples one hop per iteration)
     loses to the log-depth doubling recompute, so bail to None past
-    `max_iterations`. Bailing is always safe — the caller falls back to
-    invalidate + recompute.
+    `MAINTAIN_MAX_ROUNDS`. Bailing is always safe — the caller falls
+    back to invalidate + recompute.
     """
-    rules = list(scc_rules)
-    members_set = set(members)
-
-    def pin(df: DataFrame) -> Tuple[DataFrame, int]:
-        return _pin_count(df)
-
-    def union_into(acc: Dict[str, Optional[DataFrame]], head: str, df):
-        if df is None:
-            return
-        prev = acc.get(head)
-        acc[head] = df if prev is None else prev.unionByName(df)
-
-    acc: Dict[str, DataFrame] = {h: cached[h] for h in members_set}
+    members = set(members)
+    acc: Dict[str, Optional[DataFrame]] = {h: cached[h] for h in members}
 
     def minus_acc(h: str, cand: DataFrame) -> DataFrame:
         """cand \\ acc[h] without shuffling the (large) accumulated
         extent: semi-join acc DOWN to rows matching the tiny candidate
         set (broadcast, one streaming pass over acc), then anti-join
         tiny-vs-tiny — the try_delta_merge trick."""
-        cand = cand.distinct()
         existing = acc[h].join(
             F.broadcast(cand), on=list(cand.columns), how="left_semi"
         )
@@ -1304,78 +1117,15 @@ def seminaive_insert(
             F.broadcast(existing), on=list(cand.columns), how="left_anti"
         )
 
-    # ------------------------------------------------------- 1. seed
-    seed: Dict[str, Optional[DataFrame]] = {h: None for h in members_set}
-    inserted_small = _maybe_bcast(inserted_df, inserted_df.count())
-    for r in rules:
-        for idx, lit in enumerate(r.body):
-            if (
-                isinstance(lit, Atom)
-                and not lit.negated
-                and lit.relation == inserted_rel
-            ):
-                union_into(
-                    seed,
-                    r.head.relation,
-                    _apply_with_sources(
-                        r, idx, inserted_small, acc, resolve_new, hnsw_resolver
-                    ),
-                )
-    delta: Dict[str, Optional[DataFrame]] = {h: None for h in members_set}
-    delta_rows: Dict[str, int] = {}
-    for h in members_set:
-        if seed[h] is None:
-            continue
-        cand, n = pin(minus_acc(h, seed[h]))
-        if n:
-            delta[h] = cand
-            delta_rows[h] = n
-            acc[h] = acc[h].unionByName(cand)
-
-    # -------------------------------------------------- 2. propagate
-    iteration = 0
-    while any(delta[h] is not None for h in members_set):
-        iteration += 1
-        if iteration > max_iterations:
-            return None  # deep cone: log-depth recompute wins
-        new_tuples: Dict[str, Optional[DataFrame]] = {h: None for h in members_set}
-        for r in rules:
-            for idx, lit in enumerate(r.body):
-                if not (
-                    isinstance(lit, Atom)
-                    and not lit.negated
-                    and lit.relation in members_set
-                ):
-                    continue
-                if delta[lit.relation] is None:
-                    continue
-                union_into(
-                    new_tuples,
-                    r.head.relation,
-                    _apply_with_sources(
-                        r,
-                        idx,
-                        _maybe_bcast(
-                            delta[lit.relation], delta_rows.get(lit.relation)
-                        ),
-                        acc,
-                        resolve_new,
-                        hnsw_resolver,
-                    ),
-                )
-        next_delta: Dict[str, Optional[DataFrame]] = {h: None for h in members_set}
-        for h in members_set:
-            if new_tuples[h] is None:
-                continue
-            cand, n = pin(minus_acc(h, new_tuples[h]))
-            if n:
-                next_delta[h] = cand
-                delta_rows[h] = n
-                acc[h] = acc[h].unionByName(cand)
-        delta = next_delta
+    delta, seed = _written_delta(inserted_rel, inserted_df, members)
+    if not _delta_rounds(
+        list(scc_rules), members, delta, seed, acc, {h: 0 for h in members},
+        lambda: acc, minus_acc, resolve_new, hnsw_resolver, MAINTAIN_MAX_ROUNDS,
+    ):
+        return None  # deep cone: log-depth recompute wins
 
     out: Dict[str, DataFrame] = {}
-    for h in members_set:
+    for h in members:
         # KEPT EAGER (r14 honest negative, measured on the bench's own
         # 1M-pair/10-edge-cycle shape): returning the lazy UNION of the
         # cached extent + pinned deltas (no rewrite at all) measured

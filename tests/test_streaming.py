@@ -268,6 +268,66 @@ def test_dred_retraction_transitive_closure(spark, monkeypatch):
     assert (1, 2) in set(got)
 
 
+def test_recursive_head_facts_are_maintained(spark, monkeypatch):
+    """A recursive head's own facts (`+path[...]` before its rules) are
+    part of its view, like the reference's input_tuples, so DRed and
+    semi-naive insert maintain them: deleting a head fact drops it and
+    what it derived, a head fact whose derivation goes is kept, and a
+    micro-batch into the head adds its rows. After each write the view
+    the maintenance path returned equals a recompute. An unrelated
+    10-edge chain keeps each delete's cone inside DRed's budget (half
+    the cached view)."""
+    from inputlayer_spark import recursion
+    from inputlayer_spark.session import small_local_df
+
+    ran = set()
+
+    def spy(name):
+        real = getattr(recursion, name)
+
+        def wrapped(*a, **k):
+            out = real(*a, **k)
+            if out is not None:
+                ran.add(name)
+            return out
+
+        monkeypatch.setattr(recursion, name, wrapped)
+
+    spy("dred_retract")
+    spy("seminaive_insert")
+    chain = [(i, i + 1) for i in range(100, 110)]
+    chain_paths = {(a, b) for a in range(100, 111) for b in range(a + 1, 111)}
+    eng = IQLEngine(spark)
+    edges = [(1, 2), (2, 3)] + chain
+    eng.execute(f"+edge[{', '.join(f'({a}, {b})' for a, b in edges)}]")
+    eng.execute("+path[(1, 3), (3, 9)]")
+    eng.execute(
+        "+path(X, Y) <- edge(X, Y)\n+path(X, Z) <- edge(X, Y), path(Y, Z)"
+    )
+    _paths(eng)  # materialize
+
+    def check(maintained_by, want):
+        assert ran == {maintained_by}
+        ran.clear()
+        got = set(_paths(eng))
+        eng._invalidate("path")
+        assert set(_paths(eng)) == got == want | chain_paths
+
+    eng.execute("-path(3, 9)")
+    check("dred_retract", {(1, 2), (1, 3), (2, 3)})
+    # a stream micro-batch into the head, committed as
+    # IncrementalMaintainer._on_batch commits it
+    current = eng.current.relations["path"]
+    batch = small_local_df(spark, [(3, 50)], current.schema)
+    eng._commit_write(
+        "path", current.unionByName(batch).localCheckpoint(eager=True),
+        current, batch,
+    )
+    check("seminaive_insert", {(1, 2), (1, 3), (2, 3), (3, 50), (2, 50), (1, 50)})
+    eng.execute("-edge(2, 3)")
+    check("dred_retract", {(1, 2), (1, 3), (3, 50)})
+
+
 def test_dred_bails_on_negation_and_session_overlays(spark):
     """Out-of-scope shapes must fall back to invalidation (cache entry
     dropped), never produce a wrong maintained view."""

@@ -173,24 +173,23 @@ def tc_bfs_shape(
 
 
 def tc_adjacency(edge_df, forward: bool) -> Optional[Dict]:
-    """Driver-side adjacency of a 2-column edge frame for
-    `seeded_tc_closure`: normalized source key -> reached targets, read
-    with one limit-pushdown collect. None when the relation holds more
-    than `_local_fixpoint_max()` rows; the distributed path runs then.
-    Edges with a null endpoint never join, so they are left out."""
-    from inputlayer_spark.recursion import _local_fixpoint_max, _norm_key
+    """Driver-side adjacency of a 2-column edge frame in the closure
+    kernel's shape (`recursion.closure_adjacency`): normalized `(source,)`
+    -> `(target,)` tuples, read with one limit-pushdown collect. The
+    engine caches it per edge relation and direction, so a warm bound
+    read runs the kernel with no Spark job. None when the relation holds
+    more than `_local_fixpoint_max()` rows; the distributed path runs
+    then."""
+    from inputlayer_spark.recursion import (
+        _collect_upto,
+        _local_fixpoint_max,
+        closure_adjacency,
+    )
 
     cols = edge_df.columns
     s, t = (cols[0], cols[1]) if forward else (cols[1], cols[0])
-    lmax = _local_fixpoint_max()
-    rows = edge_df.select(edge_df[s], edge_df[t]).limit(lmax + 1).collect()
-    if len(rows) > lmax:
-        return None
-    adj: Dict = {}
-    for a, b in rows:
-        if a is not None and b is not None:
-            adj.setdefault(_norm_key((a,))[0], []).append(b)
-    return adj
+    table = _collect_upto(edge_df.select(edge_df[s], edge_df[t]), _local_fixpoint_max())
+    return None if table is None else closure_adjacency(table, 1)
 
 
 def seeded_tc_closure(
@@ -203,8 +202,10 @@ def seeded_tc_closure(
     """Single-source reachability over `edge_df` (2 columns).
 
     With `adjacency` (from `tc_adjacency`: the edge list fits the driver)
-    it is a BFS in Python whose answer becomes a driver-built leaf, the
-    broadcast-threshold principle. Otherwise it runs blocked path
+    it runs the closure kernel (`recursion.adjacency_closure`) from the
+    one-node seed, the broadcast-threshold principle: on the driver,
+    answered as a job-free leaf while the result stays small, else in
+    one mapInArrow on the executors. Otherwise it runs blocked path
     doubling: square the step relation while it stays under
     `growth_cap`x the edge count (on a path-like graph S^(<=2^k) grows
     linearly, so squaring is cheap and each BFS job then advances up to
@@ -231,41 +232,24 @@ def seeded_tc_closure(
     ).filter(F.lit(False))
 
     if adjacency is not None:
-        from inputlayer_spark.recursion import _norm_key
-        from inputlayer_spark.session import small_local_df
+        from inputlayer_spark.recursion import NAN_KEY, _norm_key, adjacency_closure
 
-        visited_local = set()
-        frontier_local = adjacency.get(_norm_key((seed_value,))[0], [])
-        while frontier_local:
-            nxt = []
-            for v in frontier_local:
-                key = _norm_key((v,))[0]
-                if key in visited_local:
-                    continue
-                visited_local.add(key)
-                nxt.extend(adjacency.get(key, ()))
-            frontier_local = nxt
-        if not visited_local:
-            return empty
         seed_out = seed_value
-        if isinstance(e_raw.schema["s"].dataType, T.DoubleType) and isinstance(
-            seed_out, int
+        if isinstance(seed_out, int) and isinstance(
+            e_raw.schema["s"].dataType, T.DoubleType
         ):
             seed_out = float(seed_out)
-        out_rows = [
-            (seed_out, (float("nan") if v == "__nan__" else v))
-            for v in visited_local
+        # the one-node seed (seed, t) for each edge out of it: position 0
+        # is carried, the kernel walks position 1
+        seeds = [
+            (seed_out, float("nan") if t is NAN_KEY else t)
+            for (t,) in adjacency.get(_norm_key((seed_value,)), ())
         ]
-        schema = T.StructType(
-            [
-                T.StructField("c0", e_raw.schema["s"].dataType, True),
-                T.StructField("c1", e_raw.schema["t"].dataType, True),
-            ]
-        )
-        return small_local_df(spark, out_rows, schema)
+        return adjacency_closure(spark, seeds, adjacency, [1], empty.schema)
 
-    e = e_raw.distinct().localCheckpoint(eager=True)
-    n_e = e.count()
+    from inputlayer_spark.recursion import _pin_count
+
+    e, n_e = _pin_count(e_raw.distinct())
     seed_lit = F.lit(seed_value).cast(e.schema["s"].dataType)
     if n_e == 0:
         return empty
@@ -278,10 +262,7 @@ def seeded_tc_closure(
 
     step, n_step = e, n_e
     for _ in range(16):
-        widened = step.unionByName(compose(step)).distinct().localCheckpoint(
-            eager=True
-        )
-        n_w = widened.count()
+        widened, n_w = _pin_count(step.unionByName(compose(step)).distinct())
         if n_w == n_step:
             # closure reached outright — the seed filter is a lookup
             return widened.filter(widened["s"] == seed_lit).select(
@@ -308,8 +289,8 @@ def seeded_tc_closure(
         )
         if visited is not None:
             hop = hop.join(visited, on="s", how="left_anti")
-        hop = hop.localCheckpoint(eager=True)
-        if hop.count() == 0:
+        hop, n_hop = _pin_count(hop)
+        if n_hop == 0:
             break
         visited = hop if visited is None else visited.unionByName(hop)
         frontier = hop

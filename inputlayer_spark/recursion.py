@@ -12,6 +12,7 @@ local[32] localCheckpoint suffices.
 
 from __future__ import annotations
 
+import functools
 from typing import Callable, Dict, List, Optional, Sequence, Set, Tuple
 
 from pyspark.sql import DataFrame
@@ -34,9 +35,6 @@ FIXPOINT_MAX_ROUNDS = 10_000
 # rederive) may take before it bails to a recompute: a deep cone loses
 # to the log-depth recompute (see dred_retract).
 MAINTAIN_MAX_ROUNDS = 24
-# Tuples the driver-local composition closure may reach before it hands
-# back to the distributed path.
-LOCAL_FIXPOINT_RESULT_MAX = 2_000_000
 
 
 def _qual(alias: str, col: str) -> str:
@@ -331,6 +329,15 @@ def _try_path_doubling(
     when R stabilizes is exact: a minimal-length tuple of X∘S* missing
     from R would have its predecessor in R, hence be in R∘S ⊆ R.
 
+    Where it runs: seed and step are each read with one limit-pushdown
+    collect first. When together they fit `_local_fixpoint_max()` the
+    closure kernel (`adjacency_closure`) takes over, with no pin job: on
+    the driver while the result stays a small leaf, else in one
+    mapInArrow over the seed grouped by carried columns, which ships the
+    step's adjacency to the executors instead of every result row through
+    the driver. Only larger inputs pin seed and step and run the
+    distributed doubling below.
+
     Returns None when the shape doesn't apply (multiple/mutual recursive
     rules, constants or repeated vars in the recursive atom, filters over
     carried variables) — the semi-naive fixpoint remains the general path.
@@ -438,36 +445,45 @@ def _try_path_doubling(
     if not seed_parts:
         return {}  # no seed → empty fixpoint; caller treats missing as empty
 
-    seed = seed_parts[0]
+    seed_all = seed_parts[0]
     for p in seed_parts[1:]:
-        seed = seed.unionByName(p)
-    seed, n_seed = _pin_count(seed.distinct())
+        seed_all = seed_all.unionByName(p)
+    seed = seed_all.distinct()
+
+    # Seed and step are computed BY Spark with full body semantics. When
+    # together they fit the driver (the broadcast-threshold principle),
+    # each is read with one collect and the closure kernel replaces
+    # O(log depth) cluster jobs; only larger inputs are pinned.
+    lmax = _local_fixpoint_max()
+    seed_tab = _collect_upto(seed, lmax)
+    step_tab = None if seed_tab is None else _collect_upto(step, lmax - len(seed_tab))
+    if step_tab is None:
+        seed, n_seed = _pin_count(seed)
+        step, n_step = _pin_count(step)
+    else:
+        n_seed, n_step = len(seed_tab), len(step_tab)
     if n_seed == 0:
         return {}
-    step, n_step = _pin_count(step)
-    if n_step == 0:
-        return {head_rel: seed}
     # tiny seed over a big step graph: seeded semi-naive is
     # output-proportional; squaring would densify S globally
     if n_seed * 20 < n_step:
         return None
+    if step_tab is not None:
+        # the executor half reads the seed frame undeduplicated: the
+        # kernel dedups within each carried group
+        adj = closure_adjacency(step_tab, k)
+        return {
+            head_rel: adjacency_closure(
+                seed.sparkSession, _table_rows(seed_tab), adj, updated,
+                seed.schema, seed_all,
+            )
+        }
+    if n_step == 0:
+        return {head_rel: seed}
 
     arity = len(hd)
     rcols = [f"c{i}" for i in range(arity)]
     upd_c = [rcols[i] for i in updated]
-
-    # Driver-local closure for small inputs (the broadcast-threshold
-    # principle): seed and step are already computed BY Spark with full
-    # body semantics; when both fit comfortably in the driver, the pure
-    # composition loop runs in Python in microseconds instead of
-    # O(log depth) cluster jobs. Falls back mid-way if the closure
-    # explodes past the result cap.
-    if n_seed + n_step <= _local_fixpoint_max():
-        local = _local_composition_closure(
-            seed, step, arity, updated, k, s_cols, t_cols
-        )
-        if local is not None:
-            return {head_rel: local}
 
     compose_seq = [0]
 
@@ -585,6 +601,7 @@ def _try_path_doubling(
         return left.join(F.broadcast(right), cond, "left_anti")
 
     for _ in range(1_000_000):  # depth/2^k sweeps; exits on empty delta
+        composed = compose_r(delta, sweep_step)
         if n_result <= 3_000_000:
             # broadcast null-safe anti-join + distinct ≡ EXCEPT
             # DISTINCT, but already-derived tuples are dropped MAP-SIDE
@@ -595,92 +612,166 @@ def _try_path_doubling(
             # the second hop's duplicated d1 aggregate and the wider
             # fused plan cost more than the saved broadcast build, so
             # it was REVERTED (OPTIMIZATION_r13.md).
-            new, n_new = _pin_count(
-                anti_result(compose_r(delta, sweep_step), result).distinct()
-            )
-            # _pin_count severs lineage (localCheckpoint), so the next
-            # sweep's delta⋈step join doesn't alias two frames sharing
-            # the step's lineage (ambiguous self-join)
-            if n_new == 0:
-                return {head_rel: result}
-            result = result.unionByName(new)
-            n_result += n_new
-            delta = new
+            new = anti_result(composed, result).distinct()
         else:
             # result too big to broadcast: EXCEPT DISTINCT (dedups the
-            # composition AND removes derived tuples in one shuffle);
-            # single-hop sweeps — there is no shared broadcast build to
-            # amortize on this branch
-            composed = compose_r(delta, sweep_step)
-            new, n_new = _pin_count(composed.subtract(result))
-            if n_new == 0:
-                return {head_rel: result}
-            result = result.unionByName(new)
-            n_result += n_new
-            delta = new
+            # composition AND removes derived tuples in one shuffle)
+            new = composed.subtract(result)
+        # _pin_count severs lineage (localCheckpoint), so the next
+        # sweep's delta⋈step join doesn't alias two frames sharing
+        # the step's lineage (ambiguous self-join)
+        new, n_new = _pin_count(new)
+        if n_new == 0:
+            return {head_rel: result}
+        result = result.unionByName(new)
+        n_result += n_new
+        delta = new
     raise CompileError(
         "path-doubling fixpoint did not stabilize within the sweep backstop"
     )
 
 
 def _local_fixpoint_max() -> int:
+    """Rows of seed plus step (or of an edge relation) the closure kernel
+    takes on the driver; 0 turns the kernel off."""
     import os
 
     return int(os.environ.get("SPARK_GRAFT_LOCAL_FIXPOINT_MAX", "100000"))
 
 
-def _norm_key(vals: tuple):
-    """Join-key normalization so Python dict equality matches Spark join
-    semantics: Spark treats NaN == NaN as true in joins; Python's NaN is
-    never equal to itself."""
-    out = []
-    for v in vals:
-        if isinstance(v, float) and v != v:
-            out.append("__nan__")
-        else:
-            out.append(v)
-    return tuple(out)
+class _NaNKey:
+    """NaN inside a normalized key. Spark joins and dedups NaN as equal
+    to NaN, while Python's NaN equals nothing, itself included, so every
+    NaN becomes this one object. It pickles by name, so executors that
+    unpickle an adjacency see the same object as their own keys."""
+
+    def __reduce__(self):
+        return "NAN_KEY"
 
 
-def _local_composition_closure(
-    seed: DataFrame, step: DataFrame, arity, updated, k, s_cols, t_cols
-) -> Optional[DataFrame]:
-    """Python semi-naive closure of seed ∘ step*. Returns None if the
-    result outgrows the cap (caller falls back to distributed doubling).
-    Null join keys never match (SQL inner-join semantics)."""
-    spark = seed.sparkSession
-    seed_rows = [tuple(r) for r in seed.collect()]
+NAN_KEY = _NaNKey()
+
+
+def _norm_key(vals: tuple) -> tuple:
+    """`vals` with every NaN replaced by NAN_KEY, so that Python tuple
+    equality matches Spark's join and distinct equality."""
+    if not any(isinstance(v, float) and v != v for v in vals):
+        return vals
+    return tuple(NAN_KEY if isinstance(v, float) and v != v else v for v in vals)
+
+
+def _collect_upto(df: DataFrame, n: int):
+    """`df` as an Arrow table read with one limit-pushdown collect, or
+    None when it holds more than `n` rows or `n` is not positive (no job
+    then). Arrow gives the driver and the kernel on the executors the
+    same Python values."""
+    if n <= 0:
+        return None
+    table = df.limit(n + 1).toArrow()
+    return table if table.num_rows <= n else None
+
+
+def _table_rows(table) -> List[tuple]:
+    return list(zip(*(c.to_pylist() for c in table.columns)))
+
+
+def closure_adjacency(table, k: int) -> Dict[tuple, list]:
+    """The kernel's adjacency of a step table whose first `k` columns
+    are the old state and next `k` the new one: normalized old state ->
+    normalized new states. A state with a null field never joins, so it
+    gets no entry; a null new state is still reached."""
     adj: Dict[tuple, list] = {}
-    for r in step.collect():
-        key_in = tuple(r[i] for i in range(k))
-        key_out = tuple(r[k + i] for i in range(k))
-        if any(v is None for v in key_in) or any(v is None for v in key_out):
-            continue  # null keys don't join
-        adj.setdefault(_norm_key(key_in), []).append(key_out)
+    for r in _table_rows(table):
+        if None not in r[:k]:
+            adj.setdefault(_norm_key(r[:k]), []).append(_norm_key(r[k:]))
+    return adj
 
-    result = set(seed_rows)
-    frontier = list(result)
-    while frontier:
-        new = []
-        for t in frontier:
-            # None-keyed states can't appear in adj (skipped above), so
-            # the lookup itself enforces null-never-joins
-            key = _norm_key(tuple(t[i] for i in updated))
-            for nxt in adj.get(key, ()):
-                nt = list(t)
-                for pos, val in zip(updated, nxt):
-                    nt[pos] = val
-                ntt = tuple(nt)
-                if ntt not in result:
-                    result.add(ntt)
-                    new.append(ntt)
-        if len(result) > LOCAL_FIXPOINT_RESULT_MAX:
-            return None
-        frontier = new
 
-    from inputlayer_spark.session import small_local_df
+def _closed_groups(rows, adj, updated, arity):
+    """Group seed rows by their normalized carried key, close each group
+    on its own and yield its rows as column lists. A group's visited set
+    holds updated keys only, its seeds plus step targets, so it never
+    outgrows seed plus step."""
+    carried = [i for i in range(arity) if i not in updated]
+    groups: dict = {}
+    for r in rows:
+        cvals = tuple(r[i] for i in carried)
+        groups.setdefault(_norm_key(cvals), (cvals, set()))[1].add(
+            _norm_key(tuple(r[i] for i in updated))
+        )
+    for cvals, seen in groups.values():
+        frontier = list(seen)
+        while frontier:
+            frontier = [
+                out
+                for key in frontier
+                for out in adj.get(key, ())
+                if out not in seen and not seen.add(out)
+            ]
+        cols: List[list] = [[v] * len(seen) for v in cvals]
+        for j, pos in enumerate(updated):
+            cols.insert(pos, [float("nan") if k[j] is NAN_KEY else k[j] for k in seen])
+        yield cols
 
-    return small_local_df(spark, result, seed.schema)
+
+def _close_batches(batches, adj, updated, schema):
+    """mapInArrow body of the kernel: this partition's seed groups,
+    closed one by one and streamed out in batches of about 64K rows."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    from inputlayer_spark.session import _arrow_column
+
+    arrow_schema = to_arrow_schema(schema)
+
+    def batch(cols):
+        return pa.RecordBatch.from_arrays(
+            [_arrow_column(c, f) for c, f in zip(cols, arrow_schema)],
+            schema=arrow_schema,
+        )
+
+    seeds = [r for b in batches for r in _table_rows(b)]
+    out: List[list] = [[] for _ in schema]
+    for cols in _closed_groups(seeds, adj, updated, len(schema)):
+        for o, c in zip(out, cols):
+            o.extend(c)
+        if len(out[0]) >= 65_536:
+            yield batch(out)
+            out = [[] for _ in schema]
+    yield batch(out)
+
+
+def adjacency_closure(
+    spark, seed_rows, adj, updated, schema, seed_df: Optional[DataFrame] = None
+) -> DataFrame:
+    """The closure kernel: `X ∘ S*` for seed rows X and step adjacency S
+    (`closure_adjacency`), where S rewrites the `updated` positions and
+    the other, carried positions ride along unchanged. Rows are distinct
+    under Spark equality (NaN equals NaN); a null state never joins.
+
+    The closure runs on the driver and comes back as a job-free leaf
+    while it stays within `session.LOCAL_LEAF_MAX_ROWS`. Past that it
+    stops and reruns on the executors: one mapInArrow over the seed
+    frame (`seed_df`, else a leaf of `seed_rows`) partitioned by the
+    carried columns, so result rows never pass through the driver,
+    pinned with one eager localCheckpoint."""
+    from inputlayer_spark import session
+
+    rows: List[tuple] = []
+    for cols in _closed_groups(seed_rows, adj, updated, len(schema)):
+        rows.extend(zip(*cols))
+        if len(rows) > session.LOCAL_LEAF_MAX_ROWS:
+            break
+    else:
+        return session.small_local_df(spark, rows, schema)
+    if seed_df is None:
+        seed_df = session.small_local_df(spark, seed_rows, schema)
+    carried = [c for i, c in enumerate(seed_df.columns) if i not in updated]
+    parts = seed_df.repartition(
+        spark.sparkContext.defaultParallelism if carried else 1, *carried
+    )
+    kernel = functools.partial(_close_batches, adj=adj, updated=updated, schema=schema)
+    return parts.mapInArrow(kernel, schema).localCheckpoint(eager=True)
 
 
 def _bcast_rows_cap(ncols: int) -> int:

@@ -38,8 +38,8 @@ for f in $CHANGED; do
         inputlayer_spark/parser.py|inputlayer_spark/ast_nodes.py) add tests/test_parser.py; add tests/test_engine.py ;;
         inputlayer_spark/compiler.py) add tests/test_compiler_sql_fastpath.py; add tests/test_builtin_parity.py; add tests/test_engine.py; add tests/test_statements.py; add tests/test_datalog_differential.py; add tests/test_join_order_property.py ;;
         inputlayer_spark/engine.py) add tests/test_engine.py; add tests/test_statements.py; add tests/test_datalog_differential.py; add tests/test_join_order_property.py; add tests/test_local_leaf.py; add tests/test_streaming.py; add tests/test_maintenance_fuzz.py; add tests/test_magic_sets.py; add tests/test_recursion_distributed.py ;;
-        inputlayer_spark/recursion.py) add tests/test_engine.py; add tests/test_magic_sets.py; add tests/test_recursion_distributed.py; add tests/test_streaming.py; add tests/test_local_leaf.py; add tests/test_maintenance_fuzz.py ;;
-        inputlayer_spark/magic_sets.py) add tests/test_engine.py; add tests/test_magic_sets.py; add tests/test_recursion_distributed.py; add tests/test_streaming.py; add tests/test_local_leaf.py ;;
+        inputlayer_spark/recursion.py) add tests/test_closure_kernel.py; add tests/test_engine.py; add tests/test_magic_sets.py; add tests/test_recursion_distributed.py; add tests/test_streaming.py; add tests/test_local_leaf.py; add tests/test_maintenance_fuzz.py ;;
+        inputlayer_spark/magic_sets.py) add tests/test_closure_kernel.py; add tests/test_engine.py; add tests/test_magic_sets.py; add tests/test_recursion_distributed.py; add tests/test_streaming.py; add tests/test_local_leaf.py ;;
         inputlayer_spark/subplan.py) add tests/test_subplan.py ;;
         inputlayer_spark/server.py|inputlayer_spark/auth.py|inputlayer_spark/gui.py|inputlayer_spark/front.py) add tests/test_server_sources.py; add tests/test_gui.py; add tests/test_front.py; add tests/test_config.py; add tests/test_concurrency.py; add tests/test_js_sdk.py; add tests/test_repl.py ;;
         inputlayer_spark/repl.py) add tests/test_repl.py ;;

@@ -9,10 +9,12 @@ so these tests exercise the code that actually runs at 100 TB:
   (magic_sets.seeded_tc_closure),
 * the general semi-naive fixpoint (rules path doubling can't express).
 
-Each test proves the local path is NOT taken by replacing
-`_local_composition_closure` with a bomb (resolved from module globals at
-call time, so monkeypatching is effective), and checks results against a
-pure-Python oracle computed inside the test.
+Each test proves the local path is NOT taken by replacing the closure
+kernel `adjacency_closure` with a bomb (resolved from module globals at
+call time, so monkeypatching is effective; it is the one entry point of
+both the driver and the mapInArrow branch, for full closures and bound
+reads alike), and checks results against a pure-Python oracle computed
+inside the test.
 """
 
 import numpy as np
@@ -29,10 +31,10 @@ def dist_engine(spark, monkeypatch):
 
     def _bomb(*a, **k):
         raise AssertionError(
-            "driver-local closure ran despite SPARK_GRAFT_LOCAL_FIXPOINT_MAX=0"
+            "closure kernel ran despite SPARK_GRAFT_LOCAL_FIXPOINT_MAX=0"
         )
 
-    monkeypatch.setattr(recursion, "_local_composition_closure", _bomb)
+    monkeypatch.setattr(recursion, "adjacency_closure", _bomb)
     return IQLEngine(spark)
 
 

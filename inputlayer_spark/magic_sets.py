@@ -180,16 +180,13 @@ def tc_adjacency(edge_df, forward: bool) -> Optional[Dict]:
     read runs the kernel with no Spark job. None when the relation holds
     more than `_local_fixpoint_max()` rows; the distributed path runs
     then."""
-    from inputlayer_spark.recursion import (
-        _collect_upto,
-        _local_fixpoint_max,
-        closure_adjacency,
-    )
+    from inputlayer_spark import recursion
 
     cols = edge_df.columns
     s, t = (cols[0], cols[1]) if forward else (cols[1], cols[0])
-    table = _collect_upto(edge_df.select(edge_df[s], edge_df[t]), _local_fixpoint_max())
-    return None if table is None else closure_adjacency(table, 1)
+    edges = edge_df.select(edge_df[s], edge_df[t])
+    table = recursion._collect_upto(edges, recursion._local_fixpoint_max())
+    return None if table is None else recursion.closure_adjacency(table, 1)
 
 
 def seeded_tc_closure(
@@ -203,9 +200,10 @@ def seeded_tc_closure(
 
     With `adjacency` (from `tc_adjacency`: the edge list fits the driver)
     it runs the closure kernel (`recursion.adjacency_closure`) from the
-    one-node seed, the broadcast-threshold principle: on the driver,
-    answered as a job-free leaf while the result stays small, else in
-    one mapInArrow on the executors. Otherwise it runs blocked path
+    one-node seed on the driver, the broadcast-threshold principle. The
+    answer is a driver-built leaf, pinned when it is large: the seed is
+    one carried group, so a rerun on the executors would only repeat the
+    BFS the driver has finished. Otherwise it runs blocked path
     doubling: square the step relation while it stays under
     `growth_cap`x the edge count (on a path-like graph S^(<=2^k) grows
     linearly, so squaring is cheap and each BFS job then advances up to
@@ -219,8 +217,6 @@ def seeded_tc_closure(
     """
     from pyspark.sql import functions as F
 
-    from pyspark.sql import types as T
-
     cols = edge_df.columns
     e_raw = edge_df.select(
         edge_df[cols[0]].alias("s") if forward else edge_df[cols[1]].alias("s"),
@@ -232,24 +228,17 @@ def seeded_tc_closure(
     ).filter(F.lit(False))
 
     if adjacency is not None:
-        from inputlayer_spark.recursion import NAN_KEY, _norm_key, adjacency_closure
+        from inputlayer_spark.recursion import _norm_key, adjacency_closure
 
-        seed_out = seed_value
-        if isinstance(seed_out, int) and isinstance(
-            e_raw.schema["s"].dataType, T.DoubleType
-        ):
-            seed_out = float(seed_out)
         # the one-node seed (seed, t) for each edge out of it: position 0
-        # is carried, the kernel walks position 1
-        seeds = [
-            (seed_out, float("nan") if t is NAN_KEY else t)
-            for (t,) in adjacency.get(_norm_key((seed_value,)), ())
-        ]
+        # is carried, the kernel walks position 1; Arrow types the seed
+        # value by the edge column (an int bound over double edges)
+        out_of_seed = adjacency.get(_norm_key((seed_value,)), ())
+        seeds = [(seed_value, t) for (t,) in out_of_seed]
         return adjacency_closure(spark, seeds, adjacency, [1], empty.schema)
 
-    from inputlayer_spark.recursion import _pin_count
-
-    e, n_e = _pin_count(e_raw.distinct())
+    e = e_raw.distinct().localCheckpoint(eager=True)
+    n_e = e.count()
     seed_lit = F.lit(seed_value).cast(e.schema["s"].dataType)
     if n_e == 0:
         return empty
@@ -262,7 +251,10 @@ def seeded_tc_closure(
 
     step, n_step = e, n_e
     for _ in range(16):
-        widened, n_w = _pin_count(step.unionByName(compose(step)).distinct())
+        widened = step.unionByName(compose(step)).distinct().localCheckpoint(
+            eager=True
+        )
+        n_w = widened.count()
         if n_w == n_step:
             # closure reached outright — the seed filter is a lookup
             return widened.filter(widened["s"] == seed_lit).select(
@@ -289,8 +281,8 @@ def seeded_tc_closure(
         )
         if visited is not None:
             hop = hop.join(visited, on="s", how="left_anti")
-        hop, n_hop = _pin_count(hop)
-        if n_hop == 0:
+        hop = hop.localCheckpoint(eager=True)
+        if hop.count() == 0:
             break
         visited = hop if visited is None else visited.unionByName(hop)
         frontier = hop

@@ -12,7 +12,6 @@ local[32] localCheckpoint suffices.
 
 from __future__ import annotations
 
-import functools
 from typing import Callable, Dict, List, Optional, Sequence, Set, Tuple
 
 from pyspark.sql import DataFrame
@@ -331,12 +330,12 @@ def _try_path_doubling(
 
     Where it runs: seed and step are each read with one limit-pushdown
     collect first. When together they fit `_local_fixpoint_max()` the
-    closure kernel (`adjacency_closure`) takes over, with no pin job: on
-    the driver while the result stays a small leaf, else in one
-    mapInArrow over the seed grouped by carried columns, which ships the
-    step's adjacency to the executors instead of every result row through
-    the driver. Only larger inputs pin seed and step and run the
-    distributed doubling below.
+    closure kernel (`adjacency_closure`) takes over: on the driver, which
+    answers with a leaf, or, when the result outgrows the leaf cap with
+    carried groups still open, in one mapInArrow over the seed grouped
+    by carried columns, which ships the step's adjacency to the
+    executors instead of every result row through the driver. Larger
+    inputs run the distributed doubling below.
 
     Returns None when the shape doesn't apply (multiple/mutual recursive
     rules, constants or repeated vars in the recursive atom, filters over
@@ -445,39 +444,35 @@ def _try_path_doubling(
     if not seed_parts:
         return {}  # no seed → empty fixpoint; caller treats missing as empty
 
-    seed_all = seed_parts[0]
+    seed = seed_parts[0]
     for p in seed_parts[1:]:
-        seed_all = seed_all.unionByName(p)
-    seed = seed_all.distinct()
+        seed = seed.unionByName(p)
 
     # Seed and step are computed BY Spark with full body semantics. When
     # together they fit the driver (the broadcast-threshold principle),
     # each is read with one collect and the closure kernel replaces
-    # O(log depth) cluster jobs; only larger inputs are pinned.
+    # O(log depth) cluster jobs. Both are marked for a lazy pin first, so
+    # the collect that reads a frame also materializes it and the counts
+    # of the distributed path reuse those blocks instead of recomputing.
+    seed = seed.distinct().localCheckpoint(eager=False)
+    step = step.localCheckpoint(eager=False)
     lmax = _local_fixpoint_max()
     seed_tab = _collect_upto(seed, lmax)
-    step_tab = None if seed_tab is None else _collect_upto(step, lmax - len(seed_tab))
-    if step_tab is None:
-        seed, n_seed = _pin_count(seed)
-        step, n_step = _pin_count(step)
-    else:
-        n_seed, n_step = len(seed_tab), len(step_tab)
+    n_seed = seed.count() if seed_tab is None else len(seed_tab)
     if n_seed == 0:
         return {}
+    step_tab = None if seed_tab is None else _collect_upto(step, lmax - n_seed)
+    n_step = step.count() if step_tab is None else len(step_tab)
     # tiny seed over a big step graph: seeded semi-naive is
     # output-proportional; squaring would densify S globally
     if n_seed * 20 < n_step:
         return None
     if step_tab is not None:
-        # the executor half reads the seed frame undeduplicated: the
-        # kernel dedups within each carried group
-        adj = closure_adjacency(step_tab, k)
-        return {
-            head_rel: adjacency_closure(
-                seed.sparkSession, _table_rows(seed_tab), adj, updated,
-                seed.schema, seed_all,
-            )
-        }
+        closure = adjacency_closure(
+            seed.sparkSession, _table_rows(seed_tab), closure_adjacency(step_tab, k),
+            updated, seed.schema, seed,
+        )
+        return {head_rel: closure}
     if n_step == 0:
         return {head_rel: seed}
 
@@ -601,7 +596,6 @@ def _try_path_doubling(
         return left.join(F.broadcast(right), cond, "left_anti")
 
     for _ in range(1_000_000):  # depth/2^k sweeps; exits on empty delta
-        composed = compose_r(delta, sweep_step)
         if n_result <= 3_000_000:
             # broadcast null-safe anti-join + distinct ≡ EXCEPT
             # DISTINCT, but already-derived tuples are dropped MAP-SIDE
@@ -612,20 +606,29 @@ def _try_path_doubling(
             # the second hop's duplicated d1 aggregate and the wider
             # fused plan cost more than the saved broadcast build, so
             # it was REVERTED (OPTIMIZATION_r13.md).
-            new = anti_result(composed, result).distinct()
+            new, n_new = _pin_count(
+                anti_result(compose_r(delta, sweep_step), result).distinct()
+            )
+            # _pin_count severs lineage (localCheckpoint), so the next
+            # sweep's delta⋈step join doesn't alias two frames sharing
+            # the step's lineage (ambiguous self-join)
+            if n_new == 0:
+                return {head_rel: result}
+            result = result.unionByName(new)
+            n_result += n_new
+            delta = new
         else:
             # result too big to broadcast: EXCEPT DISTINCT (dedups the
-            # composition AND removes derived tuples in one shuffle)
-            new = composed.subtract(result)
-        # _pin_count severs lineage (localCheckpoint), so the next
-        # sweep's delta⋈step join doesn't alias two frames sharing
-        # the step's lineage (ambiguous self-join)
-        new, n_new = _pin_count(new)
-        if n_new == 0:
-            return {head_rel: result}
-        result = result.unionByName(new)
-        n_result += n_new
-        delta = new
+            # composition AND removes derived tuples in one shuffle);
+            # single-hop sweeps — there is no shared broadcast build to
+            # amortize on this branch
+            composed = compose_r(delta, sweep_step)
+            new, n_new = _pin_count(composed.subtract(result))
+            if n_new == 0:
+                return {head_rel: result}
+            result = result.unionByName(new)
+            n_result += n_new
+            delta = new
     raise CompileError(
         "path-doubling fixpoint did not stabilize within the sweep backstop"
     )
@@ -689,9 +692,9 @@ def closure_adjacency(table, k: int) -> Dict[tuple, list]:
 
 def _closed_groups(rows, adj, updated, arity):
     """Group seed rows by their normalized carried key, close each group
-    on its own and yield its rows as column lists. A group's visited set
-    holds updated keys only, its seeds plus step targets, so it never
-    outgrows seed plus step."""
+    on its own and yield its rows as column lists, with the number of
+    groups still open. A group's visited set holds updated keys only,
+    its seeds plus step targets, so it never outgrows seed plus step."""
     carried = [i for i in range(arity) if i not in updated]
     groups: dict = {}
     for r in rows:
@@ -699,7 +702,7 @@ def _closed_groups(rows, adj, updated, arity):
         groups.setdefault(_norm_key(cvals), (cvals, set()))[1].add(
             _norm_key(tuple(r[i] for i in updated))
         )
-    for cvals, seen in groups.values():
+    for n_open, (cvals, seen) in zip(range(len(groups) - 1, -1, -1), groups.values()):
         frontier = list(seen)
         while frontier:
             frontier = [
@@ -711,34 +714,7 @@ def _closed_groups(rows, adj, updated, arity):
         cols: List[list] = [[v] * len(seen) for v in cvals]
         for j, pos in enumerate(updated):
             cols.insert(pos, [float("nan") if k[j] is NAN_KEY else k[j] for k in seen])
-        yield cols
-
-
-def _close_batches(batches, adj, updated, schema):
-    """mapInArrow body of the kernel: this partition's seed groups,
-    closed one by one and streamed out in batches of about 64K rows."""
-    import pyarrow as pa
-    from pyspark.sql.pandas.types import to_arrow_schema
-
-    from inputlayer_spark.session import _arrow_column
-
-    arrow_schema = to_arrow_schema(schema)
-
-    def batch(cols):
-        return pa.RecordBatch.from_arrays(
-            [_arrow_column(c, f) for c, f in zip(cols, arrow_schema)],
-            schema=arrow_schema,
-        )
-
-    seeds = [r for b in batches for r in _table_rows(b)]
-    out: List[list] = [[] for _ in schema]
-    for cols in _closed_groups(seeds, adj, updated, len(schema)):
-        for o, c in zip(out, cols):
-            o.extend(c)
-        if len(out[0]) >= 65_536:
-            yield batch(out)
-            out = [[] for _ in schema]
-    yield batch(out)
+        yield cols, n_open
 
 
 def adjacency_closure(
@@ -749,29 +725,42 @@ def adjacency_closure(
     the other, carried positions ride along unchanged. Rows are distinct
     under Spark equality (NaN equals NaN); a null state never joins.
 
-    The closure runs on the driver and comes back as a job-free leaf
-    while it stays within `session.LOCAL_LEAF_MAX_ROWS`. Past that it
-    stops and reruns on the executors: one mapInArrow over the seed
-    frame (`seed_df`, else a leaf of `seed_rows`) partitioned by the
-    carried columns, so result rows never pass through the driver,
-    pinned with one eager localCheckpoint."""
+    The driver closes one carried group after another. When all are
+    closed the rows come back as a driver-built leaf: job-free within
+    `session.LOCAL_LEAF_MAX_ROWS`, pinned above it. When the rows pass
+    that cap with groups still open, it stops and reruns on the
+    executors: one mapInArrow over the seed frame `seed_df` partitioned
+    by the carried columns, pinned with one eager localCheckpoint, so
+    result rows never pass through the driver. A seed of one group (a
+    bound read, a carried-less closure) never reruns: the driver has
+    already done the whole closure, so `seed_df` may be left out."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
     from inputlayer_spark import session
 
     rows: List[tuple] = []
-    for cols in _closed_groups(seed_rows, adj, updated, len(schema)):
+    for cols, n_open in _closed_groups(seed_rows, adj, updated, len(schema)):
         rows.extend(zip(*cols))
-        if len(rows) > session.LOCAL_LEAF_MAX_ROWS:
+        if len(rows) > session.LOCAL_LEAF_MAX_ROWS and n_open:
             break
     else:
         return session.small_local_df(spark, rows, schema)
-    if seed_df is None:
-        seed_df = session.small_local_df(spark, seed_rows, schema)
+    arrow_schema = to_arrow_schema(schema)
+
+    def close_partition(batches):
+        # the values come from Arrow and go back to the same types
+        seeds = [r for b in batches for r in _table_rows(b)]
+        out: List[list] = [[] for _ in schema]
+        for cols, _ in _closed_groups(seeds, adj, updated, len(schema)):
+            for o, c in zip(out, cols):
+                o.extend(c)
+        arrays = [pa.array(c, type=f.type) for c, f in zip(out, arrow_schema)]
+        yield pa.RecordBatch.from_arrays(arrays, schema=arrow_schema)
+
     carried = [c for i, c in enumerate(seed_df.columns) if i not in updated]
-    parts = seed_df.repartition(
-        spark.sparkContext.defaultParallelism if carried else 1, *carried
-    )
-    kernel = functools.partial(_close_batches, adj=adj, updated=updated, schema=schema)
-    return parts.mapInArrow(kernel, schema).localCheckpoint(eager=True)
+    parts = seed_df.repartition(spark.sparkContext.defaultParallelism, *carried)
+    return parts.mapInArrow(close_partition, schema).localCheckpoint(eager=True)
 
 
 def _bcast_rows_cap(ncols: int) -> int:
